@@ -16,39 +16,32 @@ physical strategies:
 
 Both strategies emit identical rows (asserted in tests and by the driver's
 oracle, which is strategy-independent).
+
+Marker rows: the fused stage also emits one row per over-cap document
+(``candidate_type = OVERFLOW_TYPE``) and per document whose render or parse
+raised (``mentions_op.PARSE_ERROR_TYPE``), only url/split set.
+``extract_candidates_auto`` routes the first through the join path, drops
+both from its result and, under ``probe="eager"``, warns on the second;
+direct callers of ``extract_candidates_fused`` filter them themselves.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterator, List, Optional, Sequence
+import warnings
+from typing import Callable, List, Optional, Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from .mentions_op import MENTION_COLUMNS, MentionSpec
+from .mentions_op import (MENTION_COLUMNS, MENTION_SCHEMA, PARSE_ERROR_TYPE,
+                          MentionSpec, corpus_docs, map_documents)
 
-def _mention_schema_fields():
-    from .mentions_op import MENTION_SCHEMA
-
-    return [(f.name, f.dataType) for f in MENTION_SCHEMA.fields]
-
-
-def candidate_schema() -> T.StructType:
-    fields = []
-    for prefix in ("a_", "b_"):
-        for n, t in _mention_schema_fields():
-            fields.append(T.StructField(prefix + n, t, True))
-    fields += [
-        T.StructField("candidate_type", T.StringType(), True),
-        T.StructField("split", T.IntegerType(), True),
-        T.StructField("candidate_sid", T.StringType(), True),
-        T.StructField("url", T.StringType(), True),
-    ]
-    return T.StructType(fields)
-
-
-CANDIDATE_SCHEMA = candidate_schema()
+CANDIDATE_SCHEMA = T.StructType(
+    [T.StructField(p + f.name, f.dataType, True)
+     for p in ("a_", "b_") for f in MENTION_SCHEMA.fields]
+    + [T.StructField(n, t, True) for n, t in (
+        ("candidate_type", T.StringType()), ("split", T.IntegerType()),
+        ("candidate_sid", T.StringType()), ("url", T.StringType()))])
 CANDIDATE_COLUMNS = [f.name for f in CANDIDATE_SCHEMA.fields]
 
 # slim output: only what labeling + triple materialization consume — cuts
@@ -154,62 +147,33 @@ def extract_candidates_fused(
     ``max_mentions_per_doc`` would make this task quadratic — its product is
     NOT computed here; instead one marker row with
     ``candidate_type = OVERFLOW_TYPE`` (url/split set, mention columns null)
-    is emitted so the overflow is detectable. ``extract_candidates_auto``
-    consumes the markers and routes those documents through the relational
-    join path (salted/AQE — built for skew); callers using this function
-    directly must filter or route the markers themselves.
+    is emitted so the overflow is detectable. A document that fails to
+    render or parse yields one ``PARSE_ERROR_TYPE`` marker of the same
+    shape (mentions_op.map_documents). ``extract_candidates_auto`` consumes
+    both markers; callers using this function directly must filter or route
+    them themselves.
     """
-    from .corpus import render_page, url_of
-    from .lingual import SimpleParser
-    from .parse import ParseConfig, parse_document
+    cols = SLIM_COLUMNS if slim else CANDIDATE_COLUMNS
 
-    cfg = parse_cfg or ParseConfig()
-    render = render or (lambda i, text: render_page(int(i), text))
-    spec_list = list(specs)
-    from .mentions_op import _fast_unigram_regex, iter_sentence_mentions
+    def marker(url: str, kind: str) -> dict:
+        return dict(dict.fromkeys(cols), candidate_type=kind, url=url,
+                    split=split)
 
-    fast_list = [_fast_unigram_regex(s) for s in spec_list]
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lp = cfg.make_lingual_parser()
-        for pdf in batches:
-            out: List[dict] = []
-            for i, text in zip(pdf["doc_id"], pdf["text"]):
-                url = url_of(int(i))
-                try:
-                    rows = parse_document(
-                        url, render(i, text), cfg, lp,
-                        emit_types={"sentence"},
-                    )
-                except Exception:
-                    continue
-                by_type: dict = {}
-                n_mentions = 0
-                for row in rows:
-                    for m in iter_sentence_mentions(row, spec_list, fast_list):
-                        by_type.setdefault(m["mention_type"], []).append(m)
-                        n_mentions += 1
-                if n_mentions > max_mentions_per_doc:
-                    # skew overflow: emit the marker row (url only) so the
-                    # doc is detectable and routable via the join path
-                    # (extract_candidates_auto); never silently dropped
-                    marker = dict.fromkeys(
-                        SLIM_COLUMNS if slim else CANDIDATE_COLUMNS)
-                    marker["candidate_type"] = OVERFLOW_TYPE
-                    marker["url"] = url
-                    marker["split"] = split
-                    out.append(marker)
-                    continue
-                _doc_candidates(
-                    by_type, candidate_type, type_a, type_b, throttler,
-                    self_relations, nested_relations, symmetric_relations,
-                    split, out, slim=slim,
-                )
-            cols = SLIM_COLUMNS if slim else CANDIDATE_COLUMNS
-            yield pd.DataFrame(out, columns=cols)
+    def emit(url: str, by_type: dict, out: List[dict]) -> None:
+        if sum(map(len, by_type.values())) > max_mentions_per_doc:
+            # skew overflow: the marker makes the doc routable via the join
+            # path (extract_candidates_auto); never silently dropped
+            out.append(marker(url, OVERFLOW_TYPE))
+            return
+        _doc_candidates(
+            by_type, candidate_type, type_a, type_b, throttler,
+            self_relations, nested_relations, symmetric_relations,
+            split, out, slim=slim,
+        )
 
     schema = CANDIDATE_SCHEMA_SLIM if slim else CANDIDATE_SCHEMA
-    return docs.select("doc_id", "text").mapInPandas(fn, schema)
+    return map_documents(docs, corpus_docs(render), specs, parse_cfg, schema,
+                         emit, marker)
 
 
 def extract_candidates_auto(
@@ -261,13 +225,20 @@ def extract_candidates_auto(
     churn on every downstream action. Rows are identical either way
     (overflow docs still route through the join path when present); the
     only change is that query CONSTRUCTION becomes eager, which is why
-    the default stays "lazy" for library callers.
+    the default stays "lazy" for library callers. The same job counts
+    ``PARSE_ERROR_TYPE`` markers and warns if any document failed (lazy
+    mode cannot; the workers log each url either way). Marker rows of
+    both types are never returned.
     """
     from pyspark.sql import functions as F
 
     from .candidates_op import extract_candidates
     from .mentions_op import extract_mentions_fused
 
+    if probe not in ("lazy", "eager"):
+        raise ValueError(f"unknown probe mode {probe!r}: 'lazy' or 'eager'")
+    if probe == "eager" and not persist:
+        raise ValueError('probe="eager" requires persist=True')
     fused = extract_candidates_fused(
         docs, specs, candidate_type, type_a, type_b,
         throttler=py_throttler, self_relations=self_relations,
@@ -276,27 +247,35 @@ def extract_candidates_auto(
         render=render, parse_cfg=parse_cfg,
         max_mentions_per_doc=max_mentions_per_doc, slim=slim,
     )
-    if probe not in ("lazy", "eager"):
-        raise ValueError(f"unknown probe mode {probe!r}: 'lazy' or 'eager'")
     if persist:
         fused = fused.persist()
-    normal = fused.where(F.col("candidate_type") != OVERFLOW_TYPE)
-    if probe == "eager" and persist:
+    kind = F.col("candidate_type")
+    cols = SLIM_COLUMNS if slim else CANDIDATE_COLUMNS
+    normal = fused.where(~kind.isin(OVERFLOW_TYPE, PARSE_ERROR_TYPE)) \
+        .select(*cols)
+    if probe == "eager":
         # materializes the (persisted) fused frame now; the overflow branch
         # below would trigger the identical job at first action, so this
         # moves — not adds — a job, and lets the no-overflow case skip the
-        # empty join-path subtree entirely. count(), NOT isEmpty(): take(1)
-        # escalates over partition subsets (1 -> 4 -> 20 -> all) and would
-        # run the Python parse in sequential low-parallelism waves when no
-        # marker exists; count() fills the cache in one full-width job.
-        n_over = fused.where(
-            F.col("candidate_type") == OVERFLOW_TYPE).count()
+        # empty join-path subtree entirely. One full-width agg, NOT
+        # isEmpty(): take(1) escalates over partition subsets (1 -> 4 -> 20
+        # -> all) and would run the Python parse in sequential low-
+        # parallelism waves when no marker exists; the agg fills the cache
+        # in one job and counts both marker types.
+        n_over, n_failed = fused.agg(
+            F.count(F.when(kind == OVERFLOW_TYPE, 1)),
+            F.count(F.when(kind == PARSE_ERROR_TYPE, 1)),
+        ).first()
+        if n_failed:
+            warnings.warn(
+                f"{n_failed} document(s) failed to parse and have no "
+                f"candidates; the workers logged each url",
+                UserWarning, stacklevel=2)
         if n_over == 0:
-            cols = SLIM_COLUMNS if slim else CANDIDATE_COLUMNS
-            return normal.select(*cols)
+            return normal
     # marker urls -> doc ids (url = corpus.url_of(doc_id) = ...d<id>)
     over_ids = (
-        fused.where(F.col("candidate_type") == OVERFLOW_TYPE)
+        fused.where(kind == OVERFLOW_TYPE)
         .select(
             F.regexp_extract("url", r"d(\d+)$", 1).cast("long").alias("doc_id")
         )
@@ -317,5 +296,4 @@ def extract_candidates_auto(
         symmetric_relations=symmetric_relations, split=split,
         salt_buckets=salt_buckets,
     )
-    cols = SLIM_COLUMNS if slim else CANDIDATE_COLUMNS
-    return normal.select(*cols).unionByName(cands_o.select(*cols))
+    return normal.unionByName(cands_o.select(*cols))

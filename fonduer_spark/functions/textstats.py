@@ -156,20 +156,6 @@ def fingerprint(text: Column) -> Column:
     return F.md5(F.regexp_replace(F.trim(F.lower(text)), r"\s+", " "))
 
 
-def rolling_fingerprints(text: Column, window: int = 8) -> Column:
-    """Winnowing-style fingerprint set: md5 of each token w-gram, keep the
-    per-position minimum over a window of shingle hashes (array column)."""
-    toks = F.split(F.trim(F.lower(text)), r"\s+")
-    grams = F.when(
-        F.size(toks) >= window,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - window),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i + 1, window))),
-        ),
-    ).otherwise(F.array(F.md5(F.concat_ws(" ", toks))))
-    return F.array_distinct(grams)
-
-
 # ---------------------------------------------------------------------------
 # PII scrubbing (training-data curation): mask emails and long digit runs
 # with regex families chosen to behave identically under Java regex (Spark)

@@ -12,8 +12,9 @@ then never touches the sentences table again).
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass
-from typing import Iterator, List, Optional, Sequence
+from typing import Dict, Iterator, List, Optional, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -21,7 +22,10 @@ from pyspark.sql import types as T
 
 from .matchers import Matcher
 from .mention_spaces import MentionSpace
+from .parse import ParseConfig, decode_html, parse_document
 from .spans import ImplicitSpan, SentenceView, Span
+
+log = logging.getLogger(__name__)
 
 _S, _I = T.StringType(), T.IntegerType()
 _AS = T.ArrayType(T.StringType())
@@ -105,9 +109,11 @@ def _fast_unigram_regex(spec: MentionSpec):
 
 
 def iter_sentence_mentions(row: dict, spec_list, fast_list):
-    """Yield mention row-dicts for one sentence row (shared by the modular,
-    fused, streaming, and serving paths — single source of truth for the
-    mention row shape and stable_id math)."""
+    """Yield mention row-dicts for one sentence row — the single source of
+    truth for the mention row shape and stable_id math. Called per sentence
+    by the modular ``extract_mentions`` and by ``doc_mentions``, the
+    per-document kernel behind the fused, streaming and serving paths.
+    Never yields marker rows: those come from ``map_documents``."""
     offs = row["char_offsets"]
     abs0 = (row["abs_char_offsets"][0] - offs[0]) if len(offs) else 0
     url = row["url"]
@@ -302,14 +308,59 @@ def extract_mentions_fused(
     boundary; only mention rows do (~25x fewer).
 
     ``docs``: (doc_id, text) frame; ``render(doc_id, text) -> html`` defaults
-    to the synthetic corpus renderer.
+    to the synthetic corpus renderer. A document that fails to render or
+    parse yields one ``PARSE_ERROR_TYPE`` marker row (see map_documents).
     """
-    from .corpus import render_page, url_of
-    from .lingual import SimpleParser
-    from .parse import ParseConfig, parse_document
+    return fused_mentions(docs, corpus_docs(render), specs, parse_cfg)
 
-    cfg = parse_cfg or ParseConfig()
-    render = render or (lambda i, text: render_page(int(i), text))
+
+# mention_type / candidate_type of the marker row a fused stage emits for a
+# document whose render or parse raised: url (and split) set, the rest null
+PARSE_ERROR_TYPE = "_parse_error"
+
+
+def doc_mentions(url: str, html: str, cfg, lp, specs, fast) -> Dict[str, List[dict]]:
+    """The per-document kernel: parse one page and extract its mentions,
+    grouped by mention type in generation order. Raises when the parse
+    fails — the caller owns the failure policy (the fused stages emit a
+    marker row, serving raises to its caller). ``fast`` is
+    ``[_fast_unigram_regex(s) for s in specs]``, built once by the caller."""
+    by_type: Dict[str, List[dict]] = {}
+    for row in parse_document(url, html, cfg, lp, emit_types={"sentence"}):
+        for m in iter_sentence_mentions(row, specs, fast):
+            by_type.setdefault(m["mention_type"], []).append(m)
+    return by_type
+
+
+# A source reads documents off two columns of a frame:
+# (column names, url_fn(a, b), html_fn(a, b)).
+def corpus_docs(render=None) -> tuple:
+    """Source over (doc_id, text): url from the id, html from
+    ``render(doc_id, text)`` (default: the synthetic corpus renderer)."""
+    from .corpus import render_page, url_of
+
+    return (("doc_id", "text"), lambda i, _text: url_of(int(i)),
+            render or (lambda i, text: render_page(int(i), text)))
+
+
+# source over web_pages (url, html bytes)
+WEB_PAGES = (("url", "html"), lambda url, _html: url,
+             lambda _url, html: decode_html(html))
+
+
+def map_documents(frame: DataFrame, source: tuple, specs, cfg,
+                  schema: T.StructType, emit, marker) -> DataFrame:
+    """The one batch loop behind every fused entry point: per document of
+    ``frame`` run ``doc_mentions`` and pass the result to
+    ``emit(url, by_type, out)``, which appends output rows to ``out``.
+
+    This is the only place a parse failure is caught. The document becomes
+    one ``marker(url, PARSE_ERROR_TYPE)`` row plus one worker WARNING naming
+    the url — a record for lineage instead of a silent drop (the reference
+    logs and skips, parser.py:236-264)."""
+    cols, url_fn, html_fn = source
+    names = schema.fieldNames()
+    cfg = cfg or ParseConfig()
     spec_list = list(specs)
     fast_list = [_fast_unigram_regex(s) for s in spec_list]
 
@@ -317,18 +368,32 @@ def extract_mentions_fused(
         lp = cfg.make_lingual_parser()
         for pdf in batches:
             out: List[dict] = []
-            for i, text in zip(pdf["doc_id"], pdf["text"]):
-                url = url_of(int(i))
+            for a, b in zip(pdf[cols[0]], pdf[cols[1]]):
+                url = url_fn(a, b)
                 try:
-                    rows = parse_document(
-                        url, render(i, text), cfg, lp,
-                        emit_types={"sentence"},
-                    )
+                    by_type = doc_mentions(url, html_fn(a, b), cfg, lp,
+                                           spec_list, fast_list)
                 except Exception:
-                    continue  # per-doc isolation (parser.py:236-264)
-                for row in rows:
-                    out.extend(
-                        iter_sentence_mentions(row, spec_list, fast_list))
-            yield pd.DataFrame(out, columns=MENTION_COLUMNS)
+                    log.warning("document %s failed to parse; emitting a %s "
+                                "marker row", url, PARSE_ERROR_TYPE,
+                                exc_info=True)
+                    out.append(marker(url, PARSE_ERROR_TYPE))
+                    continue
+                emit(url, by_type, out)
+            yield pd.DataFrame(out, columns=names)
 
-    return docs.select("doc_id", "text").mapInPandas(fn, MENTION_SCHEMA)
+    return frame.select(*cols).mapInPandas(fn, schema)
+
+
+def fused_mentions(frame: DataFrame, source: tuple, specs, cfg) -> DataFrame:
+    """Flat mention rows (MENTION_SCHEMA) of every document of ``frame``."""
+
+    def marker(url: str, kind: str) -> dict:
+        return dict(dict.fromkeys(MENTION_COLUMNS), mention_type=kind, url=url)
+
+    def emit(_url: str, by_type: Dict[str, List[dict]], out: List[dict]) -> None:
+        for ms in by_type.values():
+            out.extend(ms)
+
+    return map_documents(frame, source, specs, cfg, MENTION_SCHEMA, emit,
+                         marker)

@@ -628,6 +628,13 @@ def parse_document(
 # ---------------------------------------------------------------------------
 # Spark stage
 # ---------------------------------------------------------------------------
+def decode_html(html):
+    """web_pages html (binary) -> str; str passes through."""
+    if isinstance(html, (bytes, bytearray, memoryview)):
+        return bytes(html).decode("utf-8", errors="replace")
+    return html
+
+
 def parse_webpages(pages: DataFrame, cfg: Optional[ParseConfig] = None) -> DataFrame:
     """web_pages (url, html, ...) -> unified context rows DataFrame.
 
@@ -641,10 +648,8 @@ def parse_webpages(pages: DataFrame, cfg: Optional[ParseConfig] = None) -> DataF
         for pdf in batches:
             out: List[Dict[str, Any]] = []
             for url, html in zip(pdf["url"], pdf["html"]):
-                if isinstance(html, (bytes, bytearray, memoryview)):
-                    html = bytes(html).decode("utf-8", errors="replace")
                 try:
-                    out.extend(parse_document(url, html, cfg, lp))
+                    out.extend(parse_document(url, decode_html(html), cfg, lp))
                 except Exception:
                     out.append(_row(
                         url, stable_id=f"{url}::parse_error",

@@ -10,6 +10,7 @@ corpus is reconstructible in pure SQL (corpus.gold_triples_sql).
 
 from __future__ import annotations
 
+from collections.abc import Mapping
 from typing import Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,8 +29,8 @@ PART_RGX = r"PN\d{3}[A-C]"
 TEMP_RGX = r"-?\d{1,3}"
 
 
-class LazyStages(dict):
-    """Stage dict with on-access construction (r07).
+class LazyStages(Mapping):
+    """Read-only stage mapping with on-access construction (r07).
 
     kg_stages used to construct every stage DataFrame up front; with the
     r07 eager overflow probe (extract_candidates_auto(probe="eager")),
@@ -37,18 +38,18 @@ class LazyStages(dict):
     stages would charge every caller for the parse pass even when it only
     reads e.g. ``mentions``. Access is memoized, so repeated ``st["x"]``
     returns the same DataFrame object (the unpersist contract callers
-    rely on). Supports exactly the access patterns the codebase uses:
-    ``st["key"]``, ``"key" in st``, iteration over names.
+    rely on). ``items``/``values``/``get`` build through ``__getitem__``;
+    iteration, ``len`` and ``in`` see only the names and build nothing.
     """
 
     def __init__(self, builders):
-        super().__init__()
         self._builders = dict(builders)
+        self._built = {}
 
     def __getitem__(self, key):
-        if not super().__contains__(key):
-            super().__setitem__(key, self._builders[key]())
-        return super().__getitem__(key)
+        if key not in self._built:
+            self._built[key] = self._builders[key]()
+        return self._built[key]
 
     def __contains__(self, key):
         return key in self._builders
@@ -56,8 +57,8 @@ class LazyStages(dict):
     def __iter__(self):
         return iter(self._builders)
 
-    def keys(self):
-        return self._builders.keys()
+    def __len__(self):
+        return len(self._builders)
 
 
 def default_mention_specs() -> list:
@@ -104,8 +105,8 @@ def kg_stages(
     replicate: int = 1,
     candidate_strategy: str = "fused",
     label_model: str = "majority",
-) -> Dict[str, DataFrame]:
-    """Build every stage lazily; returns the dict of stage DataFrames.
+) -> Mapping[str, DataFrame]:
+    """Build every stage lazily; returns them as a LazyStages mapping.
 
     ``label_model``: "majority" (the default, a pure projection — and what
     the gold oracle assumes for the default LFs) or "triplet" (the
@@ -157,12 +158,11 @@ def kg_stages(
         # the usual zero-overflow case skips the empty join-path subtree —
         # which is why stage construction is lazy now (LazyStages):
         # callers that never touch candidates never pay the probe.
-        def build_candidates() -> DataFrame:
+        def build_candidates(**kw) -> DataFrame:
             return extract_candidates_auto(
                 docs, default_mention_specs(), "part_temp", "part", "temp",
                 py_throttler=same_row_py, column_throttler=same_row,
-                probe="eager",
-            )
+                probe="eager", **kw)
 
         # label/triple path reads a SLIM variant (8 columns instead of 46):
         # same rows, ~7x less pandas/Arrow transfer. structural=False skips
@@ -173,12 +173,8 @@ def kg_stages(
         from .parse import ParseConfig
 
         def build_scored_input() -> DataFrame:
-            return extract_candidates_auto(
-                docs, default_mention_specs(), "part_temp", "part", "temp",
-                py_throttler=same_row_py, column_throttler=same_row,
-                slim=True, parse_cfg=ParseConfig(structural=False),
-                probe="eager",
-            )
+            return build_candidates(
+                slim=True, parse_cfg=ParseConfig(structural=False))
 
     def build_scored() -> DataFrame:
         if label_model == "triplet":

@@ -12,12 +12,12 @@ batch code path.
 
 from __future__ import annotations
 
+import re
 from typing import Callable, Dict, List, Mapping, Optional, Sequence, Tuple
 
 from .candidates_fused import PyThrottler, _doc_candidates, same_row_py
-from .lingual import SimpleParser
-from .mentions_op import MentionSpec
-from .parse import ParseConfig, parse_document
+from .mentions_op import MentionSpec, _fast_unigram_regex, doc_mentions
+from .parse import ParseConfig
 
 
 class FonduerPipelineModel:
@@ -47,23 +47,14 @@ class FonduerPipelineModel:
         self.throttler = throttler
         self.cfg = parse_cfg or ParseConfig()
         self.prob_threshold = prob_threshold
-        self._lp = SimpleParser(self.cfg.sentence_delim)
-
-    # -- the per-document chain (fonduer_model.py:81-105 shape) -------------
-    def _mentions(self, url: str, html: str) -> Dict[str, List[dict]]:
-        from .mentions_op import _fast_unigram_regex, iter_sentence_mentions
-
-        fast = [_fast_unigram_regex(s) for s in self.specs]
-        rows = parse_document(url, html, self.cfg, self._lp,
-                              emit_types={"sentence"})
-        by_type: Dict[str, List[dict]] = {}
-        for row in rows:
-            for m in iter_sentence_mentions(row, self.specs, fast):
-                by_type.setdefault(m["mention_type"], []).append(m)
-        return by_type
+        self._lp = self.cfg.make_lingual_parser()
+        self._fast = [_fast_unigram_regex(s) for s in self.specs]
 
     def classify(self, url: str, html: str) -> List[Tuple[str, str, str, float]]:
-        by_type = self._mentions(url, html)
+        """Score one page; raises when it fails to parse (the batch stages
+        emit a marker row instead — here the caller gets the error)."""
+        by_type = doc_mentions(url, html, self.cfg, self._lp, self.specs,
+                               self._fast)
         cands: List[dict] = []
         _doc_candidates(
             by_type, self.candidate_type, self.type_a, self.type_b,
@@ -120,21 +111,28 @@ def load_model(path: str) -> FonduerPipelineModel:
         return cloudpickle.load(f)
 
 
+# characters Spark's string -> int cast trims: <= 0x20 and ISO controls
+_SPARK_TRIM = "".join(map(chr, [*range(0x21), *range(0x7F, 0xA0)]))
+_ASCII_INT = re.compile(r"[+-]?[0-9]+")
+
+
 def build_default_model() -> FonduerPipelineModel:
     """The flagship relation as a serving model — the same LFs as
     pipeline.default_lfs, expressed as python fns over the candidate row."""
-    import re
-
     from .corpus import PRED
     from .pipeline import default_mention_specs
 
-    part_rgx = re.compile(r"^PN\d{3}[A-C]$")
+    part_rgx = re.compile(r"^PN\d{3}[A-C]$", re.ASCII)  # Java's \d is ASCII
 
     def _int(c):
-        try:
-            return int(c["b_span_text"])
-        except ValueError:
+        # exactly what Spark's try_cast("int") accepts (pipeline.default_lfs):
+        # ASCII digits, an optional sign, trimmed ASCII/ISO control
+        # whitespace, int32 range; anything else -> None (abstain)
+        s = (c["b_span_text"] or "").strip(_SPARK_TRIM)
+        if not _ASCII_INT.fullmatch(s):
             return None
+        v = int(s)
+        return v if -2**31 <= v < 2**31 else None
 
     def lf_temp_sign(c):
         v = _int(c)

@@ -203,7 +203,3 @@ class ImplicitSpan(Span):
             f"{abs0 + self.char_start}:{abs0 + self.char_end}"
             f":{self.expander_key}:{self.position}"
         )
-
-
-def make_sentence_view(row: Dict[str, Any]) -> SentenceView:
-    return SentenceView(row)

@@ -22,8 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .corpus import WEB_PAGES_SCHEMA
-from .mentions_op import MENTION_SCHEMA, MentionSpec
-from .parse import CONTEXT_SCHEMA, ParseConfig, parse_webpages
+from .mentions_op import WEB_PAGES, MentionSpec, fused_mentions
+from .parse import ParseConfig
 
 
 def stream_web_pages(spark: SparkSession, input_dir: str,
@@ -37,44 +37,12 @@ def stream_web_pages(spark: SparkSession, input_dir: str,
     )
 
 
-def stream_parse(pages: DataFrame, cfg: Optional[ParseConfig] = None) -> DataFrame:
-    """The parse operator applied to a streaming frame — identical code path
-    (mapInPandas is streaming-compatible); returns a streaming contexts frame."""
-    return parse_webpages(pages, cfg)
-
-
 def stream_mentions(pages: DataFrame, specs: Sequence[MentionSpec],
                     cfg: Optional[ParseConfig] = None) -> DataFrame:
-    """Streaming fused parse+mention extraction over (url, html) pages."""
-    import pandas as pd
-
-    from .lingual import SimpleParser
-    from .mentions_op import _fast_unigram_regex, iter_sentence_mentions
-    from .parse import parse_document
-
-    cfg = cfg or ParseConfig()
-    spec_list = list(specs)
-    fast_list = [_fast_unigram_regex(s) for s in spec_list]
-
-    def fn(batches):
-        lp = cfg.make_lingual_parser()
-        for pdf in batches:
-            out = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                if isinstance(html, (bytes, bytearray, memoryview)):
-                    html = bytes(html).decode("utf-8", errors="replace")
-                try:
-                    rows = parse_document(url, html, cfg, lp,
-                                          emit_types={"sentence"})
-                except Exception:
-                    continue
-                for row in rows:
-                    out.extend(
-                        iter_sentence_mentions(row, spec_list, fast_list))
-            yield pd.DataFrame(
-                out, columns=[f.name for f in MENTION_SCHEMA.fields])
-
-    return pages.select("url", "html").mapInPandas(fn, MENTION_SCHEMA)
+    """Streaming fused parse+mention extraction over (url, html) pages: the
+    batch kernel and batch loop (mentions_op.map_documents), so a page that
+    fails to parse yields one ``PARSE_ERROR_TYPE`` marker row here too."""
+    return fused_mentions(pages, WEB_PAGES, specs, cfg)
 
 
 def run_stream_to_parquet(stream_df: DataFrame, out_dir: str,
@@ -285,7 +253,6 @@ def stream_triples_incremental(
     from .candidates_op import same_row
     from .checkpoints import SnapshotTable
     from .labeling import with_marginals
-    from .parse import ParseConfig
     from .pipeline import default_lfs, default_mention_specs
     from .triples import materialize_triples
 

@@ -2069,6 +2069,7 @@ def q_text_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergeable across shards), point-query six probe words, and join the
     exact census — est_count >= true_count always (collisions only add).
     Every cell and estimate replays exactly in the oracle."""
+    from fonduer_spark.cache import cached
     from fonduer_spark.functions import sketches as skx
 
     words = _docs(spark, sf_dir).select(
@@ -2076,7 +2077,7 @@ def q_text_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).where(F.col("w") != "")
     # persisted: cms_estimate's shape check plus the probe join both read
     # the (<= width*depth cells) sketch
-    sketch = skx.cms_sketch(words, "w", width=512, depth=3).persist()
+    sketch = cached(skx.cms_sketch(words, "w", width=512, depth=3))
     probes = spark.createDataFrame([(p,) for p in _CMS_PROBES], "w string")
     est = skx.cms_estimate(sketch, probes, "w", width=512, depth=3)
     true = (

@@ -33,6 +33,7 @@ from typing import Callable, List, Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from .cache import cached
 from .mentions_op import (MENTION_COLUMNS, MENTION_SCHEMA, PARSE_ERROR_TYPE,
                           MentionSpec, corpus_docs, map_documents)
 
@@ -212,9 +213,9 @@ def extract_candidates_auto(
 
     ``persist=True`` (default) caches the fused output so the marker scan
     does not re-run the parse stage — the normal branch and the marker
-    branch both read the cached frame (one parse pass total). Long-lived
-    drivers building many pipelines should unpersist or rely on LRU block
-    eviction.
+    branch both read the cached frame (one parse pass total). The result
+    reads that cache, so it stays until the caller's ``cache.released()``
+    block exits; with no block open it stays until the caller clears it.
 
     ``probe="eager"`` (r07, requires ``persist``): run the fused stage AT
     CALL TIME (one job — the same job the overflow branch's broadcast
@@ -248,7 +249,7 @@ def extract_candidates_auto(
         max_mentions_per_doc=max_mentions_per_doc, slim=slim,
     )
     if persist:
-        fused = fused.persist()
+        fused = cached(fused)
     kind = F.col("candidate_type")
     cols = SLIM_COLUMNS if slim else CANDIDATE_COLUMNS
     normal = fused.where(~kind.isin(OVERFLOW_TYPE, PARSE_ERROR_TYPE)) \

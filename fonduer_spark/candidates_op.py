@@ -240,19 +240,11 @@ def same_col(_df: DataFrame = None) -> Column:
     return same_table(_df) & _col_aligned()
 
 
-def tabular_aligned(_df: DataFrame = None) -> Column:
-    return same_table(_df) & (_row_aligned() | _col_aligned())
-
-
 def same_cell(_df: DataFrame = None) -> Column:
     return (
         F.col("a_cell_sid").isNotNull()
         & (F.col("a_cell_sid") == F.col("b_cell_sid"))
     )
-
-
-def same_sentence(_df: DataFrame = None) -> Column:
-    return F.col("a_sentence_sid") == F.col("b_sentence_sid")
 
 
 def write_bucketed_mentions(mentions: DataFrame, table: str,

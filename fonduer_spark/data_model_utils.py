@@ -255,12 +255,6 @@ def get_right_ngrams_col(sent_words: Column, word_end: Column,
     return F.slice(sent_words, word_end + 2, window)
 
 
-def get_sentence_ngrams_col(sent_words: Column) -> Column:
-    """All tokens of the span's sentence (reference get_sentence_ngrams,
-    textual.py:131-147)."""
-    return sent_words
-
-
 # ---------------------------------------------------------------------------
 # visual predicates over the candidate frame (reference
 # utils/data_model_utils/visual.py:35-155 / utils_visual.py:65-137 — exact
@@ -279,28 +273,6 @@ def is_horz_aligned(_df: DataFrame = None) -> Column:
     return _visual_pair() & ~(
         (F.col("a_top") + 1.5 > F.col("b_bottom") - 1.5)
         | (F.col("b_top") + 1.5 > F.col("a_bottom") - 1.5)
-    )
-
-
-def is_vert_aligned(_df: DataFrame = None) -> Column:
-    return _visual_pair() & ~(
-        (F.col("a_left") + 1.5 > F.col("b_right") - 1.5)
-        | (F.col("b_left") + 1.5 > F.col("a_right") - 1.5)
-    )
-
-
-def is_vert_aligned_left(_df: DataFrame = None) -> Column:
-    return _visual_pair() & (F.abs(F.col("a_left") - F.col("b_left")) <= 2)
-
-
-def is_vert_aligned_right(_df: DataFrame = None) -> Column:
-    return _visual_pair() & (F.abs(F.col("a_right") - F.col("b_right")) <= 2)
-
-
-def is_vert_aligned_center(_df: DataFrame = None) -> Column:
-    return _visual_pair() & (
-        F.abs((F.col("a_right") + F.col("a_left")) / 2.0
-              - (F.col("b_right") + F.col("b_left")) / 2.0) <= 5
     )
 
 

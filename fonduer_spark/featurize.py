@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .cache import cached
+
 FEATURE_SCHEMA = T.StructType([
     T.StructField("candidate_sid", T.StringType(), False),
     T.StructField("candidate_type", T.StringType(), True),
@@ -45,24 +47,6 @@ FEATURE_SCHEMA = T.StructType([
 
 WINDOW = 3          # lemma/word window (reference config featurization window)
 NGRAM_MAX = 2       # contained/aligned ngram max n
-
-# Sentence slices persisted by featurize(); at most one is alive at a time
-# (each call releases the previous call's slice).
-_PERSISTED: List[DataFrame] = []
-
-
-def release_featurize_cache() -> None:
-    """Unpersist any sentence slice cached by a prior featurize() call.
-
-    featurize() persists its sentence slice so Catalyst does not re-run the
-    parse stage once per join branch; results derived from a released call
-    simply recompute if re-materialized later."""
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist()
-        except Exception:
-            pass
-
 
 def _cfg_window_ngram() -> tuple:
     """Resolve (window, ngram_max) from the engine config
@@ -775,16 +759,12 @@ def featurize(
         # subexpression-eliminate MapInPandas subtrees (measured: the
         # kg_features plan held 26 MapInPandas stages, i.e. ~10 full
         # corpus re-parses). MEMORY_AND_DISK, so at scale it spills
-        # instead of recomputing. The frame is tracked module-wide and the
-        # PREVIOUS featurize call's slice is released here, so a long-lived
-        # session holds at most one cached sentence slice (callers wanting
-        # eager release can call release_featurize_cache()).
-        release_featurize_cache()
-        sentences = (
+        # instead of recomputing. The result reads it, so it stays cached
+        # until the caller's released() block exits (cache.py).
+        sentences = cached(
             sentences.where(F.col("ctx_type") == "sentence")
             if "ctx_type" in sentences.columns else sentences
-        ).persist()
-        _PERSISTED.append(sentences)
+        )
     have_words = False
     if sentences is not None and ("textual" in libs or "lingual" in libs):
         sent = sentences

@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..cache import cached, released
+
 
 def normalized_tokens(text: Column) -> Column:
     """Lower-cased whitespace tokens of a text column."""
@@ -149,8 +151,8 @@ def _minhash_sig_frame(ex: DataFrame, k: int, family: str) -> DataFrame:
     join side (Catalyst does not share subtrees across self-join branches),
     doubling the dominant md5 cost of the operator (measured in the r07
     plan capture: two SortAggregate towers feeding the bucket join). The
-    cache is an intra-query intermediate, materialized inside the timed
-    run; callers/benches clearCache() between runs."""
+    cache is an intra-query intermediate the result reads; the caller's
+    ``cache.released()`` block releases it."""
     if family == "km":
         h = F.md5("s")
         hashed = ex.select(
@@ -168,7 +170,7 @@ def _minhash_sig_frame(ex: DataFrame, k: int, family: str) -> DataFrame:
             F.min(F.md5(F.concat(F.col("s"), F.lit(f"#{i}")))).alias(f"h{i}")
             for i in range(k)
         ])
-    return sig.persist()
+    return cached(sig)
 
 
 def lsh_verified_pairs(
@@ -197,10 +199,10 @@ def lsh_verified_pairs(
     # intermediate, spills via MEMORY_AND_DISK at scale (the guide-§8
     # trade: cache the per-doc shingle sets once rather than re-deriving
     # them from the corpus per join side)
-    sh = docs.select(
+    sh = cached(docs.select(
         F.col(id_col).alias("doc"),
         F.array_distinct(shingles(F.col(text_col), shingle_n)).alias("sh"),
-    ).persist()
+    ))
     out = (
         pairs.join(sh.withColumnsRenamed({"doc": "a", "sh": "sha"}), "a")
         .join(sh.withColumnsRenamed({"doc": "b", "sh": "shb"}), "b")
@@ -238,11 +240,9 @@ def near_dup_keep(
     negative ids would break that invariant and fail fast via raise_error.
     The whole composition (md5 signatures, band joins, in-bucket verify,
     recursive closure) stays SQL-reproducible. The verified pairs frame is
-    persisted (it feeds the CC size guard and both CC strategies) —
-    long-lived drivers rely on LRU eviction, as with
-    extract_candidates_auto."""
-    pairs = lsh_verified_pairs(docs, id_col, text_col, k, bands,
-                               shingle_n, threshold).persist()
+    cached (it feeds the CC size guard and both CC strategies) in a block
+    of its own: connected_components runs eagerly, so the result no longer
+    reads any cache and nothing is left cached on return."""
     from ..linking import connected_components
 
     def key(c):
@@ -253,13 +253,16 @@ def near_dup_keep(
                 F.lit("near_dup_keep requires non-negative ids, got "),
                 col.cast("string"))).cast("string"),
         ).otherwise(F.lpad(col.cast("string"), 19, "0"))
-    edges = pairs.select(key("a").alias("a"), key("b").alias("b"))
-    verts = (
-        edges.select(F.col("a").alias("v"))
-        .unionByName(edges.select(F.col("b").alias("v")))
-        .distinct()
-    )
-    comp = connected_components(verts, edges)
+    with released():
+        pairs = cached(lsh_verified_pairs(docs, id_col, text_col, k, bands,
+                                          shingle_n, threshold))
+        edges = pairs.select(key("a").alias("a"), key("b").alias("b"))
+        verts = (
+            edges.select(F.col("a").alias("v"))
+            .unionByName(edges.select(F.col("b").alias("v")))
+            .distinct()
+        )
+        comp = connected_components(verts, edges)
     return comp.select(
         F.col("v").cast("long").alias(id_col),
         F.col("component").cast("long").alias("canonical"),
@@ -292,7 +295,7 @@ def ngram_jaccard_pairs(
     # persisted: the self-join below otherwise re-plans the shingle
     # explode + hot-shingle anti-join once per side (r07; this kernel is
     # doc-capped by contract, so the cached exploded frame is bounded)
-    ex = ex.join(F.broadcast(hot), "s", "left_anti").persist()
+    ex = cached(ex.join(F.broadcast(hot), "s", "left_anti"))
     common = (
         ex.alias("x")
         .join(ex.alias("y"), "s")
@@ -421,7 +424,7 @@ def embedding_near_dup_pairs_lsh(
     # into the self-join (project early, guide §2.3); persisted so the two
     # join sides share ONE bucket-hash pass (16 plane dots per vector)
     # instead of Catalyst re-planning the subtree per side
-    keyed = emb.select(
+    keyed = cached(emb.select(
         F.col(id_col).alias("doc"),
         F.explode(F.array(*[
             F.concat_ws(
@@ -430,7 +433,7 @@ def embedding_near_dup_pairs_lsh(
             )
             for t in range(n_tables)
         ])).alias("bk"),
-    ).persist()
+    ))
     a = keyed.select(F.col("doc").alias("a"), "bk")
     b = keyed.select(F.col("doc").alias("b"), "bk")
     pairs = (
@@ -598,12 +601,12 @@ def semantic_dedup(
     # re-plan the centroid-assignment arithmetic (n_centroids 64-dim dots
     # per vector) once per branch; norms ride along so the per-PAIR verify
     # is one fold, not three (bit-identical — see cosine_topk)
-    asg = emb.select(
+    asg = cached(emb.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("v"),
         norm(F.col(vec_col)).alias("_n"),
         F.least(*structs)["j"].alias("cell"),
-    ).persist()
+    ))
     lo = asg.select(F.col("vec_id").alias("a"), F.col("v").alias("va"),
                     F.col("_n").alias("_na"), "cell")
     hi = asg.select(F.col("vec_id").alias("b"), F.col("v").alias("vb"),
@@ -688,11 +691,11 @@ def set_similarity_join(
     # first global ordering), i.e. ~4x the dominant ordering cost; one
     # narrow (id, tokens, n) row per doc, the same per-doc-set scale
     # class the verify stage of lsh_verified_pairs caches
-    sized = ordered.select(
+    sized = cached(ordered.select(
         "doc",
         F.transform("st", lambda s: s["t"]).alias("tk"),
         F.size("st").alias("n"),
-    ).persist()
+    ))
     pref = sized.select(
         "doc",
         "n",

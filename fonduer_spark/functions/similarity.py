@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..cache import cached, released
+
 
 def dot(a: Column, b: Column) -> Column:
     # widen to double BEFORE multiplying: float32 products differ from the
@@ -154,39 +156,6 @@ def md5_bucket(vec_col: Column, dim: int, n_planes: int,
         )
         bucket = bucket + F.when(dot_j > 0, F.lit(1 << j)).otherwise(F.lit(0))
     return bucket.cast("int")
-
-
-def lsh_bucket_ids(
-    emb: DataFrame,
-    dim: int,
-    n_planes: int = 8,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    family: str = "gaussian",
-) -> DataFrame:
-    """Assign each vector its random-hyperplane sign-bucket.
-
-    ``family``:
-    - "gaussian": seeded-numpy Gaussian planes, one Arrow pass (the classic
-      Charikar construction; not SQL-reproducible);
-    - "md5": md5-Rademacher ±1 planes as a pure JVM column expression —
-      whole-stage codegen, zero Python, and the bucket assignment is
-      reproducible in DuckDB SQL (the oracle-checkable family).
-    """
-    if family == "md5":
-        return emb.withColumn(
-            "bucket", md5_bucket(F.col(vec_col), dim, n_planes))
-    planes = _hyperplanes(dim, n_planes, seed)
-
-    @F.pandas_udf(T.IntegerType())
-    def bucket(v: pd.Series) -> pd.Series:
-        mat = np.stack(v.to_numpy())
-        signs = (mat @ planes.T) > 0
-        weights = 1 << np.arange(n_planes)
-        return pd.Series((signs @ weights).astype("int32"))
-
-    return emb.withColumn("bucket", bucket(F.col(vec_col)))
 
 
 def ivf_assignment_structs(vec_col: Column,
@@ -498,7 +467,7 @@ def knn_graph(
     # persisted (doc, bucket-key) proxy rows: the self-join otherwise plans
     # the 16-plane bucket hashing once per side (no cross-branch subtree
     # sharing in Catalyst) — see embedding_near_dup_pairs_lsh
-    keyed = emb.select(
+    keyed = cached(emb.select(
         F.col(id_col).alias("doc"),
         F.explode(F.array(*[
             F.concat_ws(
@@ -507,7 +476,7 @@ def knn_graph(
             )
             for t in range(n_tables)
         ])).alias("bk"),
-    ).persist()
+    ))
     a = keyed.select(F.col("doc").alias("a"), "bk")
     b = keyed.select(F.col("doc").alias("b"), "bk")
     pairs = (
@@ -565,12 +534,10 @@ def semantic_clusters(
     Scale: inherits knn_graph's bucketed candidate bound and CC's hybrid
     strategy (driver union-find under the rows+bytes guard, O(log diameter)
     pointer-doubling label propagation above it). The edge frame is
-    persisted — it feeds CC's size guard and both strategies.
+    cached — it feeds CC's size guard and both strategies — in a block of
+    its own: CC runs eagerly, so nothing is left cached on return.
     """
     from ..linking import connected_components
-
-    g = knn_graph(emb, dim, k=k, n_planes=n_planes, n_tables=n_tables,
-                  id_col=id_col, vec_col=vec_col)
 
     def key(c):
         col = F.col(c)
@@ -581,16 +548,18 @@ def semantic_clusters(
                 col.cast("string"))).cast("string"),
         ).otherwise(F.lpad(col.cast("string"), 19, "0"))
 
-    edges = (
-        g.where(F.col("cos") >= threshold)
-        .select(F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"))
-        .distinct()
-        .select(key("a").alias("a"), key("b").alias("b"))
-        .persist()
-    )
-    verts = emb.select(key(id_col).alias("v"))
-    comp = connected_components(verts, edges)
+    with released():
+        g = knn_graph(emb, dim, k=k, n_planes=n_planes, n_tables=n_tables,
+                      id_col=id_col, vec_col=vec_col)
+        edges = cached(
+            g.where(F.col("cos") >= threshold)
+            .select(F.least("src", "dst").alias("a"),
+                    F.greatest("src", "dst").alias("b"))
+            .distinct()
+            .select(key("a").alias("a"), key("b").alias("b"))
+        )
+        verts = emb.select(key(id_col).alias("v"))
+        comp = connected_components(verts, edges)
     comp = comp.select(
         F.col("v").cast("long").alias(id_col),
         F.col("component").cast("long").alias("cluster"),

@@ -227,24 +227,20 @@ def bloom_contains(
     oracle reproduces every decision via distinct-position membership
     (bit (w, b) set <=> SOME inserted value hashed to position 64w+b).
 
-    The bitmap side (<= m/64 rows) is broadcast; the probe side streams —
-    the 10^12-row membership join costs no shuffle of the big side.
-
-    The bitmap is persisted here BEFORE the shape check: the check is an
-    eager action that executes the full bitmap-build lineage (the groupBy/
-    bit_or forces the whole input scan), and without the persist the
-    broadcast below would re-execute that scan — ~2x the build cost
-    (ADVICE r6). The shape-check action doubles as the cache fill; note it
-    triggers a job at call time (the eager_cleanup contract used by the
-    graph operators)."""
-    bitmap = bitmap.persist()
-    shape = bitmap.select("m", "k_hashes").limit(1).collect()
-    if shape and (shape[0]["m"] != int(m)
-                  or shape[0]["k_hashes"] != int(k_hashes)):
-        raise ValueError(
-            f"bitmap shape m={shape[0]['m']}/k={shape[0]['k_hashes']} != "
-            f"probe shape m={int(m)}/k={int(k_hashes)}: mismatched hash "
-            "spaces produce false negatives")
+    The bitmap side (<= m/64 rows) is collected ONCE — one job over the
+    bitmap-build lineage, which also serves the shape check on every row —
+    and broadcast from the driver; the probe side streams, so the
+    10^12-row membership join costs no shuffle of the big side and the
+    caller's bitmap frame is neither re-executed nor cached."""
+    words = bitmap.select("word", "bits", "m", "k_hashes").collect()
+    for w in words:
+        if w["m"] != int(m) or w["k_hashes"] != int(k_hashes):
+            raise ValueError(
+                f"bitmap shape m={w['m']}/k={w['k_hashes']} != "
+                f"probe shape m={int(m)}/k={int(k_hashes)}: mismatched hash "
+                "spaces produce false negatives")
+    bits = probes.sparkSession.createDataFrame(
+        [(w["word"], w["bits"]) for w in words], "word long, bits long")
     pk = probes.select(F.col(probe_col).alias("_p")).distinct().select(
         "_p",
         F.explode(_bloom_positions(F.col("_p"), m, k_hashes)).alias("pos"),
@@ -257,7 +253,7 @@ def bloom_contains(
     hit = F.expr(
         "shiftrightunsigned(coalesce(bits, CAST(0 AS BIGINT)), _b) & 1")
     return (
-        pk.join(F.broadcast(bitmap.select("word", "bits")), ["word"], "left")
+        pk.join(F.broadcast(bits), ["word"], "left")
         .groupBy("_p")
         .agg(F.min(hit).alias("member"))
         .select(F.col("_p").alias(probe_col),

@@ -536,14 +536,6 @@ def score_with_label_model_k(
     return df.select(*[c for c in df.columns if not c.startswith("_lf_")])
 
 
-def gold_labels(
-    candidates: DataFrame, is_gold: Column, annotator: str = "gold"
-) -> DataFrame:
-    """Gold-label loading: same machinery with a single annotator-named LF
-    (reference labeler.py:117-192, tests/shared/hardware_utils.py:59-68)."""
-    return apply_lfs(candidates, {annotator: is_gold})
-
-
 def entity_level_prf1(
     predicted: DataFrame, gold: DataFrame, keys: List[str]
 ) -> Dict[str, float]:

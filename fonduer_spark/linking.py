@@ -16,7 +16,11 @@ Pipeline:
 Scale notes: every stage is join/agg-shaped; the CC loop converges in
 O(log(diameter)) iterations, each one self-join + groupBy-min; components of
 surface-form similarity graphs have tiny diameters in practice. Each
-iteration persists and localCheckpoints to truncate lineage growth.
+iteration localCheckpoints to truncate lineage growth.
+
+Caches follow cache.py: an operator whose result reads its caches leaves
+them to the caller's ``released()`` block; ``pagerank``, whose rounds are
+checkpointed, releases its own.
 """
 
 from __future__ import annotations
@@ -26,6 +30,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .cache import cached, released
 from .triples import normalize_surface
 
 
@@ -286,7 +291,8 @@ def pagerank(
     out-degrees ONCE and persisted, so every round reuses the same
     src-partitioned build side) plus one groupBy(dst) with map-side
     partial sums. Fixed ``iters`` bounds total work; localCheckpoint per
-    round truncates the lineage so plans stay O(1). Overflow bound:
+    round truncates the lineage so plans stay O(1), and the cached edge
+    and node frames are released before returning. Overflow bound:
     inflow <= N*scale, so num*inflow needs num*N*scale < 2**63 — at
     10**12 nodes drop ``scale`` accordingly.
 
@@ -298,15 +304,6 @@ def pagerank(
     seed neighborhood. Seeds not present in the graph contribute nothing
     (distances/relevance are defined over graph nodes).
     """
-    e = edges.select("src", "dst").distinct()
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_d"))
-    ed = e.join(outdeg, "src").persist()
-    nodes = (
-        e.select(F.col("src").alias("v"))
-        .unionByName(e.select(F.col("dst").alias("v")))
-        .distinct()
-        .persist()
-    )
     base = (damping_den - damping_num) * scale // damping_den
     if seeds is None:
         init_col = F.lit(int(scale))
@@ -315,29 +312,36 @@ def pagerank(
         is_seed = F.col("v").isin(list(seeds))
         init_col = F.when(is_seed, F.lit(int(scale))).otherwise(F.lit(0))
         base_col = F.when(is_seed, F.lit(int(base))).otherwise(F.lit(0))
-    ranks = nodes.select(
-        "v", init_col.cast("long").alias("rank_scaled"))
-    for _ in range(int(iters)):
-        inflow = (
-            ed.join(ranks, ed.src == ranks.v)
-            .select(F.col("dst").alias("v"),
-                    F.expr("rank_scaled div _d").alias("_c"))
-            .groupBy("v")
-            .agg(F.sum("_c").alias("_in"))
+    with released():
+        e = edges.select("src", "dst").distinct()
+        outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_d"))
+        ed = cached(e.join(outdeg, "src"))
+        nodes = cached(
+            e.select(F.col("src").alias("v"))
+            .unionByName(e.select(F.col("dst").alias("v")))
+            .distinct()
         )
-        ranks = (
-            nodes.join(inflow, "v", "left")
-            .select(
-                "v",
-                (base_col + F.expr(
-                    f"({int(damping_num)} * coalesce(_in, 0L)) "
-                    f"div {int(damping_den)}"))
-                .cast("long").alias("rank_scaled"),
+        ranks = nodes.select(
+            "v", init_col.cast("long").alias("rank_scaled"))
+        for _ in range(int(iters)):
+            inflow = (
+                ed.join(ranks, ed.src == ranks.v)
+                .select(F.col("dst").alias("v"),
+                        F.expr("rank_scaled div _d").alias("_c"))
+                .groupBy("v")
+                .agg(F.sum("_c").alias("_in"))
             )
-            .localCheckpoint()
-        )
-    ed.unpersist()
-    nodes.unpersist()
+            ranks = (
+                nodes.join(inflow, "v", "left")
+                .select(
+                    "v",
+                    (base_col + F.expr(
+                        f"({int(damping_num)} * coalesce(_in, 0L)) "
+                        f"div {int(damping_den)}"))
+                    .cast("long").alias("rank_scaled"),
+                )
+                .localCheckpoint()
+            )
     return ranks
 
 
@@ -359,11 +363,10 @@ def cooccurrence_edges(
     would otherwise emit 10^10 pairs. Callers with such docs should cap or
     sample upstream; the guard makes the decision explicit.
     """
-    de = (
+    de = cached(
         doc_entities.select(
             F.col(doc_col).alias("_d"), F.col(ent_col).alias("_e"))
         .distinct()
-        .persist()
     )
     over = (
         de.groupBy("_d").agg(F.count(F.lit(1)).alias("_n"))
@@ -371,26 +374,20 @@ def cooccurrence_edges(
         .limit(1).collect()
     )
     if over:
-        de.unpersist()
         raise ValueError(
             f"cooccurrence_edges: doc {over[0]._d!r} has {over[0]._n} "
             f"entities (> max_per_doc={max_per_doc}); cap or sample "
             "upstream before building the co-occurrence graph")
-    edges = (
+    return (
         de.alias("x")
         .join(de.alias("y"), "_d")
         .where(F.col("x._e") < F.col("y._e"))
         .select(F.col("x._e").alias("a"), F.col("y._e").alias("b"))
         .distinct()
-        # materialize so the persisted doc-entity frame can be released
-        # (the guard already paid its computation)
-        .localCheckpoint()
     )
-    de.unpersist()
-    return edges
 
 
-def triangle_counts(edges: DataFrame, eager_cleanup: bool = True) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle participation over an undirected graph:
     (node, degree, n_triangles) — the classic cohesion census (local
     clustering numerator) over the materialized entity graph.
@@ -410,26 +407,18 @@ def triangle_counts(edges: DataFrame, eager_cleanup: bool = True) -> DataFrame:
     degree). Three shuffle joins + one groupBy total; every triangle is
     enumerated exactly once (its (degree,id)-minimal vertex is the unique
     apex). All outputs are exact integers (hash-safe cross-engine).
-
-    ``eager_cleanup`` (default): materialize the result (localCheckpoint)
-    and release the two internal persisted frames, so repeated calls in a
-    long-lived session do not accumulate executor storage. Pass False to
-    get the lazy plan (e.g. for .explain inspection); the internal
-    persists then stay pinned for the frame's lifetime.
     """
-    e = (
+    e = cached(
         edges.select(
             F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .persist()
     )
-    deg = (
+    deg = cached(
         e.select(F.col("a").alias("v"))
         .unionByName(e.select(F.col("b").alias("v")))
         .groupBy("v")
         .agg(F.count(F.lit(1)).alias("degree"))
-        .persist()
     )
     da = deg.select(F.col("v").alias("a"), F.col("degree").alias("_da"))
     db = deg.select(F.col("v").alias("b"), F.col("degree").alias("_db"))
@@ -461,7 +450,7 @@ def triangle_counts(edges: DataFrame, eager_cleanup: bool = True) -> DataFrame:
         .groupBy("v")
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
-    out = (
+    return (
         deg.join(per_node, "v", "left")
         .select(
             F.col("v").alias("node"),
@@ -470,11 +459,6 @@ def triangle_counts(edges: DataFrame, eager_cleanup: bool = True) -> DataFrame:
             .cast("long").alias("n_triangles"),
         )
     )
-    if eager_cleanup:
-        out = out.localCheckpoint()
-        e.unpersist()
-        deg.unpersist()
-    return out
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -521,11 +505,10 @@ def neighborhood_counts(
     """
     if hops < 1:
         raise ValueError(f"hops must be >= 1, got {hops}")
-    sym = _symmetrize(edges).persist()
+    sym = cached(_symmetrize(edges))
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
     over = deg.where(F.col("degree") > int(max_degree)).limit(1).collect()
     if over:
-        sym.unpersist()
         raise ValueError(
             f"neighborhood_counts: node {over[0].src!r} has degree "
             f"{over[0].degree} (> max_degree={max_degree}); exact h-hop "
@@ -542,7 +525,7 @@ def neighborhood_counts(
             .distinct()
         )
         reach = reach.unionByName(frontier).distinct()
-    out = (
+    return (
         reach.groupBy("src")
         .agg(F.count(F.lit(1)).alias("n_reach"))
         .join(deg, "src")
@@ -551,16 +534,12 @@ def neighborhood_counts(
             F.col("degree").cast("long").alias("degree"),
             F.col("n_reach").cast("long").alias("n_reach"),
         )
-        .localCheckpoint()
     )
-    sym.unpersist()
-    return out
 
 
 def neighborhood_kmv(
     edges: DataFrame,
     k: int = 64,
-    eager_cleanup: bool = True,
 ) -> DataFrame:
     """Sketched 2-hop neighborhood sizes — the ANF/HyperBall pattern
     (per-node mergeable cardinality sketch, propagated one hop per
@@ -582,25 +561,20 @@ def neighborhood_kmv(
     Scale: O(|E| * k) rows per propagation round — linear in edges, NO
     dependence on hub degree (the reason ANF exists); one more
     round == one more hop. groupBy/window shuffles only; all arithmetic
-    integer.
-
-    ``eager_cleanup`` (default): materialize (localCheckpoint) and release
-    the internal persisted frames — same contract as triangle_counts.
-    Pass False to get the lazy plan for .explain inspection."""
+    integer."""
     from .functions.sketches import _SPACE, _hash32
     from pyspark.sql import Window
 
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-    sym = _symmetrize(edges).persist()
+    sym = cached(_symmetrize(edges))
     nh = sym.select(
         "src", _hash32(F.col("dst")).alias("_h")).distinct()
     w = Window.partitionBy("src").orderBy("_h")
-    sk1 = (
+    sk1 = cached(
         nh.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= int(k))
         .select("src", "_h")
-        .persist()
     )
     pulled = (
         sym.alias("e")
@@ -614,7 +588,7 @@ def neighborhood_kmv(
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= int(k))
     )
-    out = (
+    return (
         merged.groupBy("src")
         .agg(F.count(F.lit(1)).alias("_n"), F.max("_h").alias("_hk"))
         .select(
@@ -625,11 +599,6 @@ def neighborhood_kmv(
             .cast("long").alias("n_2hop_est"),
         )
     )
-    if eager_cleanup:
-        out = out.localCheckpoint()
-        sym.unpersist()
-        sk1.unpersist()
-    return out
 
 
 def bfs_distances(
@@ -663,8 +632,8 @@ def bfs_distances(
         .unionByName(edges.select(F.col(dst).alias("node")))
         .distinct()
     )
-    dist = nodes.where(F.col("node").isin(list(seeds))).select(
-        "node", F.lit(0).cast("int").alias("dist")).persist()
+    dist = cached(nodes.where(F.col("node").isin(list(seeds))).select(
+        "node", F.lit(0).cast("int").alias("dist")))
     frontier = dist.select("node")
     fwd = edges.select(F.col(src).alias("node"), F.col(dst).alias("_to"))
     for h in range(1, int(max_hops) + 1):
@@ -675,7 +644,7 @@ def bfs_distances(
             .join(dist, "node", "left_anti")
             .select("node", F.lit(h).cast("int").alias("dist"))
         )
-        nxt = nxt.persist()
+        nxt = cached(nxt)
         if nxt.isEmpty():
             nxt.unpersist()
             break
@@ -684,7 +653,7 @@ def bfs_distances(
         # at most two cached frames outlive any round instead of
         # ~2*max_hops. The next frontier reads the materialized union
         # (dist == h rows are exactly nxt), never the released parents.
-        new_dist = dist.unionByName(nxt).persist()
+        new_dist = cached(dist.unionByName(nxt))
         new_dist.count()
         dist.unpersist()
         nxt.unpersist()
@@ -698,7 +667,6 @@ def link_prediction_scores(
     min_common: int = 2,
     max_apex_degree: int = 10_000,
     weight_scale: int = 1_000_000,
-    eager_cleanup: bool = True,
 ) -> DataFrame:
     """Common-neighbor link prediction over an undirected graph — the
     classic KG-completion census (Liben-Nowell & Kleinberg CIKM'03): for
@@ -729,10 +697,6 @@ def link_prediction_scores(
     scorers drop super-nodes. The cap is replayed identically by the
     oracle, so capped results are still exact under the definition.
 
-    ``eager_cleanup`` (default): materialize (localCheckpoint) and release
-    the internal persisted frame — same contract as triangle_counts. Pass
-    False for the lazy plan (.explain inspection).
-
     Reference has no graph-completion stage (triples are its terminal
     output; /root/reference/src/fonduer/candidates/candidates.py stops at
     extraction) — this extends the KG-construction pipeline per the
@@ -740,7 +704,7 @@ def link_prediction_scores(
     """
     if min_common < 1:
         raise ValueError(f"min_common must be >= 1, got {min_common}")
-    sym = _symmetrize(edges).persist()
+    sym = cached(_symmetrize(edges))
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
     apex = (
         sym.join(deg.where(F.col("degree") <= int(max_apex_degree)), "src")
@@ -770,11 +734,7 @@ def link_prediction_scores(
     )
     und = sym.where(F.col("src") < F.col("dst")).select(
         F.col("src").alias("a"), F.col("dst").alias("b"))
-    out = scored.join(und, ["a", "b"], "left_anti")
-    if eager_cleanup:
-        out = out.localCheckpoint()
-        sym.unpersist()
-    return out
+    return scored.join(und, ["a", "b"], "left_anti")
 
 
 def fuzzy_join_levenshtein(

@@ -16,6 +16,7 @@ from typing import Dict, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .cache import cached
 from .candidates_op import extract_candidates, same_row
 from .corpus import PRED, load_docs, make_web_pages
 from .labeling import with_marginals
@@ -134,8 +135,7 @@ def kg_stages(
     # python stage); persisted lazily because the join strategy reads it
     # twice. Only constructed if a caller accesses it.
     def build_mentions() -> DataFrame:
-        return extract_mentions_fused(
-            docs, default_mention_specs()).persist()
+        return cached(extract_mentions_fused(docs, default_mention_specs()))
 
     if candidate_strategy == "join" or salt_buckets > 0:
         def build_candidates() -> DataFrame:

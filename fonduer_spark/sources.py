@@ -2,8 +2,8 @@
 
 The reference's DocPreprocessors enumerate local files into Document rows
 (/root/reference/src/fonduer/parser/preprocessors/): HTML (one <html> per
-file), Text (wrapped in <doc>), CSV (row -> pseudo-HTML), TSV (name\\ttext).
-Here each becomes a DataFrame transform producing the canonical
+file), CSV (row -> pseudo-HTML), TSV (name\\ttext). Here each becomes a
+DataFrame transform producing the canonical
 (url, warc_ts, html, text, lang) frame the parse operator consumes — the
 input table IS the preprocessor; deterministic ids derive from the url/name
 column, not file enumeration order (doc_preprocessor.py:70-80 sorts files
@@ -16,13 +16,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _finish(df: DataFrame, url_col, html_col, lang: str = "en") -> DataFrame:
+def _finish(df: DataFrame, url_col, html_col) -> DataFrame:
     return df.select(
         url_col.alias("url"),
         F.lit(None).cast("timestamp").alias("warc_ts"),
         F.encode(html_col, "utf-8").alias("html"),
         F.lit("").alias("text"),
-        F.lit(lang).alias("lang"),
+        F.lit("en").alias("lang"),
     )
 
 
@@ -45,14 +45,6 @@ def html_docs(spark: SparkSession, path: str) -> DataFrame:
         F.lit("").alias("text"),
         F.lit("en").alias("lang"),
     )
-
-
-def text_docs(spark: SparkSession, path: str) -> DataFrame:
-    """Plain-text files wrapped in <doc> (text_doc_preprocessor.py:14)."""
-    raw = spark.read.option("wholetext", "true").text(path) \
-        .withColumn("url", F.input_file_name())
-    html = F.concat(F.lit("<doc>"), F.col("value"), F.lit("</doc>"))
-    return _finish(raw, F.col("url"), html)
 
 
 def csv_docs(
@@ -107,14 +99,8 @@ def tsv_docs(spark: SparkSession, path: str) -> DataFrame:
     return _finish(df, F.col("name"), html)
 
 
-def dataframe_docs(df: DataFrame, url_col: str, html_col: str,
-                   lang: str = "en") -> DataFrame:
-    """Any DataFrame with (url, html-string) columns -> web_pages shape."""
-    return _finish(df, F.col(url_col), F.col(html_col), lang)
-
-
 # ---------------------------------------------------------------------------
-# hOCR preprocessor (reference hocr_doc_preprocessor.py:46-164)
+# hOCR rewrite (reference hocr_doc_preprocessor.py:46-164)
 # ---------------------------------------------------------------------------
 _HOCR_VISUAL_KEYS = ("left", "top", "right", "bottom", "ppageno", "tokens")
 
@@ -187,35 +173,3 @@ def rewrite_hocr(html_text: str, space: bool = True) -> str:
         if parent.text:
             parent.text = " ".join(parent.text.split())
     return tostring(root)
-
-
-def hocr_docs(spark: SparkSession, path: str, space: bool = True) -> DataFrame:
-    """Directory of .hocr files -> web_pages with visual attrs accumulated
-    per the reference HOCRDocPreprocessor; parse with
-    ``ParseConfig(visual="hocr")`` to attach word coordinates."""
-    import pandas as pd
-
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.hocr")
-        .load(path)
-        .select("path", "content")
-    )
-
-    def fn(batches):
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": pdf["path"],
-                "warc_ts": pd.NaT,
-                "html": [
-                    rewrite_hocr(bytes(c).decode("utf-8", errors="replace"),
-                                 space).encode("utf-8")
-                    for c in pdf["content"]
-                ],
-                "text": ["" for _ in pdf["path"]],
-                "lang": ["en" for _ in pdf["path"]],
-            })
-
-    from .corpus import WEB_PAGES_SCHEMA
-
-    return raw.mapInPandas(fn, WEB_PAGES_SCHEMA)

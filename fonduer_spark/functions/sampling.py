@@ -29,6 +29,8 @@ from typing import Mapping, Optional, Sequence, Tuple
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import rows_frame
+
 # md5 hex is uniform; the first 8 hex digits give a uniform 32-bit integer
 _MD5_SPACE = float(1 << 32)
 
@@ -141,10 +143,8 @@ def pack_token_stream(
     for r in totals:
         prefix[r._bucket] = acc
         acc += r._tot
-    spark = docs.sparkSession
-    pre = spark.createDataFrame(
-        [(b, off) for b, off in prefix.items()],
-        "_bucket long, _prefix long")
+    pre = rows_frame(docs.sparkSession, prefix.items(),
+                     "_bucket long, _prefix long")
 
     w = Window.partitionBy("_bucket").orderBy(id_col)
     out = (

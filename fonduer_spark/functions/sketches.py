@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import rows_frame
+
 _SPACE = 1 << 32
 
 
@@ -239,8 +241,9 @@ def bloom_contains(
                 f"bitmap shape m={w['m']}/k={w['k_hashes']} != "
                 f"probe shape m={int(m)}/k={int(k_hashes)}: mismatched hash "
                 "spaces produce false negatives")
-    bits = probes.sparkSession.createDataFrame(
-        [(w["word"], w["bits"]) for w in words], "word long, bits long")
+    bits = rows_frame(probes.sparkSession,
+                      [(w["word"], w["bits"]) for w in words],
+                      "word long, bits long")
     pk = probes.select(F.col(probe_col).alias("_p")).distinct().select(
         "_p",
         F.explode(_bloom_positions(F.col("_p"), m, k_hashes)).alias("pos"),

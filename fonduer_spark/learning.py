@@ -17,6 +17,7 @@ a driver-side numpy logistic regression:
 
 from __future__ import annotations
 
+import warnings
 from typing import Dict, List, Tuple
 
 import numpy as np
@@ -53,12 +54,18 @@ def collect_csr(features: DataFrame, key_order: List[str] = None,
     this was the one public fit-path entry that could still do an
     unbounded O(N-candidates) driver collect by default — guide §5, the
     driver should do almost no data work). Rows above the cap are dropped
-    by the same deterministic xxhash64 sample as bounded_fit_rows; pass
+    by the same deterministic xxhash64 sample as bounded_fit_rows, with a
+    warning giving the kept and total row counts; pass
     ``max_fit_candidates=None`` as the explicit unbounded opt-out."""
     df = features.select("candidate_sid", "keys", "values")
+    n_total = None
     if max_fit_candidates is not None:
-        df = _cap_rows(df, max_fit_candidates)
+        df, n_total = _cap_rows(df, max_fit_candidates)
     rows = sorted(df.collect(), key=lambda r: r["candidate_sid"])
+    if n_total is not None and len(rows) < n_total:
+        warnings.warn(
+            f"collect_csr: max_fit_candidates={max_fit_candidates} kept "
+            f"{len(rows)} of {n_total} rows", stacklevel=2)
     return _csr_from_rows(rows, key_order)
 
 
@@ -345,16 +352,18 @@ def encode_marked(marked: DataFrame, word2id: Dict[str, int]) -> DataFrame:
     return out
 
 
-def _cap_rows(fit_df: DataFrame, max_fit_candidates: int) -> DataFrame:
+def _cap_rows(fit_df: DataFrame,
+              max_fit_candidates: int) -> Tuple[DataFrame, int]:
     """Deterministic xxhash64 cap shared by every fit path: when the row
     count exceeds the cap, keep a hash-stable subset (~cap rows) so the
-    driver-side collect is bounded regardless of corpus size."""
+    driver-side collect is bounded regardless of corpus size. Returns the
+    capped frame and the uncapped row count."""
     n_total = fit_df.count()
     if n_total > max_fit_candidates:
         frac_ppm = int(1_000_000 * max_fit_candidates / n_total)
         fit_df = fit_df.where(
             F.pmod(F.xxhash64("candidate_sid"), F.lit(1_000_000)) < frac_ppm)
-    return fit_df
+    return fit_df, n_total
 
 
 def bounded_fit_rows(marked: DataFrame, marginals: DataFrame,
@@ -371,8 +380,8 @@ def bounded_fit_rows(marked: DataFrame, marginals: DataFrame,
     output order. Returns collected Rows with a ``_fit_prob`` column.
     ``prob_col`` names the marginals column ("prob" for binary scores,
     "probs" for the k-ary probability vector)."""
-    fit_df = _cap_rows(marked.select("candidate_sid", *m_cols),
-                       max_fit_candidates)
+    fit_df, _ = _cap_rows(marked.select("candidate_sid", *m_cols),
+                          max_fit_candidates)
     # Deduplicate marginals before the join: a duplicate candidate_sid would
     # otherwise duplicate fit rows (inflating that candidate's weight and
     # overshooting the cap). max() is order-deterministic, unlike

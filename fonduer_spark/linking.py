@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .cache import cached, released
+from .session import rows_frame
 from .triples import normalize_surface
 
 
@@ -168,9 +169,8 @@ def connected_components(
                 if ra != rb:
                     lo, hi = (ra, rb) if ra < rb else (rb, ra)
                     parent[hi] = lo
-        spark = vertices.sparkSession
-        return spark.createDataFrame(
-            [(v, find(v)) for v in vs], "v string, component string")
+        return rows_frame(vertices.sparkSession, [(v, find(v)) for v in vs],
+                          "v string, component string")
     sym = edges.select("a", "b").unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )

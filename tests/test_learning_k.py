@@ -4,6 +4,8 @@ with soft_cross_entropy over k classes) + the bounded-fit contract on the
 logreg path (shared bounded_fit_rows sampler: deterministic xxhash64 cap,
 marginals joined BEFORE the collect)."""
 
+import warnings
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -203,6 +205,21 @@ def test_collect_csr_default_is_capped(spark):
     assert sids == sids2  # hash-stable subset
     # explicit opt-out collects everything
     assert len(collect_csr(feats, max_fit_candidates=None)[3]) == 30
+
+
+def test_collect_csr_warns_when_the_cap_drops_rows(spark):
+    from fonduer_spark.learning import collect_csr
+
+    feats = spark.createDataFrame(
+        [(f"c{i:03d}", ["f"], [1.0]) for i in range(30)],
+        "candidate_sid string, keys array<string>, values array<double>")
+    with pytest.warns(UserWarning, match="collect_csr") as rec:
+        sids = collect_csr(feats, max_fit_candidates=10)[3]
+    assert f"kept {len(sids)} of 30 rows" in str(rec.pop(UserWarning).message)
+    with warnings.catch_warnings(record=True) as rec:
+        warnings.simplefilter("always")
+        collect_csr(feats, max_fit_candidates=30)  # nothing dropped
+    assert not [w for w in rec if "collect_csr" in str(w.message)]
 
 
 def test_bounded_fit_rows_dedupes_duplicate_marginals(spark):

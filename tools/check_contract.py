@@ -3,11 +3,16 @@ on Spark and its oracle_sql() on DuckDB over the same sf dir; compare row
 counts, column names, and order-insensitive values.
 
 Usage: python tools/check_contract.py [sf_dir] [query ...]
+
+The session runs on local[$SPARK_GRAFT_CPUS] (every CPU this process may
+use when unset) with the test suite's 8g driver, so a full run fits a
+16 GB host.
 """
 
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
@@ -40,7 +45,9 @@ def main() -> int:
     from fonduer_spark.cache import released
     from fonduer_spark.session import get_spark
 
-    spark = get_spark(cores=16)
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS")
+                or len(os.sched_getaffinity(0)))
+    spark = get_spark(cores=cores, driver_memory="8g")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

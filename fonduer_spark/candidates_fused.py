@@ -194,7 +194,6 @@ def extract_candidates_auto(
     max_mentions_per_doc: int = 10_000,
     slim: bool = False,
     salt_buckets: int = 8,
-    persist: bool = True,
     probe: str = "lazy",
 ) -> DataFrame:
     """Fused candidate generation with hot-doc overflow ROUTED, not dropped.
@@ -211,13 +210,13 @@ def extract_candidates_auto(
     two physical forms (e.g. same_row_py / same_row); overflow docs use the
     column form so Catalyst pushes it into the join.
 
-    ``persist=True`` (default) caches the fused output so the marker scan
-    does not re-run the parse stage — the normal branch and the marker
-    branch both read the cached frame (one parse pass total). The result
-    reads that cache, so it stays until the caller's ``cache.released()``
-    block exits; with no block open it stays until the caller clears it.
+    The fused output is cached so the marker scan does not re-run the
+    parse stage — the normal branch and the marker branch both read the
+    cached frame (one parse pass total). The result reads that cache, so
+    it stays until the caller's ``cache.released()`` block exits; with no
+    block open it stays until the caller clears it.
 
-    ``probe="eager"`` (r07, requires ``persist``): run the fused stage AT
+    ``probe="eager"`` (r07): run the fused stage AT
     CALL TIME (one job — the same job the overflow branch's broadcast
     would trigger at first action anyway) and, when ZERO documents
     overflow, return the normal branch alone. The union's join-path
@@ -238,24 +237,20 @@ def extract_candidates_auto(
 
     if probe not in ("lazy", "eager"):
         raise ValueError(f"unknown probe mode {probe!r}: 'lazy' or 'eager'")
-    if probe == "eager" and not persist:
-        raise ValueError('probe="eager" requires persist=True')
-    fused = extract_candidates_fused(
+    fused = cached(extract_candidates_fused(
         docs, specs, candidate_type, type_a, type_b,
         throttler=py_throttler, self_relations=self_relations,
         nested_relations=nested_relations,
         symmetric_relations=symmetric_relations, split=split,
         render=render, parse_cfg=parse_cfg,
         max_mentions_per_doc=max_mentions_per_doc, slim=slim,
-    )
-    if persist:
-        fused = cached(fused)
+    ))
     kind = F.col("candidate_type")
     cols = SLIM_COLUMNS if slim else CANDIDATE_COLUMNS
     normal = fused.where(~kind.isin(OVERFLOW_TYPE, PARSE_ERROR_TYPE)) \
         .select(*cols)
     if probe == "eager":
-        # materializes the (persisted) fused frame now; the overflow branch
+        # materializes the (cached) fused frame now; the overflow branch
         # below would trigger the identical job at first action, so this
         # moves — not adds — a job, and lets the no-overflow case skip the
         # empty join-path subtree entirely. One full-width agg, NOT

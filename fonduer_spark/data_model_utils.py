@@ -16,83 +16,139 @@ structural}.py). Here the same helpers exist as:
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
 from typing import Iterable, List, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .parse import sentences_of
+
 
 # ---------------------------------------------------------------------------
-# 2. neighborhood vocabularies (one aggregation each, joinable by key)
+# 2. neighborhood vocabularies (one aggregation each, joinable by key).
+# Every tabular vocabulary — these LF helpers and featurize's tabular
+# library — aggregates the same n-grams (_cell_grams, the one explode of
+# cell sentences) the same way (_cell_vocab per cell, _axis_vocab per row or
+# column), like the reference computes a cell's row/col/head/cell n-grams
+# once in data_model_utils/tabular.py for both its LFs and its features.
 # ---------------------------------------------------------------------------
-def row_ngrams(sentences: DataFrame, n_max: int = 1) -> DataFrame:
-    """(url, table_sid, row) -> ngrams[]: every token appearing in the row
-    (reference get_row_ngrams, tabular.py:219-280, relationally)."""
-    return _axis_ngrams(sentences, "row_start", "row")
+_CELL_KEYS = ("url", "table_sid", "cell_sid", "row_start", "col_start")
+# axis key -> the coordinate that is 0 in the axis' head cell: a row's head
+# is its col-0 cell, a column's head its row-0 cell
+_HEAD_AT = {"row_start": "col_start", "col_start": "row_start"}
 
 
-def col_ngrams(sentences: DataFrame, n_max: int = 1) -> DataFrame:
-    """(url, table_sid, col) -> ngrams[] (reference get_col_ngrams)."""
-    return _axis_ngrams(sentences, "col_start", "col")
+def _lower_ngrams_col(words, n_max: int):
+    """Array column of lowercased 1..n_max-gram strings of a words array
+    (JVM-side; same construction as dedup.shingles)."""
+    toks = F.transform(words, lambda w: F.lower(w))
+
+    def ngrams_of(n: int):
+        # NB: the lambda must take exactly one arg — F.transform binds a
+        # second arg to the element INDEX, which would shadow a default
+        return F.when(
+            F.size(toks) >= n,
+            F.transform(
+                F.sequence(F.lit(0), F.size(toks) - n),
+                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
+            ),
+        ).otherwise(F.array().cast("array<string>"))
+
+    arrs = [toks] + [ngrams_of(n) for n in range(2, n_max + 1)]
+    return F.flatten(F.array(*arrs)) if len(arrs) > 1 else arrs[0]
 
 
-def _axis_ngrams(sentences: DataFrame, pos_col: str, out_name: str) -> DataFrame:
-    sent = (
-        sentences.where(F.col("ctx_type") == "sentence")
-        if "ctx_type" in sentences.columns else sentences
-    )
-    return (
-        sent.where(F.col("table_sid").isNotNull())
-        .select(
-            "url", "table_sid", F.col(pos_col).alias(out_name),
-            F.explode(F.transform(F.col("words"), lambda w: F.lower(w)))
-            .alias("tok"),
-        )
-        .groupBy("url", "table_sid", out_name)
-        .agg(F.array_distinct(F.collect_list("tok")).alias("ngrams"))
-    )
-
-
-def with_row_ngrams(candidates: DataFrame, sentences: DataFrame,
-                    slot: str = "b_") -> DataFrame:
-    """Join the row vocabulary of a slot's cell onto the candidates frame —
-    LFs can then test membership with pure array ops
-    (e.g. F.arrays_overlap(F.col('b_row_ngrams'), F.array(F.lit('storage'))))."""
-    vocab = row_ngrams(sentences).withColumnsRenamed(
-        {"ngrams": f"{slot}row_ngrams"})
-    return candidates.join(
-        vocab,
-        (candidates[f"{slot}url"] == vocab.url)
-        & (candidates[f"{slot}table_sid"] == vocab.table_sid)
-        & (candidates[f"{slot}row_start"] == vocab.row),
-        "left",
-    ).drop(vocab.url).drop(vocab.table_sid).drop(vocab.row)
+def _distinct(values: Column) -> Column:
+    """Aggregate: the distinct non-null values of a group, as an array."""
+    return F.array_distinct(F.collect_list(values))
 
 
 def _cell_grams(sentences: DataFrame, n_max: int) -> DataFrame:
     """Exploded (url, table_sid, cell_sid, row_start, col_start, g) frame of
-    lowercased 1..n_max-grams over tabular sentences."""
-    from .featurize import _lower_ngrams_col
+    lowercased 1..n_max-grams over the sentences of table cells — the one
+    explode every tabular vocabulary aggregates."""
+    return (
+        sentences_of(sentences).where(F.col("cell_sid").isNotNull())
+        .select(*_CELL_KEYS, F.explode(
+            _lower_ngrams_col(F.col("words"), n_max)).alias("g"))
+    )
 
-    sent = (
-        sentences.where(F.col("ctx_type") == "sentence")
-        if "ctx_type" in sentences.columns else sentences
+
+def _cell_vocab(sentences: DataFrame, n_max: int) -> DataFrame:
+    """(url, table_sid, cell_sid, row_start, col_start) -> ngrams[] of each
+    table cell with tokens."""
+    return (_cell_grams(sentences, n_max).groupBy(*_CELL_KEYS)
+            .agg(_distinct(F.col("g")).alias("ngrams")))
+
+
+def _axis_vocab(sentences: DataFrame, pos: str, n_max: int) -> DataFrame:
+    """(url, table_sid, row_start|col_start) -> ngrams[] of every cell on
+    the axis + head_ngrams[] of its head cell (null when it has none).
+
+    Alignment is keyed on row_start/col_start: a spanning cell contributes
+    at its start coordinate only (documented simplification vs the
+    reference's overlap walk)."""
+    head = F.col(_HEAD_AT[pos]) == 0
+    return (
+        _cell_grams(sentences, n_max).groupBy("url", "table_sid", pos)
+        .agg(_distinct(F.col("g")).alias("ngrams"),
+             F.when(F.max(head), _distinct(F.when(head, F.col("g"))))
+             .alias("head_ngrams"))
     )
-    return sent.where(F.col("cell_sid").isNotNull()).select(
-        "url", "table_sid", "cell_sid", "row_start", "col_start",
-        F.explode(_lower_ngrams_col(F.col("words"), n_max)).alias("g"),
-    )
+
+
+def _join_slot(candidates: DataFrame, vocab: DataFrame, slot: str,
+               keys: Sequence[str]) -> DataFrame:
+    """Left-join ``vocab`` onto one candidate slot: ``{slot}{k} == k`` for
+    every key ``k``. The vocab keys are dropped; its other columns join as
+    named, null where the slot has no match."""
+    tmp = {k: f"_vocab_{k}" for k in keys}
+    v = vocab.withColumnsRenamed(tmp)
+    cond = reduce(operator.and_, [F.col(f"{slot}{k}") == F.col(tmp[k])
+                                  for k in keys])
+    return candidates.join(v, cond, "left").drop(*tmp.values())
+
+
+def _with_axis(candidates: DataFrame, sentences: DataFrame, slot: str,
+               axis: str, n_max: int, vocab: str, name: str) -> DataFrame:
+    """Join the ``vocab`` column of the slot's row|col vocabulary onto the
+    candidates as ``name``."""
+    pos = f"{axis}_start"
+    v = _axis_vocab(sentences, pos, n_max).select(
+        "url", "table_sid", pos, F.col(vocab).alias(name))
+    return _join_slot(candidates, v, slot, ("url", "table_sid", pos))
+
+
+def _axis_ngrams(sentences: DataFrame, axis: str, n_max: int,
+                 vocab: str = "ngrams") -> DataFrame:
+    """(url, table_sid, row|col) -> ngrams[]: the axis' ``vocab`` column
+    ("ngrams" or "head_ngrams"; axes without a head cell drop out of the
+    latter) keyed the way the public helpers return it."""
+    out = _axis_vocab(sentences, f"{axis}_start", n_max)
+    if vocab == "head_ngrams":
+        out = out.where(F.col(vocab).isNotNull())
+    return out.select("url", "table_sid", F.col(f"{axis}_start").alias(axis),
+                      F.col(vocab).alias("ngrams"))
+
+
+def row_ngrams(sentences: DataFrame, n_max: int = 1) -> DataFrame:
+    """(url, table_sid, row) -> ngrams[]: every 1..n_max-gram appearing in
+    the row (reference get_row_ngrams, tabular.py:219-280, relationally)."""
+    return _axis_ngrams(sentences, "row", n_max)
+
+
+def col_ngrams(sentences: DataFrame, n_max: int = 1) -> DataFrame:
+    """(url, table_sid, col) -> ngrams[] (reference get_col_ngrams)."""
+    return _axis_ngrams(sentences, "col", n_max)
 
 
 def cell_ngrams(sentences: DataFrame, n_max: int = 1) -> DataFrame:
     """(url, cell_sid) -> ngrams[]: every 1..n_max-gram appearing in the cell
     (reference get_cell_ngrams, tabular.py:219-258, relationally — one
     aggregation instead of a per-candidate cell walk)."""
-    return (
-        _cell_grams(sentences, n_max)
-        .groupBy("url", "cell_sid")
-        .agg(F.array_distinct(F.collect_list("g")).alias("ngrams"))
-    )
+    return _cell_vocab(sentences, n_max).select("url", "cell_sid", "ngrams")
 
 
 def head_ngrams(sentences: DataFrame, axis: str = "row",
@@ -101,17 +157,16 @@ def head_ngrams(sentences: DataFrame, axis: str = "row",
     col-0 cell of each row (axis='row') or the row-0 cell of each column
     (axis='col') — reference get_head_ngrams (tabular.py:437-470).
     Join back on the mention's (url, table_sid, row_start|col_start)."""
-    ex = _cell_grams(sentences, n_max)
-    if axis == "row":
-        ex = ex.where(F.col("col_start") == 0)
-        key = F.col("row_start").alias("row")
-    else:
-        ex = ex.where(F.col("row_start") == 0)
-        key = F.col("col_start").alias("col")
-    return (
-        ex.groupBy("url", "table_sid", key)
-        .agg(F.array_distinct(F.collect_list("g")).alias("ngrams"))
-    )
+    return _axis_ngrams(sentences, axis, n_max, "head_ngrams")
+
+
+def with_row_ngrams(candidates: DataFrame, sentences: DataFrame,
+                    slot: str = "b_") -> DataFrame:
+    """Join the row vocabulary of a slot's cell onto the candidates frame —
+    LFs can then test membership with pure array ops
+    (e.g. F.arrays_overlap(F.col('b_row_ngrams'), F.array(F.lit('storage'))))."""
+    return _with_axis(candidates, sentences, slot, "row", 1, "ngrams",
+                      f"{slot}row_ngrams")
 
 
 def neighbor_cell_ngrams(sentences: DataFrame, dist: int = 1,
@@ -121,11 +176,7 @@ def neighbor_cell_ngrams(sentences: DataFrame, dist: int = 1,
     tabular.py:260-330: row_diff XOR col_diff, |diff| <= dist) — a bounded
     self-join on (url, table) with coordinate predicates instead of a
     per-candidate walk."""
-    pc = (
-        _cell_grams(sentences, n_max)
-        .groupBy("url", "table_sid", "cell_sid", "row_start", "col_start")
-        .agg(F.array_distinct(F.collect_list("g")).alias("ngrams"))
-    )
+    pc = _cell_vocab(sentences, n_max)
     a = pc.select(
         F.col("url").alias("u"), F.col("table_sid").alias("t"),
         "cell_sid", F.col("row_start").alias("r"), F.col("col_start").alias("c"),
@@ -154,24 +205,10 @@ def with_aligned_ngrams(candidates: DataFrame, sentences: DataFrame,
     the mention's row or column; non-tabular slots keep a null
     vocabulary). Two vocabulary aggregations + one array_union join —
     never a per-candidate cell walk."""
-    row_v = _axis_vocab_n(sentences, "row_start", "row", n_max)
-    col_v = _axis_vocab_n(sentences, "col_start", "col", n_max)
-    rv = row_v.withColumnsRenamed({"ngrams": "_row_ng"})
-    cv = col_v.withColumnsRenamed({"ngrams": "_col_ng"})
-    out = candidates.join(
-        rv,
-        (candidates[f"{slot}url"] == rv.url)
-        & (candidates[f"{slot}table_sid"] == rv.table_sid)
-        & (candidates[f"{slot}row_start"] == rv.row),
-        "left",
-    ).drop(rv.url).drop(rv.table_sid).drop(rv.row)
-    out = out.join(
-        cv,
-        (out[f"{slot}url"] == cv.url)
-        & (out[f"{slot}table_sid"] == cv.table_sid)
-        & (out[f"{slot}col_start"] == cv.col),
-        "left",
-    ).drop(cv.url).drop(cv.table_sid).drop(cv.col)
+    out = candidates
+    for axis in ("row", "col"):
+        out = _with_axis(out, sentences, slot, axis, n_max, "ngrams",
+                         f"_{axis}_ng")
     merged = F.array_distinct(F.concat(
         F.coalesce(F.col("_row_ng"), F.array().cast("array<string>")),
         F.coalesce(F.col("_col_ng"), F.array().cast("array<string>")),
@@ -182,16 +219,6 @@ def with_aligned_ngrams(candidates: DataFrame, sentences: DataFrame,
         .drop("_row_ng", "_col_ng")
 
 
-def _axis_vocab_n(sentences: DataFrame, pos_col: str, out_name: str,
-                  n_max: int) -> DataFrame:
-    """(url, table_sid, axis) -> 1..n_max-gram vocabulary over the axis."""
-    ex = _cell_grams(sentences, n_max)
-    return (
-        ex.groupBy("url", "table_sid", F.col(pos_col).alias(out_name))
-        .agg(F.array_distinct(F.collect_list("g")).alias("ngrams"))
-    )
-
-
 def with_head_ngrams(candidates: DataFrame, sentences: DataFrame,
                      slot: str = "b_", axis: str = "col",
                      n_max: int = 1) -> DataFrame:
@@ -199,27 +226,15 @@ def with_head_ngrams(candidates: DataFrame, sentences: DataFrame,
     frame as ``{slot}{axis}_head_ngrams`` — LFs can then test membership
     with pure array ops (the relational form of the reference's
     get_head_ngrams-driven LFs, e.g. hardware_lfs.py)."""
-    pos = "row_start" if axis == "row" else "col_start"
-    key = "row" if axis == "row" else "col"
-    vocab = head_ngrams(sentences, axis, n_max).withColumnsRenamed(
-        {"ngrams": f"{slot}{axis}_head_ngrams"})
-    return candidates.join(
-        vocab,
-        (candidates[f"{slot}url"] == vocab.url)
-        & (candidates[f"{slot}table_sid"] == vocab.table_sid)
-        & (candidates[f"{slot}{pos}"] == vocab[key]),
-        "left",
-    ).drop(vocab.url).drop(vocab.table_sid).drop(vocab[key])
+    return _with_axis(candidates, sentences, slot, axis, n_max,
+                      "head_ngrams", f"{slot}{axis}_head_ngrams")
 
 
 def neighbor_sentence_ngrams(sentences: DataFrame, d: int = 1) -> DataFrame:
     """(url, sentence stable_id) -> words of sentences within distance d by
     position (reference get_neighbor_sentence_ngrams, textual.py:167-197) —
     a window function, not a per-candidate walk."""
-    sent = (
-        sentences.where(F.col("ctx_type") == "sentence")
-        if "ctx_type" in sentences.columns else sentences
-    )
+    sent = sentences_of(sentences)
     w = Window.partitionBy("url").orderBy("position").rowsBetween(-d, d)
     return sent.select(
         "url",
@@ -280,10 +295,7 @@ def visual_words(sentences: DataFrame) -> DataFrame:
     """Exploded (url, word, page, left, top, right, bottom) frame over
     visually-annotated sentences (hOCR/PDF payloads) — the join source for
     the visual ngram vocabularies."""
-    sent = (
-        sentences.where(F.col("ctx_type") == "sentence")
-        if "ctx_type" in sentences.columns else sentences
-    )
+    sent = sentences_of(sentences)
     z = F.arrays_zip(
         F.transform(F.col("words"), lambda w: F.lower(w)).alias("w"),
         F.col("page").alias("pg"), F.col("left").alias("l"),

@@ -36,6 +36,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .cache import cached
+from .data_model_utils import (_axis_vocab, _cell_vocab, _join_slot,
+                               cell_ngrams)
+from .parse import sentences_of
 
 FEATURE_SCHEMA = T.StructType([
     T.StructField("candidate_sid", T.StringType(), False),
@@ -538,26 +541,6 @@ def _slot_prefixes(columns: Sequence[str]) -> List[str]:
     return [f"m{i}_" for i in idxs]
 
 
-def _lower_ngrams_col(words, n_max: int):
-    """Array column of lowercased 1..n_max-gram strings of a words array
-    (JVM-side; same construction as dedup.shingles)."""
-    toks = F.transform(words, lambda w: F.lower(w))
-
-    def ngrams_of(n: int):
-        # NB: the lambda must take exactly one arg — F.transform binds a
-        # second arg to the element INDEX, which would shadow a default
-        return F.when(
-            F.size(toks) >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - n),
-                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-
-    arrs = [toks] + [ngrams_of(n) for n in range(2, n_max + 1)]
-    return F.flatten(F.array(*arrs)) if len(arrs) > 1 else arrs[0]
-
-
 def visual_aligned_lemmas(sentences: DataFrame) -> DataFrame:
     """(sentence stable_id) -> aligned_lemmas[]: the lemmas visually aligned
     with each sentence, replacing the reference's per-document driver-side
@@ -579,11 +562,8 @@ def visual_aligned_lemmas(sentences: DataFrame) -> DataFrame:
     lingual parse that fills lemmas (regex_tagger/spaCy) — SimpleParser's
     empty lemmas yield no alignment vocabulary, like the reference without
     NLP."""
-    sent = (
-        sentences.where(F.col("ctx_type") == "sentence")
-        if "ctx_type" in sentences.columns else sentences
-    )
-    sent = sent.where(F.col("page").isNotNull() & (F.size("page") > 0))
+    sent = sentences_of(sentences).where(
+        F.col("page").isNotNull() & (F.size("page") > 0))
     base = sent.select(
         "url", "stable_id", "position", "lemmas",
         F.col("page").getItem(0).alias("pg"),
@@ -630,92 +610,50 @@ def visual_aligned_lemmas(sentences: DataFrame) -> DataFrame:
 
 
 def tabular_vocabs(sentences: DataFrame, n_max: int = NGRAM_MAX):
-    """One aggregation pass over tabular sentences -> three joinable
-    vocabulary frames replacing the reference's per-candidate cell walks
-    (utils_table.py:59-146, tabular.py:219-561):
+    """Three joinable vocabulary frames over tabular sentences, replacing
+    the reference's per-candidate cell walks (utils_table.py:59-146,
+    tabular.py:219-561):
 
     - row_vocab(url, table_sid, row_start) -> ngrams[] of every cell in the
-      row + head_ngrams[] of its col-0 cell (get_row_ngrams/get_head_ngrams);
+      row + head_ngrams[] of its col-0 cell, null when it has none
+      (get_row_ngrams/get_head_ngrams);
     - col_vocab(url, table_sid, col_start) -> ngrams[] + head_ngrams[] of
       its row-0 cell;
     - cell_vocab(url, cell_sid) -> ngrams[] of the cell (get_cell_ngrams).
 
-    Alignment is keyed on row_start/col_start: a spanning cell contributes
-    at its start coordinate only (documented simplification vs the
-    reference's overlap walk). Each frame is O(#cells) — orders of magnitude
-    smaller than candidates, so the joins back are cheap (broadcast-able
-    per-table at scale; AQE picks the strategy).
+    The same aggregations the LF helpers of data_model_utils read. Each
+    frame is O(#cells) — orders of magnitude smaller than candidates, so
+    the joins back are cheap (AQE picks the strategy).
     """
-    sent = (
-        sentences.where(F.col("ctx_type") == "sentence")
-        if "ctx_type" in sentences.columns else sentences
-    )
-    sent = sent.where(F.col("cell_sid").isNotNull())
-    ex = sent.select(
-        "url", "table_sid", "cell_sid", "row_start", "col_start",
-        F.explode(_lower_ngrams_col(F.col("words"), n_max)).alias("g"),
-    )
-    row_vocab = ex.groupBy("url", "table_sid", "row_start").agg(
-        F.array_distinct(F.collect_list("g")).alias("ngrams"),
-        F.array_distinct(
-            F.collect_list(F.when(F.col("col_start") == 0, F.col("g")))
-        ).alias("head_ngrams"),
-    )
-    col_vocab = ex.groupBy("url", "table_sid", "col_start").agg(
-        F.array_distinct(F.collect_list("g")).alias("ngrams"),
-        F.array_distinct(
-            F.collect_list(F.when(F.col("row_start") == 0, F.col("g")))
-        ).alias("head_ngrams"),
-    )
-    cell_vocab = ex.groupBy("url", "cell_sid").agg(
-        F.array_distinct(F.collect_list("g")).alias("ngrams"),
-    )
-    return row_vocab, col_vocab, cell_vocab
+    return (_axis_vocab(sentences, "row_start", n_max),
+            _axis_vocab(sentences, "col_start", n_max),
+            cell_ngrams(sentences, n_max))
 
 
 def _join_tabular_vocabs(df: DataFrame, sentences: DataFrame,
                          n_max: int,
                          slots: Sequence[str] = ("a_", "b_")) -> DataFrame:
-    """Left-join the row/col/cell vocabularies onto both candidate slots.
+    """Left-join the row/col/cell vocabularies onto every candidate slot.
 
-    The three vocabularies are pre-joined into ONE per-cell frame first
-    (cells are orders of magnitude fewer than candidates), so the heavy
-    candidate side shuffles once per slot instead of three times."""
-    row_v, col_v, cell_v = tabular_vocabs(sentences, n_max)
-    sent = (
-        sentences.where(F.col("ctx_type") == "sentence")
-        if "ctx_type" in sentences.columns else sentences
-    )
-    cells = (
-        sent.where(F.col("cell_sid").isNotNull())
-        .select("url", "table_sid", "cell_sid", "row_start", "col_start")
-        .distinct()
-    )
-    per_cell = (
-        cells
-        .join(cell_v.withColumnsRenamed({"ngrams": "cell_ngrams"}),
-              ["url", "cell_sid"], "left")
-        .join(row_v.withColumnsRenamed(
-            {"ngrams": "row_ngrams", "head_ngrams": "row_head_ngrams"}),
-            ["url", "table_sid", "row_start"], "left")
-        .join(col_v.withColumnsRenamed(
-            {"ngrams": "col_ngrams", "head_ngrams": "col_head_ngrams"}),
-            ["url", "table_sid", "col_start"], "left")
-        .select("url", "cell_sid", "cell_ngrams", "row_ngrams",
-                "row_head_ngrams", "col_ngrams", "col_head_ngrams")
-    )
+    The vocabularies are pre-joined into ONE per-cell frame first (cells
+    are orders of magnitude fewer than candidates), so the heavy candidate
+    side shuffles once per slot instead of three times."""
+    per_cell = _cell_vocab(sentences, n_max).withColumnRenamed(
+        "ngrams", "cell_ngrams")
+    for axis in ("row", "col"):
+        pos = f"{axis}_start"
+        per_cell = per_cell.join(
+            _axis_vocab(sentences, pos, n_max).withColumnsRenamed(
+                {"ngrams": f"{axis}_ngrams",
+                 "head_ngrams": f"{axis}_head_ngrams"}),
+            ["url", "table_sid", pos], "left")
     vocab_cols = ("cell_ngrams", "row_ngrams", "row_head_ngrams",
                   "col_ngrams", "col_head_ngrams")
     for p in slots:
-        pc = per_cell.select(
-            F.col("url").alias("_vu"), F.col("cell_sid").alias("_vc"),
-            *[F.col(c).alias(f"{p}{c}") for c in vocab_cols],
-        )
-        df = df.join(
-            pc,
-            (df[f"{p}url"] == pc._vu) & (df[f"{p}cell_sid"] == pc._vc),
-            "left",
-        ).drop("_vu", "_vc")
+        slot_vocab = per_cell.select(
+            "url", "cell_sid",
+            *[F.col(c).alias(f"{p}{c}") for c in vocab_cols])
+        df = _join_slot(df, slot_vocab, p, ("url", "cell_sid"))
     return df
 
 
@@ -761,10 +699,7 @@ def featurize(
         # corpus re-parses). MEMORY_AND_DISK, so at scale it spills
         # instead of recomputing. The result reads it, so it stays cached
         # until the caller's released() block exits (cache.py).
-        sentences = cached(
-            sentences.where(F.col("ctx_type") == "sentence")
-            if "ctx_type" in sentences.columns else sentences
-        )
+        sentences = cached(sentences_of(sentences))
     have_words = False
     if sentences is not None and ("textual" in libs or "lingual" in libs):
         sent = sentences

@@ -18,6 +18,7 @@ LabelModel — SURVEY.md §2.8).
 
 from __future__ import annotations
 
+import warnings
 from typing import Callable, Dict, Iterator, List, Mapping, Optional, Sequence, Union
 
 import pandas as pd
@@ -177,6 +178,21 @@ def apply_lfs(
     )
 
 
+def _n_votes() -> Column:
+    """Non-abstaining votes in the stored 0-shifted ``values`` array
+    (ABSTAIN is stored 0)."""
+    return F.size(F.filter("values", lambda v: v != 0))
+
+
+def _majority_prob() -> Column:
+    """Majority-vote P(true) over ``values``: the share of non-abstaining
+    votes that are TRUE (stored 2 = user 1; stored 1 = user 0), 0.5 when
+    every LF abstains."""
+    n_votes = _n_votes()
+    pos = F.size(F.filter("values", lambda v: v == 2))
+    return F.when(n_votes > 0, pos / n_votes).otherwise(F.lit(0.5))
+
+
 def with_marginals(
     candidates: DataFrame,
     lfs: Mapping[str, Union[Column, PandasLF]],
@@ -187,10 +203,7 @@ def with_marginals(
     df = _eval_lfs(candidates, lfs)
     keys, values = _label_arrays(lfs)
     df = df.withColumn("keys", keys).withColumn("values", values)
-    votes = F.filter("values", lambda v: v != 0)
-    pos = F.size(F.filter("values", lambda v: v == 2))
-    prob = F.when(F.size(votes) > 0, pos / F.size(votes)).otherwise(F.lit(0.5))
-    df = df.withColumn("prob", prob)
+    df = df.withColumn("prob", _majority_prob())
     return df.select(*[c for c in df.columns if not c.startswith("_lf_")])
 
 
@@ -210,28 +223,26 @@ def majority_vote_marginals(labels: DataFrame) -> DataFrame:
 
     Pure column arithmetic over the stored 0-shifted values array — a single
     narrow projection, no shuffle."""
-    votes = F.filter("values", lambda v: v != 0)  # drop ABSTAIN (stored 0)
-    n_votes = F.size(votes)
-    # stored 2 = user 1 (TRUE); stored 1 = user 0 (FALSE)
-    pos = F.size(F.filter("values", lambda v: v == 2))
-    prob = F.when(n_votes > 0, pos / n_votes).otherwise(F.lit(0.5))
     return labels.select(
         "candidate_sid", "candidate_type", "url",
-        prob.alias("prob"),
-        n_votes.alias("n_votes"),
+        _majority_prob().alias("prob"),
+        _n_votes().alias("n_votes"),
     )
 
 
 def snorkel_label_model_marginals(labels: DataFrame) -> DataFrame:
     """Generative label model via snorkel's LabelModel when installed
     (the reference fits snorkel.labeling.model.LabelModel on the collected
-    matrix, tests/e2e/test_e2e.py:317-320); falls back to majority vote
-    otherwise. Collection is O(#candidates x #LFs) — the reference's own
-    driver-side fit point."""
+    matrix, tests/e2e/test_e2e.py:317-320); without snorkel it warns and
+    returns majority_vote_marginals. Collection is O(#candidates x #LFs) —
+    the reference's own driver-side fit point."""
     try:
         import numpy as np
         from snorkel.labeling.model import LabelModel  # type: ignore
-    except Exception:
+    except ImportError:
+        warnings.warn("snorkel_label_model_marginals: snorkel is not "
+                      "installed; falling back to majority vote",
+                      UserWarning, stacklevel=2)
         return majority_vote_marginals(labels)
 
     rows = labels.select("candidate_sid", "values").collect()

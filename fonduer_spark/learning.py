@@ -281,12 +281,10 @@ def marked_slot_tokens(candidates: DataFrame,
     Output: candidate_sid, url, and one ``m{i}_marked`` array per slot.
     """
     from .featurize import _slot_prefixes
+    from .parse import sentences_of
 
     slots = _slot_prefixes(candidates.columns)
-    sent = (
-        sentences.where(F.col("ctx_type") == "sentence")
-        if "ctx_type" in sentences.columns else sentences
-    )
+    sent = sentences_of(sentences)
     df = candidates
     out_cols = [F.col("candidate_sid"), F.col("url")]
     for i, p in enumerate(slots):

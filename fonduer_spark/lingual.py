@@ -3,9 +3,9 @@
 Mirrors the reference's pluggable ``LingualParser`` surface
 (/root/reference/src/fonduer/parser/lingual_parser/): a ``SimpleParser`` that
 splits on a delimiter and tokenizes on whitespace (simple_parser.py:19-45),
-and an optional spaCy-backed parser gated behind an import-try (spaCy is not
-installed in this container; the reference itself falls back to SimpleParser
-when spaCy lacks tokenizer support, parser.py:211-213).
+and a deterministic ``RegexTaggerParser``. ``ParseConfig.make_lingual_parser``
+is the one factory; the spaCy-backed parser lives in ``spacy_lingual`` and is
+constructed explicitly where spaCy is installed, never substituted silently.
 """
 
 from __future__ import annotations
@@ -118,19 +118,3 @@ class RegexTaggerParser(SimpleParser):
     def has_NLP_support(self) -> bool:
         return True
 
-
-def make_lingual_parser(language: str = "en") -> LingualParser:
-    """Return a spaCy-backed parser when available, else SimpleParser.
-
-    The spaCy path mirrors reference spacy_parser.py (model loaded once per
-    executor process); the container has no spaCy so SimpleParser is the
-    deterministic default, exactly like the reference fallback.
-    """
-    try:  # pragma: no cover - spaCy absent in this container
-        import spacy  # noqa: F401
-
-        from .spacy_lingual import SpacyLingualParser  # type: ignore
-
-        return SpacyLingualParser(language)
-    except Exception:
-        return SimpleParser()

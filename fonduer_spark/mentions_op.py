@@ -22,7 +22,7 @@ from pyspark.sql import types as T
 
 from .matchers import Matcher
 from .mention_spaces import MentionSpace
-from .parse import ParseConfig, decode_html, parse_document
+from .parse import ParseConfig, decode_html, parse_document, sentences_of
 from .spans import ImplicitSpan, SentenceView, Span
 
 log = logging.getLogger(__name__)
@@ -230,9 +230,8 @@ def extract_mentions(
                 out.extend(iter_sentence_mentions(row, spec_list, fast_list))
             yield pd.DataFrame(out, columns=MENTION_COLUMNS)
 
-    sel = sentences.where(sentences.ctx_type == "sentence") \
-        if "ctx_type" in sentences.columns else sentences
-    out = sel.select(*_SENTENCE_INPUT_COLS).mapInPandas(fn, MENTION_SCHEMA)
+    out = sentences_of(sentences).select(*_SENTENCE_INPUT_COLS) \
+        .mapInPandas(fn, MENTION_SCHEMA)
     if dedup:
         out = out.dropDuplicates(["mention_type", "stable_id"])
     return out

@@ -664,3 +664,11 @@ def parse_webpages(pages: DataFrame, cfg: Optional[ParseConfig] = None) -> DataF
 def contexts_of(parsed: DataFrame, ctx_type: str) -> DataFrame:
     """View helper: slice the unified frame by context type."""
     return parsed.where(parsed.ctx_type == ctx_type)
+
+
+def sentences_of(frame: DataFrame) -> DataFrame:
+    """The sentence rows of a unified context frame; a frame without a
+    ``ctx_type`` column is taken as a sentence slice already and returned
+    as is."""
+    return (contexts_of(frame, "sentence") if "ctx_type" in frame.columns
+            else frame)

@@ -102,86 +102,56 @@ def kg_stages(
     spark: SparkSession,
     sf_dir: str,
     max_docs: Optional[int] = None,
-    salt_buckets: int = 0,
     replicate: int = 1,
-    candidate_strategy: str = "fused",
-    label_model: str = "majority",
 ) -> Mapping[str, DataFrame]:
     """Build every stage lazily; returns them as a LazyStages mapping.
 
-    ``label_model``: "majority" (the default, a pure projection — and what
-    the gold oracle assumes for the default LFs) or "triplet" (the
-    accuracy-weighted generative model; adds one aggregation pass at fit).
-
-    ``candidate_strategy``:
-    - "fused" (default): the candidate product is document-local, so
-      render+parse+mentions+product+filters run in ONE flatMap-style Python
-      stage — zero shuffles before the triple aggregation (no mention
-      materialization/persist). Hot docs above the per-doc mention cap route
-      to the join path.
-    - "join": materialize mentions, then the relational equi-join on url
-      with column-predicate throttlers (explicit salting + AQE skew-join) —
-      the general path for cross-document relations; also what salt_buckets
-      implies.
-    Both produce identical rows (tested + oracle-checked).
+    ``candidates`` is the fused path: the candidate product is
+    document-local, so render+parse+mentions+product+filters run in ONE
+    flatMap-style Python stage — zero shuffles before the triple
+    aggregation. Hot docs above the per-doc mention cap route to the
+    relational join path (candidates_op.extract_candidates, explicit
+    salting + AQE skew-join), never dropped. ``scored`` is majority vote
+    over default_lfs (a pure projection, and what the gold oracle assumes).
+    The join path and the weighted label model are public calls of their
+    own (extract_candidates over ``mentions``, labeling.triplet_marginals).
     """
+    from .candidates_fused import extract_candidates_auto, same_row_py
+    from .parse import ParseConfig
+
     pages = make_web_pages(spark, sf_dir, max_docs, replicate=replicate)
     parsed = parse_webpages(pages)
     sentences = contexts_of(parsed, "sentence")
     docs = load_docs(spark, sf_dir, max_docs, replicate)
-    st = None  # set below; builders close over it for cross-stage reuse
 
     # mentions as a standalone frame (fused render+parse+extract — one
-    # python stage); persisted lazily because the join strategy reads it
-    # twice. Only constructed if a caller accesses it.
+    # python stage); cached because callers read it more than once. Only
+    # constructed if a caller accesses it.
     def build_mentions() -> DataFrame:
         return cached(extract_mentions_fused(docs, default_mention_specs()))
 
-    if candidate_strategy == "join" or salt_buckets > 0:
-        def build_candidates() -> DataFrame:
-            return extract_candidates(
-                st["mentions"], "part_temp", "part", "temp",
-                throttler=same_row, throttler_kind="column",
-                salt_buckets=salt_buckets,
-            )
+    # probe="eager" (r07): the fused stage materializes at stage-
+    # construction time (the job the overflow branch's broadcast would run
+    # anyway) and the usual zero-overflow case skips the empty join-path
+    # subtree — which is why stage construction is lazy (LazyStages):
+    # callers that never touch candidates never pay the probe.
+    def build_candidates(**kw) -> DataFrame:
+        return extract_candidates_auto(
+            docs, default_mention_specs(), "part_temp", "part", "temp",
+            py_throttler=same_row_py, column_throttler=same_row,
+            probe="eager", **kw)
 
-        def build_scored_input() -> DataFrame:
-            return st["candidates"]
-    else:
-        from .candidates_fused import extract_candidates_auto, same_row_py
-
-        # auto = fused single-stage path + hot-doc overflow routed through
-        # the salted join path (never dropped); the per-doc mention cap only
-        # bounds the quadratic product of the fused stage. probe="eager"
-        # (r07): the fused stage materializes at stage-construction time
-        # (the job the overflow branch's broadcast would run anyway) and
-        # the usual zero-overflow case skips the empty join-path subtree —
-        # which is why stage construction is lazy now (LazyStages):
-        # callers that never touch candidates never pay the probe.
-        def build_candidates(**kw) -> DataFrame:
-            return extract_candidates_auto(
-                docs, default_mention_specs(), "part_temp", "part", "temp",
-                py_throttler=same_row_py, column_throttler=same_row,
-                probe="eager", **kw)
-
-        # label/triple path reads a SLIM variant (8 columns instead of 46):
-        # same rows, ~7x less pandas/Arrow transfer. structural=False skips
-        # xpath/sibling/ancestor attach entirely — the label/triple path
-        # never reads them, and the DOM walks are ~15% of the fused stage's
-        # CPU (measured at 32 cores). The wide `candidates` frame keeps the
-        # full structural parse for featurization queries.
-        from .parse import ParseConfig
-
-        def build_scored_input() -> DataFrame:
-            return build_candidates(
-                slim=True, parse_cfg=ParseConfig(structural=False))
-
+    # label/triple path reads a SLIM variant (8 columns instead of 46):
+    # same rows, ~7x less pandas/Arrow transfer. structural=False skips
+    # xpath/sibling/ancestor attach entirely — the label/triple path never
+    # reads them, and the DOM walks are ~15% of the fused stage's CPU
+    # (measured at 32 cores). The wide `candidates` frame keeps the full
+    # structural parse for featurization queries.
     def build_scored() -> DataFrame:
-        if label_model == "triplet":
-            from .labeling import triplet_marginals
-
-            return triplet_marginals(build_scored_input(), default_lfs())
-        return with_marginals(build_scored_input(), default_lfs())
+        return with_marginals(
+            build_candidates(slim=True,
+                             parse_cfg=ParseConfig(structural=False)),
+            default_lfs())
 
     st = LazyStages({
         "web_pages": lambda: pages,

@@ -9,16 +9,18 @@ Mirrors the reference SpacyParser
 - batching is bounded by the model's ``max_length`` chars
   (spacy_parser.py:133-189).
 
-This module only imports when spaCy is installed; ``make_lingual_parser``
-falls back to SimpleParser otherwise, exactly like the reference fallback
-(parser.py:211-213).
+This module only imports when spaCy is installed. Nothing selects it
+implicitly: ``ParseConfig.make_lingual_parser`` builds the SimpleParser /
+RegexTaggerParser, and a caller that wants spaCy constructs
+``SpacyLingualParser`` itself, so a missing spaCy is an ImportError rather
+than a silent fallback.
 """
 
 from __future__ import annotations
 
 from typing import Any, Dict, Iterator
 
-import spacy  # noqa: F401  (import error handled by make_lingual_parser)
+import spacy  # noqa: F401  (ImportError when spaCy is absent)
 
 from .lingual import LingualParser
 

@@ -69,28 +69,14 @@ def materialize_triples(
     prob_threshold: float = 0.5,
     canonicalize: Optional[Callable[[Column], Column]] = None,
 ) -> DataFrame:
-    """candidates (a_* subj mention, b_* obj mention, prob) -> triples.
+    """candidates (a_* subj mention, b_* obj mention, prob) -> triples of
+    one relation: materialize_triples_multi with the single rule
+    ``(pred, prob >= prob_threshold)``.
 
     Output grain: one row per (subj, pred, obj) with max prob and one
     provenance candidate_sid per source url collected into an array —
     aggregation is a single groupBy on the canonical triple key.
     """
-    canon = canonicalize or normalize_surface
-    return (
-        candidates_with_prob
-        .where(F.col("prob") >= prob_threshold)
-        .select(
-            canon(F.col("a_span_text")).alias("subj"),
-            F.lit(pred).alias("pred"),
-            canon(F.col("b_span_text")).alias("obj"),
-            F.col("prob"),
-            F.col("candidate_sid"),
-            F.col("url"),
-        )
-        .groupBy("subj", "pred", "obj")
-        .agg(
-            F.max("prob").alias("prob"),
-            F.count(F.lit(1)).alias("n_provenance"),
-            F.slice(F.collect_list("candidate_sid"), 1, 16).alias("provenance"),
-        )
-    )
+    return materialize_triples_multi(
+        candidates_with_prob, [(pred, F.col("prob") >= prob_threshold)],
+        canonicalize)

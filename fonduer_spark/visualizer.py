@@ -25,6 +25,8 @@ from typing import Dict, Iterable, List, Optional, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .parse import sentences_of
+
 # (page, top, bottom, left, right) — the reference's box 5-tuple layout
 # (visualizer.py:44,55).
 Box = Tuple[int, int, int, int, int]
@@ -91,10 +93,7 @@ def display_words(sentences: DataFrame, url: str,
     """HTML overlay of every word bbox of one document (reference
     display_words, visualizer.py:93-119), each rect labeled with its word;
     ``target`` filters to one word form like the reference's ``target``."""
-    sent = (
-        sentences.where(F.col("ctx_type") == "sentence")
-        if "ctx_type" in sentences.columns else sentences
-    )
+    sent = sentences_of(sentences)
     rows = (
         sent.where((F.col("url") == url) & F.col("page").isNotNull())
         .select("position", "words", "page", "top", "bottom", "left", "right")

@@ -154,9 +154,10 @@ def test_snorkel_fallback_marginals(spark, mentions_df):
     cands = extract_candidates(mentions_df, "AB", "A", "B")
     lfs = {"lf": F.when(F.col("b_span_text").try_cast("int") > 80, 1).otherwise(0)}
     labels = apply_lfs(cands, lfs)
-    # snorkel absent in this container -> exact majority-vote fallback
-    a = {(r.candidate_sid, r.prob)
-         for r in snorkel_label_model_marginals(labels).collect()}
+    # snorkel absent -> a warning, then the exact majority-vote fallback
+    with pytest.warns(UserWarning, match="falling back to majority vote"):
+        fallback = snorkel_label_model_marginals(labels)
+    a = {(r.candidate_sid, r.prob) for r in fallback.collect()}
     b = {(r.candidate_sid, r.prob)
          for r in majority_vote_marginals(labels).collect()}
     assert a == b

@@ -121,6 +121,51 @@ def test_head_ngram_lf_helpers(spark, stages):
             assert "max" in r.b_col_head_ngrams
 
 
+def test_row_col_ngrams_honour_n_max(spark, stages):
+    from fonduer_spark.data_model_utils import col_ngrams, row_ngrams
+
+    sent = stages["sentences"]
+    table = F.col("table_sid") == "https://fixture.test/d000001::table:0"
+    header = row_ngrams(sent, n_max=2).where(table & (F.col("row") == 0))
+    assert {"min temp", "max temp", "part"} <= set(header.first().ngrams)
+    unigrams = row_ngrams(sent).where(table & (F.col("row") == 0)).first()
+    assert "min temp" not in unigrams.ngrams and "min" in unigrams.ngrams
+    col1 = col_ngrams(sent, n_max=2).where(table & (F.col("col") == 1))
+    assert "min temp" in col1.first().ngrams
+
+
+def test_lf_helper_vocabs_match_featurize_columns(spark, stages):
+    """with_row_ngrams, with_head_ngrams and cell_ngrams give a slot the
+    same arrays that featurize joins as row_ngrams / col_head_ngrams /
+    cell_ngrams: one set of vocabulary aggregations serves both."""
+    from fonduer_spark.data_model_utils import (
+        cell_ngrams, with_head_ngrams, with_row_ngrams)
+    from fonduer_spark.featurize import _join_tabular_vocabs
+
+    sent = stages["sentences"]
+    cands = stages["candidates"]
+    cands = cands.select("candidate_sid", *[
+        c for c in cands.columns if c.startswith("b_")])
+    feat = _join_tabular_vocabs(cands, sent, 1, slots=("b_",)).select(
+        "candidate_sid", "b_row_ngrams", "b_col_head_ngrams", "b_cell_ngrams")
+    own = cell_ngrams(sent).withColumnsRenamed(
+        {"url": "b_url", "cell_sid": "b_cell_sid", "ngrams": "b_cell_ngrams"})
+    lf = (
+        with_head_ngrams(with_row_ngrams(cands, sent, "b_"), sent, "b_", "col")
+        .join(own, ["b_url", "b_cell_sid"], "left")
+        .select("candidate_sid", "b_row_ngrams", "b_col_head_ngrams",
+                "b_cell_ngrams")
+    )
+
+    def as_sets(frame):
+        return {r[0]: tuple(None if a is None else frozenset(a)
+                            for a in r[1:]) for r in frame.collect()}
+
+    want = as_sets(feat)
+    assert as_sets(lf) == want
+    assert want and all(all(v) for v in want.values())
+
+
 def test_isolated_and_combination_window_features(spark):
     """W_LEFT/W_RIGHT isolated + W_LEMMA_L_i_R_j combination features over a
     lemma-annotated sentence (reference textual_features.py:160-238)."""

@@ -126,12 +126,6 @@ def test_serve_raises_on_failed_page():
         build_default_model().classify(url_of(BAD), MALFORMED)
 
 
-def test_eager_probe_requires_persist(docs):
-    with pytest.raises(ValueError, match="requires persist"):
-        _candidates(docs, extract_candidates_auto, probe="eager",
-                    persist=False)
-
-
 # -- serve is the batch kernel -----------------------------------------------
 def test_serve_honours_lingual_config(spark):
     """Under the regex tagger, NER-style matchers find mentions; serving

@@ -168,14 +168,28 @@ def test_triplet_marginals_abstain_scores_prior(spark):
 
 
 def test_kg_stages_triplet_label_model_option(spark):
-    """kg_stages(label_model='triplet') swaps the accuracy-weighted model
-    into the pipeline and still recovers exactly the gold triples on the
-    fixture (the strong sign/range LFs dominate the constant part-format
-    LF), matching the majority-vote path's output."""
-    from fonduer_spark.pipeline import kg_stages
+    """triplet_marginals over the slim candidates kg_stages scores swaps the
+    accuracy-weighted model into the pipeline and still recovers exactly
+    the gold triples on the fixture (the strong sign/range LFs dominate the
+    constant part-format LF), matching the majority-vote path's output."""
+    from fonduer_spark.candidates_fused import (extract_candidates_auto,
+                                                same_row_py)
+    from fonduer_spark.candidates_op import same_row
+    from fonduer_spark.corpus import PRED, load_docs
+    from fonduer_spark.labeling import triplet_marginals
+    from fonduer_spark.parse import ParseConfig
+    from fonduer_spark.pipeline import (default_lfs, default_mention_specs,
+                                        kg_stages)
+    from fonduer_spark.triples import materialize_triples
 
     sf = "/root/testdata/sf0.001"
-    tri = kg_stages(spark, sf, max_docs=30, label_model="triplet")["triples"]
+    slim = extract_candidates_auto(
+        load_docs(spark, sf, 30), default_mention_specs(),
+        "part_temp", "part", "temp", py_throttler=same_row_py,
+        column_throttler=same_row, slim=True,
+        parse_cfg=ParseConfig(structural=False))
+    tri = materialize_triples(triplet_marginals(slim, default_lfs()),
+                              pred=PRED, prob_threshold=0.5)
     maj = kg_stages(spark, sf, max_docs=30)["triples"]
     got = {(r.subj, r.obj) for r in tri.select("subj", "obj").collect()}
     want = {(r.subj, r.obj) for r in maj.select("subj", "obj").collect()}

@@ -31,10 +31,13 @@ def test_broadcast_join_for_small_dim(spark):
 
 
 def test_throttler_fused_into_join_condition(spark):
+    from fonduer_spark.candidates_op import extract_candidates, same_row
     from fonduer_spark.pipeline import kg_stages
 
-    st = kg_stages(spark, SF, max_docs=10, candidate_strategy="join")
-    plan = plan_of(st["candidates"])
+    st = kg_stages(spark, SF, max_docs=10)
+    plan = plan_of(extract_candidates(
+        st["mentions"], "part_temp", "part", "temp",
+        throttler=same_row, throttler_kind="column"))
     # same_table equality became part of the join key (equi-join on
     # table_sid + url), and the row-overlap predicate sits in the join
     # condition rather than a post-join filter

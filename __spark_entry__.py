@@ -1001,6 +1001,13 @@ def q_kg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _url_sql(doc_id: str) -> str:
+    """DuckDB twin of corpus.url_of over the SQL expression ``doc_id``.
+    printf, not lpad: lpad truncates to its width, so id 1000000 would
+    become d100000 — doc 100000's url."""
+    return f"'https://fixture.test/d' || printf('%06d', {doc_id})"
+
+
 _KG_CELLS_CTE = """
 WITH docs AS (SELECT doc_id AS i FROM documents),
 tabs AS (
@@ -1019,7 +1026,7 @@ SELECT part, CAST(count(*) AS BIGINT) AS n FROM (
 """
 
 _KG_CANDS_SQL = _KG_CELLS_CTE + """
-SELECT 'https://fixture.test/d' || lpad(CAST(i AS VARCHAR), 6, '0') AS url,
+SELECT """ + _url_sql("i") + """ AS url,
        CAST(2 * count(*) AS BIGINT) AS n_candidates
 FROM cells GROUP BY i ORDER BY url
 """
@@ -1030,7 +1037,7 @@ FROM cells GROUP BY i ORDER BY url
 # percentiles divide by the reference's Letter-page defaults 792/612.
 _KG_VISUAL_PCT_SQL = _KG_CELLS_CTE + """
 , slots AS (SELECT i, r, unnest([110, 210]) AS bleft FROM cells)
-SELECT 'https://fixture.test/d' || lpad(CAST(i AS VARCHAR), 6, '0') AS url,
+SELECT """ + _url_sql("i") + """ AS url,
        round((20*r + 10) / 792.0, 6) AS vert_pct,
        round(bleft / 612.0, 6) AS horz_pct,
        CAST(count(*) AS BIGINT) AS n
@@ -1041,7 +1048,7 @@ FROM slots GROUP BY 1, 2, 3 ORDER BY url, vert_pct, horz_pct
 # sits at (row r+1, col 0) and whose object cell at cols 1 (tmin) and 2
 # (tmax); no mention-bearing cell spans rows/cols, so min == max.
 _KG_ROWCOL_MINMAX_SQL = _KG_CELLS_CTE + """
-SELECT 'https://fixture.test/d' || lpad(CAST(i AS VARCHAR), 6, '0') AS url,
+SELECT """ + _url_sql("i") + """ AS url,
        CAST(2 * count(*) AS BIGINT) AS n,
        CAST(SUM(2 * (r + 1)) AS BIGINT) AS sum_row_min,
        CAST(SUM(2 * (r + 1)) AS BIGINT) AS sum_row_max,
@@ -1127,7 +1134,7 @@ _KG_MULTICLASS_SQL = _KG_MULTICLASS_CTE + """
     2 + (CASE WHEN m5 IS NULL THEN 0 ELSE 1 END) AS nv
   FROM lf
 )
-SELECT 'https://fixture.test/d' || lpad(CAST(i AS VARCHAR), 6, '0') AS url,
+SELECT """ + _url_sql("i") + """ AS url,
        subj, v AS obj,
        CASE WHEN c0 >= c1 AND c0 >= c2 THEN 'cold'
             WHEN c1 >= c2 THEN 'warm' ELSE 'hot' END AS pred_value,
@@ -1217,7 +1224,7 @@ pick AS (
       MAX(CASE WHEN cls = 2 THEN z END) AS z2
     FROM z GROUP BY i, subj, v)
 )
-SELECT 'https://fixture.test/d' || lpad(CAST(i AS VARCHAR), 6, '0') AS url,
+SELECT """ + _url_sql("i") + """ AS url,
        subj, v AS obj, pred_value
 FROM pick ORDER BY url, subj, obj
 """
@@ -1294,7 +1301,7 @@ z AS (
     x1*w12 + x2*w22 + x3*w32 + x4*w42 AS z2
   FROM x CROSS JOIN w
 )
-SELECT 'https://fixture.test/d' || lpad(CAST(i AS VARCHAR), 6, '0') AS url,
+SELECT """ + _url_sql("i") + """ AS url,
        subj, v AS obj,
        CASE WHEN z0 >= z1 AND z0 >= z2 THEN 'cold'
             WHEN z1 >= z2 THEN 'warm' ELSE 'hot' END AS pred_value
@@ -1339,7 +1346,7 @@ agg AS (
     SUM(12) AS rel
   FROM kf GROUP BY i
 )
-SELECT 'https://fixture.test/d' || lpad(CAST(i AS VARCHAR), 6, '0') AS url,
+SELECT """ + _url_sql("i") + """ AS url,
        fam AS family, CAST(n AS BIGINT) AS n
 FROM (
   SELECT i, 'e0_textual' AS fam, e0_textual AS n FROM agg
@@ -1376,7 +1383,7 @@ agg AS (
     SUM(6) AS rel
   FROM kf GROUP BY i
 )
-SELECT 'https://fixture.test/d' || lpad(CAST(i AS VARCHAR), 6, '0') AS url,
+SELECT """ + _url_sql("i") + """ AS url,
        fam AS family, CAST(n AS BIGINT) AS n
 FROM (
   SELECT i, 'e0_textual' AS fam, e0_textual AS n FROM agg
@@ -1394,13 +1401,13 @@ ORDER BY url, family
 """
 
 _KG_FEATURE_ROWCOL_SQL = _KG_CELLS_CTE + """
-SELECT 'https://fixture.test/d' || lpad(CAST(i AS VARCHAR), 6, '0') AS url,
+SELECT """ + _url_sql("i") + """ AS url,
        CAST(count(*) AS BIGINT) AS n
 FROM cells GROUP BY i ORDER BY url
 """
 
 _KG_NULLABLE_SQL = _KG_CELLS_CTE + """
-SELECT 'https://fixture.test/d' || lpad(CAST(i AS VARCHAR), 6, '0') AS url,
+SELECT """ + _url_sql("i") + """ AS url,
        CAST(3 * count(*) AS BIGINT) AS n_candidates,
        CAST(count(*) AS BIGINT) AS n_null_slot
 FROM cells GROUP BY i ORDER BY url
@@ -1503,7 +1510,7 @@ ORDER BY entity_id, surface
 # candidates per body row.
 _KG_FEATURES_LINGUAL_SQL = _KG_CELLS_CTE + """
 , agg AS (SELECT i, SUM(2 * 3) AS n3 FROM cells GROUP BY i)
-SELECT 'https://fixture.test/d' || lpad(CAST(i AS VARCHAR), 6, '0') AS url,
+SELECT """ + _url_sql("i") + """ AS url,
        fam AS family, CAST(n AS BIGINT) AS n
 FROM (
   SELECT i, 'e0_lingual' AS fam, n3 AS n FROM agg
@@ -1521,7 +1528,7 @@ _KG_VISUAL_FEATS_SQL = _KG_CELLS_CTE + """
 , agg AS (
   SELECT i, SUM(2 * 13) AS per_slot, SUM(2 * 2) AS rel FROM cells GROUP BY i
 )
-SELECT 'https://fixture.test/d' || lpad(CAST(i AS VARCHAR), 6, '0') AS url,
+SELECT """ + _url_sql("i") + """ AS url,
        fam AS family, CAST(n AS BIGINT) AS n
 FROM (
   SELECT i, 'e0_visual' AS fam, per_slot AS n FROM agg
@@ -1534,7 +1541,7 @@ ORDER BY url, family
 _KG_NER_NUMBERS_SQL = _KG_CELLS_CTE + """
 , tc AS (SELECT i, count(*) AS nt FROM tabs GROUP BY i)
 , cc AS (SELECT i, count(*) AS nc FROM cells GROUP BY i)
-SELECT 'https://fixture.test/d' || lpad(CAST(d.i AS VARCHAR), 6, '0') AS url,
+SELECT """ + _url_sql("d.i") + """ AS url,
        CAST(3 + 2*tc.nt + 2*cc.nc AS BIGINT) AS n
 FROM docs d JOIN tc ON tc.i = d.i JOIN cc ON cc.i = d.i
 ORDER BY url
@@ -3486,7 +3493,7 @@ def q_dedup_recrawl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DEDUP_RECRAWL_SQL = """
 WITH c1 AS (
-  SELECT 'https://fixture.test/d' || lpad(CAST(doc_id AS VARCHAR), 6, '0')
+  SELECT """ + _url_sql("doc_id") + """
            AS url,
          TIMESTAMP '2026-01-01 00:00:00' + INTERVAL (doc_id) SECOND
            AS warc_ts,

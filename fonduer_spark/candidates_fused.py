@@ -19,10 +19,12 @@ oracle, which is strategy-independent).
 
 Marker rows: the fused stage also emits one row per over-cap document
 (``candidate_type = OVERFLOW_TYPE``) and per document whose render or parse
-raised (``mentions_op.PARSE_ERROR_TYPE``), only url/split set.
-``extract_candidates_auto`` routes the first through the join path, drops
-both from its result and, under ``probe="eager"``, warns on the second;
-direct callers of ``extract_candidates_fused`` filter them themselves.
+raised (``mentions_op.PARSE_ERROR_TYPE``), only url/split set. The over-cap
+marker also carries the document's mentions in ``overflow_mentions`` (null
+on every other row). ``extract_candidates_auto`` feeds those mentions to
+the join path, drops both marker types from its result and warns on the
+second; direct callers of ``extract_candidates_fused`` filter them
+themselves.
 """
 
 from __future__ import annotations
@@ -56,8 +58,13 @@ SLIM_COLUMNS = [f.name for f in CANDIDATE_SCHEMA_SLIM.fields]
 PyThrottler = Callable[[dict, dict], bool]
 
 # candidate_type of the hot-doc overflow marker rows emitted by the fused
-# stage (one per over-cap document; all other columns null except url/split)
+# stage (one per over-cap document; url/split and overflow_mentions set)
 OVERFLOW_TYPE = "_overflow"
+
+# the fused stage's extra column: an over-cap document's mentions on its
+# marker row, null on every other row
+OVERFLOW_MENTIONS = T.StructField(
+    "overflow_mentions", T.ArrayType(MENTION_SCHEMA), True)
 
 
 def same_row_py(a: dict, b: dict) -> bool:
@@ -83,7 +90,9 @@ def _doc_candidates(
     slim: bool = False,
 ) -> None:
     """Product + filters for one document (reference candidates.py:248-325
-    semantics, including filter order)."""
+    semantics, including filter order). Rows set ``overflow_mentions`` to
+    None: pandas would fill a missing key with NaN, which Arrow cannot
+    convert to an array column."""
     ms_a = mentions_by_type.get(type_a, ())
     ms_b = mentions_by_type.get(type_b, ())
     for ai, a in enumerate(ms_a):
@@ -113,6 +122,7 @@ def _doc_candidates(
                     "b_stable_id": b["stable_id"],
                     "a_span_text": a["span_text"],
                     "b_span_text": b["span_text"],
+                    "overflow_mentions": None,
                 })
                 continue
             row = {}
@@ -123,6 +133,7 @@ def _doc_candidates(
             row["split"] = split
             row["candidate_sid"] = f"{a['stable_id']}~~{b['stable_id']}"
             row["url"] = a["url"]
+            row["overflow_mentions"] = None
             out.append(row)
 
 
@@ -147,24 +158,28 @@ def extract_candidates_fused(
     Hot-doc guard: a document whose mention count exceeds
     ``max_mentions_per_doc`` would make this task quadratic — its product is
     NOT computed here; instead one marker row with
-    ``candidate_type = OVERFLOW_TYPE`` (url/split set, mention columns null)
-    is emitted so the overflow is detectable. A document that fails to
-    render or parse yields one ``PARSE_ERROR_TYPE`` marker of the same
-    shape (mentions_op.map_documents). ``extract_candidates_auto`` consumes
-    both markers; callers using this function directly must filter or route
-    them themselves.
+    ``candidate_type = OVERFLOW_TYPE`` is emitted, url/split set, candidate
+    columns null and the document's mentions (MENTION_SCHEMA rows, every
+    spec type) in ``overflow_mentions``. A document that fails to render or
+    parse yields one ``PARSE_ERROR_TYPE`` marker with ``overflow_mentions``
+    null (mentions_op.map_documents). The output is the candidate schema
+    plus the ``overflow_mentions`` column, null on candidate rows.
+    ``extract_candidates_auto`` consumes both markers; callers using this
+    function directly must filter or route them themselves.
     """
-    cols = SLIM_COLUMNS if slim else CANDIDATE_COLUMNS
+    schema = CANDIDATE_SCHEMA_SLIM if slim else CANDIDATE_SCHEMA
+    schema = T.StructType(schema.fields + [OVERFLOW_MENTIONS])
 
     def marker(url: str, kind: str) -> dict:
-        return dict(dict.fromkeys(cols), candidate_type=kind, url=url,
-                    split=split)
+        return dict(dict.fromkeys(schema.fieldNames()), candidate_type=kind,
+                    url=url, split=split)
 
     def emit(url: str, by_type: dict, out: List[dict]) -> None:
         if sum(map(len, by_type.values())) > max_mentions_per_doc:
-            # skew overflow: the marker makes the doc routable via the join
+            # skew overflow: the marker carries the mentions to the join
             # path (extract_candidates_auto); never silently dropped
-            out.append(marker(url, OVERFLOW_TYPE))
+            out.append(dict(marker(url, OVERFLOW_TYPE), overflow_mentions=[
+                m for ms in by_type.values() for m in ms]))
             return
         _doc_candidates(
             by_type, candidate_type, type_a, type_b, throttler,
@@ -172,7 +187,6 @@ def extract_candidates_fused(
             split, out, slim=slim,
         )
 
-    schema = CANDIDATE_SCHEMA_SLIM if slim else CANDIDATE_SCHEMA
     return map_documents(docs, corpus_docs(render), specs, parse_cfg, schema,
                          emit, marker)
 
@@ -193,50 +207,42 @@ def extract_candidates_auto(
     parse_cfg=None,
     max_mentions_per_doc: int = 10_000,
     slim: bool = False,
-    salt_buckets: int = 8,
-    probe: str = "lazy",
+    probe: str = "eager",
 ) -> DataFrame:
     """Fused candidate generation with hot-doc overflow ROUTED, not dropped.
 
-    Normal documents take the fused single-stage path; documents whose
-    mention count exceeds ``max_mentions_per_doc`` emit only an overflow
-    marker, are re-selected from ``docs`` (broadcast semi-join on the tiny
-    marker set), and their quadratic product runs through the relational
-    join path with explicit salting — the strategy built for skew
-    (candidates_op.extract_candidates). The union is row-identical to
-    running either strategy alone (asserted in tests).
+    Normal documents take the fused single-stage path; a document whose
+    mention count exceeds ``max_mentions_per_doc`` emits only an overflow
+    marker carrying its mentions, and their quadratic product runs through
+    the relational join path with explicit salting — the strategy built
+    for skew (candidates_op.extract_candidates). Every document is parsed
+    once. The union is row-identical to running either strategy alone
+    (asserted in tests).
 
     ``py_throttler``/``column_throttler`` must be the same predicate in its
     two physical forms (e.g. same_row_py / same_row); overflow docs use the
     column form so Catalyst pushes it into the join.
 
-    The fused output is cached so the marker scan does not re-run the
-    parse stage — the normal branch and the marker branch both read the
-    cached frame (one parse pass total). The result reads that cache, so
-    it stays until the caller's ``cache.released()`` block exits; with no
+    The fused output is cached, and the call runs it AT CALL TIME as one
+    full-width count job: the normal branch and the overflow branch both
+    read the cache (one parse pass total). The job counts both marker
+    types: it warns if any document failed to parse (the workers log each
+    url), and when ZERO documents overflow it returns the normal branch
+    alone, so the join-path subtree — several salted-join shuffle stages
+    that would all carry zero rows — is never planned. Marker rows of
+    both types are never returned. The result reads the cache, so it
+    stays until the caller's ``cache.released()`` block exits; with no
     block open it stays until the caller clears it.
 
-    ``probe="eager"`` (r07): run the fused stage AT
-    CALL TIME (one job — the same job the overflow branch's broadcast
-    would trigger at first action anyway) and, when ZERO documents
-    overflow, return the normal branch alone. The union's join-path
-    subtree — a Python mention stage plus several salted-join shuffle
-    stages that all carry zero rows — is never planned, saving its task
-    churn on every downstream action. Rows are identical either way
-    (overflow docs still route through the join path when present); the
-    only change is that query CONSTRUCTION becomes eager, which is why
-    the default stays "lazy" for library callers. The same job counts
-    ``PARSE_ERROR_TYPE`` markers and warns if any document failed (lazy
-    mode cannot; the workers log each url either way). Marker rows of
-    both types are never returned.
+    ``probe`` accepts only its default, "eager"; it is kept for callers
+    that still pass it, and a later benchmark change drops the keyword.
     """
     from pyspark.sql import functions as F
 
     from .candidates_op import extract_candidates
-    from .mentions_op import extract_mentions_fused
 
-    if probe not in ("lazy", "eager"):
-        raise ValueError(f"unknown probe mode {probe!r}: 'lazy' or 'eager'")
+    if probe != "eager":
+        raise ValueError(f"unknown probe mode {probe!r}: only 'eager'")
     fused = cached(extract_candidates_fused(
         docs, specs, candidate_type, type_a, type_b,
         throttler=py_throttler, self_relations=self_relations,
@@ -249,47 +255,28 @@ def extract_candidates_auto(
     cols = SLIM_COLUMNS if slim else CANDIDATE_COLUMNS
     normal = fused.where(~kind.isin(OVERFLOW_TYPE, PARSE_ERROR_TYPE)) \
         .select(*cols)
-    if probe == "eager":
-        # materializes the (cached) fused frame now; the overflow branch
-        # below would trigger the identical job at first action, so this
-        # moves — not adds — a job, and lets the no-overflow case skip the
-        # empty join-path subtree entirely. One full-width agg, NOT
-        # isEmpty(): take(1) escalates over partition subsets (1 -> 4 -> 20
-        # -> all) and would run the Python parse in sequential low-
-        # parallelism waves when no marker exists; the agg fills the cache
-        # in one job and counts both marker types.
-        n_over, n_failed = fused.agg(
-            F.count(F.when(kind == OVERFLOW_TYPE, 1)),
-            F.count(F.when(kind == PARSE_ERROR_TYPE, 1)),
-        ).first()
-        if n_failed:
-            warnings.warn(
-                f"{n_failed} document(s) failed to parse and have no "
-                f"candidates; the workers logged each url",
-                UserWarning, stacklevel=2)
-        if n_over == 0:
-            return normal
-    # marker urls -> doc ids (url = corpus.url_of(doc_id) = ...d<id>)
-    over_ids = (
-        fused.where(kind == OVERFLOW_TYPE)
-        .select(
-            F.regexp_extract("url", r"d(\d+)$", 1).cast("long").alias("doc_id")
-        )
-    )
-    # AQE-sizable exchange: over_docs inherits the full docs partitioning
-    # (e.g. 4x parallelism), so without this the overflow mention stage
-    # schedules that many Python tasks even when ZERO docs overflow —
-    # measured ~0.5 s of no-op task churn per pipeline run. A keyed
-    # repartition lets AQE coalesce the (usually empty) side to ~1 task
-    # while real overflow spreads by bytes as before (guide §2.2).
-    over_docs = docs.join(F.broadcast(over_ids), "doc_id").repartition("doc_id")
-    mentions_o = extract_mentions_fused(
-        over_docs, specs, render=render, parse_cfg=parse_cfg)
+    # One full-width agg, NOT isEmpty(): take(1) escalates over partition
+    # subsets (1 -> 4 -> 20 -> all) and would run the Python parse in
+    # sequential low-parallelism waves when no marker exists; the agg
+    # fills the cache in one job and counts both marker types.
+    n_over, n_failed = fused.agg(
+        F.count(F.when(kind == OVERFLOW_TYPE, 1)),
+        F.count(F.when(kind == PARSE_ERROR_TYPE, 1)),
+    ).first()
+    if n_failed:
+        warnings.warn(
+            f"{n_failed} document(s) failed to parse and have no "
+            f"candidates; the workers logged each url",
+            UserWarning, stacklevel=2)
+    if n_over == 0:
+        return normal
+    mentions_o = fused.where(kind == OVERFLOW_TYPE) \
+        .select(F.explode("overflow_mentions").alias("m")).select("m.*")
     cands_o = extract_candidates(
         mentions_o, candidate_type, type_a, type_b,
         throttler=column_throttler, throttler_kind="column",
         self_relations=self_relations, nested_relations=nested_relations,
         symmetric_relations=symmetric_relations, split=split,
-        salt_buckets=salt_buckets,
+        salt_buckets=8,
     )
     return normal.unionByName(cands_o.select(*cols))

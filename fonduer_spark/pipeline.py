@@ -33,8 +33,8 @@ TEMP_RGX = r"-?\d{1,3}"
 class LazyStages(Mapping):
     """Read-only stage mapping with on-access construction (r07).
 
-    kg_stages used to construct every stage DataFrame up front; with the
-    r07 eager overflow probe (extract_candidates_auto(probe="eager")),
+    kg_stages used to construct every stage DataFrame up front; since
+    extract_candidates_auto probes its fused stage at call time,
     candidate construction runs a Spark job, so building unrequested
     stages would charge every caller for the parse pass even when it only
     reads e.g. ``mentions``. Access is memoized, so repeated ``st["x"]``
@@ -130,16 +130,14 @@ def kg_stages(
     def build_mentions() -> DataFrame:
         return cached(extract_mentions_fused(docs, default_mention_specs()))
 
-    # probe="eager" (r07): the fused stage materializes at stage-
-    # construction time (the job the overflow branch's broadcast would run
-    # anyway) and the usual zero-overflow case skips the empty join-path
-    # subtree — which is why stage construction is lazy (LazyStages):
-    # callers that never touch candidates never pay the probe.
+    # extract_candidates_auto materializes the fused stage at stage-
+    # construction time and the usual zero-overflow case skips the empty
+    # join-path subtree — which is why stage construction is lazy
+    # (LazyStages): callers that never touch candidates never pay the probe.
     def build_candidates(**kw) -> DataFrame:
         return extract_candidates_auto(
             docs, default_mention_specs(), "part_temp", "part", "temp",
-            py_throttler=same_row_py, column_throttler=same_row,
-            probe="eager", **kw)
+            py_throttler=same_row_py, column_throttler=same_row, **kw)
 
     # label/triple path reads a SLIM variant (8 columns instead of 46):
     # same rows, ~7x less pandas/Arrow transfer. structural=False skips

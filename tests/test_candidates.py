@@ -205,8 +205,15 @@ def test_overflow_marker_and_routing(spark):
     markers = fused.where(F.col("candidate_type") == OVERFLOW_TYPE)
     marker_urls = {r.url for r in markers.select("url").collect()}
     assert url_of(0) in marker_urls  # the hot doc was flagged, not dropped
-    # marker rows carry no mention payload
+    # marker rows carry no candidate payload ...
     assert all(r.a_stable_id is None for r in markers.collect())
+    # ... but the document's mentions, exactly as the mention stage has them
+    carried = markers.where(F.col("url") == url_of(0)) \
+        .select(F.explode("overflow_mentions").alias("m")).select("m.*")
+    mentions = extract_mentions_fused(docs, specs) \
+        .where(F.col("url") == url_of(0))
+    assert sorted(map(tuple, carried.collect())) == \
+        sorted(map(tuple, mentions.collect()))
 
     routed = extract_candidates_auto(
         docs, specs, "part_temp", "part", "temp",

@@ -7,6 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from fonduer_spark.candidates_fused import (
+    CANDIDATE_COLUMNS,
+    OVERFLOW_TYPE,
     extract_candidates_auto,
     extract_candidates_fused,
     same_row_py,
@@ -110,7 +112,7 @@ def test_candidates_fused_marks_failed_doc(docs, good_docs):
 @pytest.mark.parametrize("cap", [10_000, 40])  # 40: doc 0 overflows too
 def test_candidates_auto_warns_and_drops_markers(docs, good_docs, cap):
     kw = dict(py_throttler=same_row_py, column_throttler=same_row,
-              max_mentions_per_doc=cap, probe="eager")
+              max_mentions_per_doc=cap)
     with pytest.warns(UserWarning, match="^1 document"):
         got = _candidates(docs, extract_candidates_auto, render=_bad_render,
                           **kw)
@@ -119,6 +121,48 @@ def test_candidates_auto_warns_and_drops_markers(docs, good_docs, cap):
     # neither marker type (_overflow, _parse_error) reaches the caller
     kinds = {r[0] for r in got.select("candidate_type").distinct().collect()}
     assert kinds == {"part_temp"}
+
+
+def test_candidates_auto_has_one_probe_mode(docs):
+    with pytest.raises(ValueError, match="only 'eager'"):
+        _candidates(docs, extract_candidates_auto, probe="lazy")
+
+
+def _make_negative_hot_render():
+    # nested, so cloudpickle ships it by value to the Python workers
+    def render(i, text):
+        """Negative ids are hot: their tables block is repeated 25x."""
+        html = render_page(int(i), text)
+        if int(i) < 0:
+            a = html.index("<table")
+            b = html.rindex("</table>") + len("</table>")
+            html = html[:a] + html[a:b] * 25 + html[b:]
+        return html
+    return render
+
+
+def test_hot_doc_routed_whatever_its_url(docs):
+    """A hot document is routed from the mentions its overflow marker
+    carries, not by parsing a doc id back out of its url: doc -1's url
+    ends in "d-00001", and auto at a 400-mention cap still equals the
+    uncapped fused stage row for row."""
+    docs = docs.unionByName(docs.where(F.col("doc_id") == 0).withColumn(
+        "doc_id", F.lit(-1).cast(docs.schema["doc_id"].dataType)))
+    render = _make_negative_hot_render()
+
+    capped = _candidates(docs, extract_candidates_fused, render=render,
+                         throttler=same_row_py, max_mentions_per_doc=400)
+    markers = capped.where(F.col("candidate_type") == OVERFLOW_TYPE)
+    assert [r.url for r in markers.select("url").collect()] == [url_of(-1)]
+
+    routed = _candidates(docs, extract_candidates_auto, render=render,
+                         py_throttler=same_row_py, column_throttler=same_row,
+                         max_mentions_per_doc=400)
+    whole = _candidates(docs, extract_candidates_fused, render=render,
+                        throttler=same_row_py)
+    got = _rows(routed, CANDIDATE_COLUMNS)
+    assert got == _rows(whole, CANDIDATE_COLUMNS)
+    assert any(r[-1] == url_of(-1) for r in got)  # routed, not dropped
 
 
 def test_serve_raises_on_failed_page():

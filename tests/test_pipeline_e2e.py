@@ -26,6 +26,18 @@ def stages(spark):
     st["mentions"].unpersist()
 
 
+def test_oracle_url_matches_url_of():
+    """The oracle's url formula is corpus.url_of, past six digits too
+    (lpad would truncate 1000000 to d100000, doc 100000's url)."""
+    import __spark_entry__ as E
+    from fonduer_spark.corpus import url_of
+
+    ids = [0, 999_999, 10**6, 12_345_678]
+    got = duckdb.sql(f"SELECT {E._url_sql('i')} FROM unnest({ids}) t(i) "
+                     f"ORDER BY i").fetchall()
+    assert [u for (u,) in got] == [url_of(i) for i in ids]
+
+
 def test_triples_match_gold_exactly(spark, stages):
     got = {(r.subj, r.pred, r.obj)
            for r in stages["triples"].select("subj", "pred", "obj").collect()}

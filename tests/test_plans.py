@@ -87,6 +87,54 @@ def test_fused_pipeline_single_python_stage(spark):
     st["mentions"].unpersist()
 
 
+def _outside_cache(plan: str, node: str) -> list:
+    """Tree lines of a formatted plan naming ``node`` that have no
+    InMemoryRelation among their ancestors (found by indentation)."""
+    tree = plan.split("\n\n")[0].splitlines()
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :|+-"))
+
+    hits = []
+    for i, line in enumerate(tree):
+        if node not in line:
+            continue
+        d, cached = depth(line), False
+        for above in reversed(tree[:i]):
+            if depth(above) < d:
+                d = depth(above)
+                cached = cached or "InMemoryRelation" in above
+        if not cached:
+            hits.append(line.strip())
+    return hits
+
+
+def test_auto_hot_doc_parses_once(spark):
+    """With a document over the cap, auto's overflow branch reads the
+    mentions its marker carries from the CACHED fused frame: every
+    MapInPandas and every parquet scan lies under the InMemoryRelation, so
+    there is no second Python parse stage, no join against the documents
+    and no url -> doc_id regexp."""
+    from fonduer_spark.cache import released
+    from fonduer_spark.candidates_fused import (
+        extract_candidates_auto, same_row_py)
+    from fonduer_spark.candidates_op import same_row
+    from fonduer_spark.corpus import load_docs
+    from fonduer_spark.pipeline import default_mention_specs
+
+    docs = load_docs(spark, SF, max_docs=8)
+    with released():
+        plan = plan_of(extract_candidates_auto(
+            docs, default_mention_specs(), "part_temp", "part", "temp",
+            py_throttler=same_row_py, column_throttler=same_row,
+            max_mentions_per_doc=40, slim=True))  # doc 0 overflows
+    assert "Union" in plan and "InMemoryRelation" in plan  # overflow planned
+    assert "MapInPandas" in plan and "Scan parquet" in plan
+    assert _outside_cache(plan, "MapInPandas") == []
+    assert _outside_cache(plan, "Scan parquet") == []
+    assert "regexp_extract" not in plan
+
+
 def test_minhash_pairs_single_signature_pass(spark):
     """The relational MinHash computes md5 aggregations ONCE (no duplicated
     signature subtrees): since r07 the post-aggregation signature frame is

@@ -372,10 +372,11 @@ def q_kg_features_lingual(spark: SparkSession, sf_dir: str) -> DataFrame:
     tree has no parents/children/siblings), so the census checks the
     NLP gating end-to-end (SimpleParser would yield zero)."""
     from fonduer_spark.candidates_op import extract_candidates, same_row
-    from fonduer_spark.corpus import load_docs, make_web_pages
+    from fonduer_spark.corpus import load_docs
     from fonduer_spark.featurize import featurize
     from fonduer_spark.mentions_op import extract_mentions_fused
-    from fonduer_spark.parse import ParseConfig, contexts_of, parse_webpages
+    from fonduer_spark.parse import (
+        ParseConfig, contexts_of, corpus_docs, parse_webpages)
     from fonduer_spark.pipeline import default_mention_specs
 
     cfg = ParseConfig(lingual="regex_tagger")
@@ -386,7 +387,7 @@ def q_kg_features_lingual(spark: SparkSession, sf_dir: str) -> DataFrame:
         mentions, "part_temp", "part", "temp",
         throttler=same_row, throttler_kind="column")
     sentences = contexts_of(
-        parse_webpages(make_web_pages(spark, sf_dir), cfg), "sentence")
+        parse_webpages(docs, corpus_docs(), cfg), "sentence")
     feats = featurize(cands, sentences)
     census = _family_census(feats)
     return census.where(
@@ -402,44 +403,31 @@ def q_kg_visual_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT_/RIGHT_/CENTER_-prefixed, via the cumulative alignment-group
     protocol of visual_aligned_lemmas) + 1 PAGE_ key; each candidate adds
     SAME_PAGE + HORZ_ALIGNED (never VERT_*: the columns are 10+pt apart)."""
-    import pandas as pd
-
     from fonduer_spark.candidates_op import extract_candidates
-    from fonduer_spark.corpus import (
-        WEB_PAGES_SCHEMA, load_docs, render_hocr, url_of)
+    from fonduer_spark.corpus import load_docs, render_hocr
     from fonduer_spark.data_model_utils import is_horz_aligned, same_page
     from fonduer_spark.featurize import featurize
     from fonduer_spark.mentions_op import extract_mentions_fused
-    from fonduer_spark.parse import ParseConfig, contexts_of, parse_webpages
+    from fonduer_spark.parse import (
+        ParseConfig, contexts_of, corpus_docs, parse_webpages)
     from fonduer_spark.pipeline import default_mention_specs
     from fonduer_spark.sources import rewrite_hocr
 
     docs = load_docs(spark, sf_dir)
     cfg = ParseConfig(visual="hocr", lingual="regex_tagger")
+
+    def render(i, _text):
+        return rewrite_hocr(render_hocr(int(i)))
+
     mentions = extract_mentions_fused(
-        docs, default_mention_specs(),
-        render=lambda i, text: rewrite_hocr(render_hocr(int(i))),
-        parse_cfg=cfg,
-    )
+        docs, default_mention_specs(), render=render, parse_cfg=cfg)
     cands = extract_candidates(
         mentions, "part_temp_visual", "part", "temp",
         throttler=lambda df: same_page() & is_horz_aligned(),
         throttler_kind="column",
     )
-
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": [url_of(int(i)) for i in pdf["doc_id"]],
-                "warc_ts": pd.NaT,
-                "html": [rewrite_hocr(render_hocr(int(i))).encode("utf-8")
-                         for i in pdf["doc_id"]],
-                "text": "",
-                "lang": "en",
-            })
-
-    pages = docs.mapInPandas(gen, WEB_PAGES_SCHEMA)
-    sentences = contexts_of(parse_webpages(pages, cfg), "sentence")
+    sentences = contexts_of(
+        parse_webpages(docs, corpus_docs(render), cfg), "sentence")
     feats = featurize(cands, sentences,
                       libs=("textual", "tabular", "structural", "visual"))
     census = _family_census(feats)

@@ -19,7 +19,7 @@ oracle, which is strategy-independent).
 
 Marker rows: the fused stage also emits one row per over-cap document
 (``candidate_type = OVERFLOW_TYPE``) and per document whose render or parse
-raised (``mentions_op.PARSE_ERROR_TYPE``), only url/split set. The over-cap
+raised (``parse.PARSE_ERROR_TYPE``), only url/split set. The over-cap
 marker also carries the document's mentions in ``overflow_mentions`` (null
 on every other row). ``extract_candidates_auto`` feeds those mentions to
 the join path, drops both marker types from its result and warns on the
@@ -36,8 +36,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from .cache import cached
-from .mentions_op import (MENTION_COLUMNS, MENTION_SCHEMA, PARSE_ERROR_TYPE,
-                          MentionSpec, corpus_docs, map_documents)
+from .mentions_op import (MENTION_COLUMNS, MENTION_SCHEMA, MentionSpec,
+                          mentions_kernel)
+from .parse import PARSE_ERROR_TYPE, ParseConfig, corpus_docs, map_documents
 
 CANDIDATE_SCHEMA = T.StructType(
     [T.StructField(p + f.name, f.dataType, True)
@@ -49,11 +50,10 @@ CANDIDATE_COLUMNS = [f.name for f in CANDIDATE_SCHEMA.fields]
 
 # slim output: only what labeling + triple materialization consume — cuts
 # the per-row pandas/Arrow transfer ~7x on the hot path
-SLIM_COLUMNS = ["candidate_type", "split", "candidate_sid", "url",
-                "a_stable_id", "b_stable_id", "a_span_text", "b_span_text"]
+SLIM_COLUMNS = ["a_stable_id", "a_span_text", "b_stable_id", "b_span_text",
+                "candidate_type", "split", "candidate_sid", "url"]
 CANDIDATE_SCHEMA_SLIM = T.StructType(
     [f for f in CANDIDATE_SCHEMA.fields if f.name in SLIM_COLUMNS])
-SLIM_COLUMNS = [f.name for f in CANDIDATE_SCHEMA_SLIM.fields]
 
 PyThrottler = Callable[[dict, dict], bool]
 
@@ -162,7 +162,7 @@ def extract_candidates_fused(
     columns null and the document's mentions (MENTION_SCHEMA rows, every
     spec type) in ``overflow_mentions``. A document that fails to render or
     parse yields one ``PARSE_ERROR_TYPE`` marker with ``overflow_mentions``
-    null (mentions_op.map_documents). The output is the candidate schema
+    null (parse.map_documents). The output is the candidate schema
     plus the ``overflow_mentions`` column, null on candidate rows.
     ``extract_candidates_auto`` consumes both markers; callers using this
     function directly must filter or route them themselves.
@@ -187,8 +187,9 @@ def extract_candidates_fused(
             split, out, slim=slim,
         )
 
-    return map_documents(docs, corpus_docs(render), specs, parse_cfg, schema,
-                         emit, marker)
+    cfg = parse_cfg or ParseConfig()
+    return map_documents(docs, corpus_docs(render), mentions_kernel(specs, cfg),
+                         cfg, schema, emit, marker)
 
 
 def extract_candidates_auto(

@@ -12,7 +12,6 @@ then never touches the sentences table again).
 
 from __future__ import annotations
 
-import logging
 from dataclasses import dataclass
 from typing import Dict, Iterator, List, Optional, Sequence
 
@@ -20,12 +19,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from .matchers import Matcher
-from .mention_spaces import MentionSpace
-from .parse import ParseConfig, decode_html, parse_document, sentences_of
+from .matchers import Matcher, RegexMatchSpan
+from .mention_spaces import MentionNgrams, MentionSpace, Ngrams
+from .parse import (PARSE_ERROR_TYPE, ParseConfig, corpus_docs,  # noqa: F401
+                    map_documents, parse_document, sentences_of)
 from .spans import ImplicitSpan, SentenceView, Span
-
-log = logging.getLogger(__name__)
 
 _S, _I = T.StringType(), T.IntegerType()
 _AS = T.ArrayType(T.StringType())
@@ -95,12 +93,9 @@ def _fast_unigram_regex(spec: MentionSpec):
     spans never overlap so longest-match pruning is a no-op and Span objects
     are only needed for actual matches — a large constant-factor win on the
     hot path. Returns None when the generic fused generator must run."""
-    from .matchers import RegexMatchSpan
-    from .mention_spaces import Ngrams
-
     sp, m = spec.space, spec.matcher
     if (
-        type(sp) in (Ngrams,) or type(sp).__name__ == "MentionNgrams"
+        type(sp) in (Ngrams, MentionNgrams)
     ) and sp.n_min == 1 and sp.n_max == 1 and sp.split_rgx is None \
             and type(m) is RegexMatchSpan and not m.children \
             and m.attrib == "words" and not m.search and m.sep == "":
@@ -298,9 +293,9 @@ def extract_mentions_fused(
 ) -> DataFrame:
     """Hot-path fusion: render + parse + mention-extract in ONE mapInPandas.
 
-    The modular stages (make_web_pages -> parse_webpages -> extract_mentions)
-    are three chained Python UDF nodes: each hop forks its own worker per
-    task and round-trips every context row Python->Arrow->JVM->Arrow->Python.
+    The modular stages (parse_webpages -> extract_mentions) are two chained
+    Python UDF nodes: the hop between them forks a second worker per task
+    and round-trips every context row Python->Arrow->JVM->Arrow->Python.
     Fusing them mirrors the reference's per-document UDFRunner shape
     (utils/udf.py: one worker does parse+extract per doc) while keeping the
     join/aggregation stages JVM-side. Context rows never cross a process
@@ -311,11 +306,6 @@ def extract_mentions_fused(
     parse yields one ``PARSE_ERROR_TYPE`` marker row (see map_documents).
     """
     return fused_mentions(docs, corpus_docs(render), specs, parse_cfg)
-
-
-# mention_type / candidate_type of the marker row a fused stage emits for a
-# document whose render or parse raised: url (and split) set, the rest null
-PARSE_ERROR_TYPE = "_parse_error"
 
 
 def doc_mentions(url: str, html: str, cfg, lp, specs, fast) -> Dict[str, List[dict]]:
@@ -331,57 +321,12 @@ def doc_mentions(url: str, html: str, cfg, lp, specs, fast) -> Dict[str, List[di
     return by_type
 
 
-# A source reads documents off two columns of a frame:
-# (column names, url_fn(a, b), html_fn(a, b)).
-def corpus_docs(render=None) -> tuple:
-    """Source over (doc_id, text): url from the id, html from
-    ``render(doc_id, text)`` (default: the synthetic corpus renderer)."""
-    from .corpus import render_page, url_of
-
-    return (("doc_id", "text"), lambda i, _text: url_of(int(i)),
-            render or (lambda i, text: render_page(int(i), text)))
-
-
-# source over web_pages (url, html bytes)
-WEB_PAGES = (("url", "html"), lambda url, _html: url,
-             lambda _url, html: decode_html(html))
-
-
-def map_documents(frame: DataFrame, source: tuple, specs, cfg,
-                  schema: T.StructType, emit, marker) -> DataFrame:
-    """The one batch loop behind every fused entry point: per document of
-    ``frame`` run ``doc_mentions`` and pass the result to
-    ``emit(url, by_type, out)``, which appends output rows to ``out``.
-
-    This is the only place a parse failure is caught. The document becomes
-    one ``marker(url, PARSE_ERROR_TYPE)`` row plus one worker WARNING naming
-    the url — a record for lineage instead of a silent drop (the reference
-    logs and skips, parser.py:236-264)."""
-    cols, url_fn, html_fn = source
-    names = schema.fieldNames()
-    cfg = cfg or ParseConfig()
-    spec_list = list(specs)
-    fast_list = [_fast_unigram_regex(s) for s in spec_list]
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lp = cfg.make_lingual_parser()
-        for pdf in batches:
-            out: List[dict] = []
-            for a, b in zip(pdf[cols[0]], pdf[cols[1]]):
-                url = url_fn(a, b)
-                try:
-                    by_type = doc_mentions(url, html_fn(a, b), cfg, lp,
-                                           spec_list, fast_list)
-                except Exception:
-                    log.warning("document %s failed to parse; emitting a %s "
-                                "marker row", url, PARSE_ERROR_TYPE,
-                                exc_info=True)
-                    out.append(marker(url, PARSE_ERROR_TYPE))
-                    continue
-                emit(url, by_type, out)
-            yield pd.DataFrame(out, columns=names)
-
-    return frame.select(*cols).mapInPandas(fn, schema)
+def mentions_kernel(specs, cfg: ParseConfig):
+    """``doc_mentions`` bound to ``specs`` and ``cfg``: the
+    ``kernel(url, html, lp)`` the fused stages pass to map_documents."""
+    specs = list(specs)
+    fast = [_fast_unigram_regex(s) for s in specs]
+    return lambda url, html, lp: doc_mentions(url, html, cfg, lp, specs, fast)
 
 
 def fused_mentions(frame: DataFrame, source: tuple, specs, cfg) -> DataFrame:
@@ -394,5 +339,6 @@ def fused_mentions(frame: DataFrame, source: tuple, specs, cfg) -> DataFrame:
         for ms in by_type.values():
             out.extend(ms)
 
-    return map_documents(frame, source, specs, cfg, MENTION_SCHEMA, emit,
-                         marker)
+    cfg = cfg or ParseConfig()
+    return map_documents(frame, source, mentions_kernel(specs, cfg), cfg,
+                         MENTION_SCHEMA, emit, marker)

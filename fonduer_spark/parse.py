@@ -2,7 +2,7 @@
 
 Re-implements the semantics of the reference's ``ParserUDF``
 (/root/reference/src/fonduer/parser/parser.py:168-857) as one vectorized
-``mapInPandas`` stage over the ``web_pages`` table:
+``mapInPandas`` stage over a document source (web_pages or (doc_id, text)):
 
 - iterative DFS in recursive-DFS order (children pushed reversed; ``.text``
   visited before children, ``.tail`` after — the visited-flag protocol of
@@ -19,11 +19,12 @@ Re-implements the semantics of the reference's ``ParserUDF``
 - structural attach: xpath / html_tag / html_attrs with inline <style> class
   CSS merge (parser.py:510-562); tabular attach: the parent cell's
   row/col coordinates denormalized onto each sentence (parser.py:565-577);
-- per-document error isolation: a failing doc becomes a ``parse_error`` row
-  and the pipeline continues (parser.py:236-264).
+- per-document error isolation: a failing doc becomes one PARSE_ERROR_TYPE
+  row plus a worker WARNING, and the pipeline continues (parser.py:236-264).
 
-Scale design: the stage is shuffle-free — one scan of web_pages, one map, one
-write. Parallelism is per input-file-split; per-document work is independent.
+Scale design: shuffle-free — one scan, one map. ``map_documents`` is the one
+per-document batch loop; the fused mention and candidate stages run on it
+too, each with its own kernel. Per-document work is independent.
 Visual (PDF) parsing is out of scope for the webtext payload; visual columns
 stay null so downstream visual features no-op, matching the reference default
 ``visual_parser=None`` (parser.py:87).
@@ -31,9 +32,9 @@ stay null so downstream visual features no-op, matching the reference default
 
 from __future__ import annotations
 
+import logging
 import re
-import traceback
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any, Dict, Iterator, List, Optional, Tuple
 
 import pandas as pd
@@ -42,6 +43,8 @@ from pyspark.sql import types as T
 
 from .htmldom import Element, getpath, parse_html, strip_tags, tostring
 from .lingual import LingualParser, SimpleParser
+
+log = logging.getLogger(__name__)
 
 # ---------------------------------------------------------------------------
 # Unified parse-output schema: one wide frame with a ctx_type discriminator.
@@ -635,30 +638,79 @@ def decode_html(html):
     return html
 
 
-def parse_webpages(pages: DataFrame, cfg: Optional[ParseConfig] = None) -> DataFrame:
-    """web_pages (url, html, ...) -> unified context rows DataFrame.
+# ctx_type (mention_type, candidate_type) of the marker row a per-document
+# stage emits for a document whose render or parse raised: url (and split)
+# set, the rest null
+PARSE_ERROR_TYPE = "_parse_error"
 
-    Shuffle-free mapInPandas; failed documents become ``parse_error`` rows
-    (lineage) instead of failing the job (reference parser.py:236-264).
-    """
-    cfg = cfg or ParseConfig()
+
+# A source reads documents off two columns of a frame:
+# (column names, url_fn(a, b), html_fn(a, b)).
+def corpus_docs(render=None) -> tuple:
+    """Source over (doc_id, text): url from the id, html from
+    ``render(doc_id, text)`` (default: the synthetic corpus renderer)."""
+    from .corpus import render_page, url_of
+
+    return (("doc_id", "text"), lambda i, _text: url_of(int(i)),
+            render or (lambda i, text: render_page(int(i), text)))
+
+
+# source over web_pages (url, html bytes)
+WEB_PAGES = (("url", "html"), lambda url, _html: url,
+             lambda _url, html: decode_html(html))
+
+
+def map_documents(frame: DataFrame, source: tuple, kernel, cfg: ParseConfig,
+                  schema: T.StructType, emit, marker) -> DataFrame:
+    """The one per-document batch loop: per document of ``frame`` run
+    ``kernel(url, html, lp)`` (``lp`` built once per task from ``cfg``)
+    and pass the result to ``emit(url, result, out)``, which appends
+    output rows to ``out``.
+
+    This is the only place a parse failure is caught. The document becomes
+    one ``marker(url, PARSE_ERROR_TYPE)`` row plus one worker WARNING naming
+    the url — a record for lineage instead of a silent drop (the reference
+    logs and skips, parser.py:236-264)."""
+    cols, url_fn, html_fn = source
+    names = schema.fieldNames()
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         lp = cfg.make_lingual_parser()
         for pdf in batches:
-            out: List[Dict[str, Any]] = []
-            for url, html in zip(pdf["url"], pdf["html"]):
+            out: List[dict] = []
+            for a, b in zip(pdf[cols[0]], pdf[cols[1]]):
+                url = url_fn(a, b)
                 try:
-                    out.extend(parse_document(url, decode_html(html), cfg, lp))
+                    got = kernel(url, html_fn(a, b), lp)
                 except Exception:
-                    out.append(_row(
-                        url, stable_id=f"{url}::parse_error",
-                        ctx_type="parse_error",
-                        text=traceback.format_exc(limit=5),
-                    ))
-            yield pd.DataFrame(out, columns=CONTEXT_COLUMNS)
+                    log.warning("document %s failed to parse; emitting a %s "
+                                "marker row", url, PARSE_ERROR_TYPE,
+                                exc_info=True)
+                    out.append(marker(url, PARSE_ERROR_TYPE))
+                    continue
+                emit(url, got, out)
+            yield pd.DataFrame(out, columns=names)
 
-    return pages.select("url", "html").mapInPandas(fn, schema=CONTEXT_SCHEMA)
+    return frame.select(*cols).mapInPandas(fn, schema)
+
+
+def parse_webpages(frame: DataFrame, source: tuple = WEB_PAGES,
+                   cfg: Optional[ParseConfig] = None) -> DataFrame:
+    """Documents -> unified context rows: map_documents with the
+    ``parse_document`` kernel. ``source`` is WEB_PAGES (url, html) or
+    ``corpus_docs(render)`` over (doc_id, text); a ParseConfig there is
+    taken as ``cfg``. A failed document becomes one context row with
+    ``ctx_type = PARSE_ERROR_TYPE``, only url set."""
+    if isinstance(source, ParseConfig):
+        source, cfg = WEB_PAGES, source
+    cfg = cfg or ParseConfig()
+
+    def kernel(url: str, html: str, lp: LingualParser) -> List[Dict[str, Any]]:
+        return parse_document(url, html, cfg, lp)
+
+    return map_documents(frame, source, kernel, cfg, CONTEXT_SCHEMA,
+                         lambda _url, rows, out: out.extend(rows),
+                         lambda url, kind: _row(url, ctx_type=kind))
 
 
 def contexts_of(parsed: DataFrame, ctx_type: str) -> DataFrame:

@@ -18,12 +18,12 @@ from pyspark.sql import functions as F
 
 from .cache import cached
 from .candidates_op import extract_candidates, same_row
-from .corpus import PRED, load_docs, make_web_pages
+from .corpus import PRED, load_docs
 from .labeling import with_marginals
 from .matchers import RegexMatchSpan
 from .mention_spaces import MentionNgrams
-from .mentions_op import MentionSpec, extract_mentions, extract_mentions_fused
-from .parse import contexts_of, parse_webpages
+from .mentions_op import MentionSpec, extract_mentions_fused
+from .parse import ParseConfig, contexts_of, corpus_docs, parse_webpages
 from .triples import materialize_triples
 
 PART_RGX = r"PN\d{3}[A-C]"
@@ -117,12 +117,12 @@ def kg_stages(
     own (extract_candidates over ``mentions``, labeling.triplet_marginals).
     """
     from .candidates_fused import extract_candidates_auto, same_row_py
-    from .parse import ParseConfig
 
-    pages = make_web_pages(spark, sf_dir, max_docs, replicate=replicate)
-    parsed = parse_webpages(pages)
-    sentences = contexts_of(parsed, "sentence")
     docs = load_docs(spark, sf_dir, max_docs, replicate)
+    # one document source: every parse below renders each page in its own
+    # Python stage, so no stage reads a pre-rendered pages frame
+    parsed = parse_webpages(docs, corpus_docs())
+    sentences = contexts_of(parsed, "sentence")
 
     # mentions as a standalone frame (fused render+parse+extract — one
     # python stage); cached because callers read it more than once. Only
@@ -152,7 +152,6 @@ def kg_stages(
             default_lfs())
 
     st = LazyStages({
-        "web_pages": lambda: pages,
         "parsed": lambda: parsed,
         "sentences": lambda: sentences,
         "mentions": build_mentions,

@@ -22,8 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .corpus import WEB_PAGES_SCHEMA
-from .mentions_op import WEB_PAGES, MentionSpec, fused_mentions
-from .parse import ParseConfig
+from .mentions_op import MentionSpec, fused_mentions
+from .parse import WEB_PAGES, ParseConfig
 
 
 def stream_web_pages(spark: SparkSession, input_dir: str,
@@ -40,7 +40,7 @@ def stream_web_pages(spark: SparkSession, input_dir: str,
 def stream_mentions(pages: DataFrame, specs: Sequence[MentionSpec],
                     cfg: Optional[ParseConfig] = None) -> DataFrame:
     """Streaming fused parse+mention extraction over (url, html) pages: the
-    batch kernel and batch loop (mentions_op.map_documents), so a page that
+    batch kernel and batch loop (parse.map_documents), so a page that
     fails to parse yields one ``PARSE_ERROR_TYPE`` marker row here too."""
     return fused_mentions(pages, WEB_PAGES, specs, cfg)
 

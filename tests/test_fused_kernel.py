@@ -20,6 +20,7 @@ from fonduer_spark.mentions_op import (
     doc_mentions,
     extract_mentions_fused,
 )
+from fonduer_spark.parse import corpus_docs, parse_webpages
 from fonduer_spark.pipeline import LazyStages, default_lfs, default_mention_specs
 from fonduer_spark.serve import build_default_model
 
@@ -75,6 +76,18 @@ def test_mentions_fused_marks_failed_doc(docs, good_docs):
     want = extract_mentions_fused(good_docs, default_mention_specs())
     got = _rows(good, MENTION_KEY)
     assert got and got == _rows(want, MENTION_KEY)
+
+
+def test_parse_marks_failed_doc(docs, good_docs):
+    """The all-contexts parse runs on the same batch loop: one
+    PARSE_ERROR_TYPE context row for the bad page, the rest unchanged."""
+    errs, good = _split(
+        parse_webpages(docs, corpus_docs(_bad_render)), "ctx_type")
+    assert [(e.url, e.stable_id, e.text) for e in errs] == [
+        (url_of(BAD), None, None)]
+    want = parse_webpages(good_docs, corpus_docs())
+    assert good.count() == want.count() > 0
+    assert good.exceptAll(want).count() == 0
 
 
 def test_stream_mentions_marks_failed_page(spark, tmp_path):

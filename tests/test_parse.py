@@ -4,6 +4,8 @@ golden assertions: table/cell/sentence counts, offsets, xpath, attrs)."""
 
 from collections import Counter
 
+import pytest
+
 from fonduer_spark.corpus import n_rows, n_tables, render_page, part_code
 from fonduer_spark.lingual import SimpleParser
 from fonduer_spark.parse import ParseConfig, parse_document
@@ -256,3 +258,66 @@ def test_sibling_and_ancestor_structural_context():
     assert first["prev_sib_tag"] is None and first["node_pos"] == 1
     last = by_text["x"]
     assert last["next_sib_tag"] is None and last["node_pos"] == 3
+
+
+def _make_hocr_render():
+    # nested, so cloudpickle ships it by value to the Python workers
+    def render(i, _text):
+        from fonduer_spark.corpus import render_hocr
+        from fonduer_spark.sources import rewrite_hocr
+
+        return rewrite_hocr(render_hocr(int(i)))
+    return render
+
+
+def _rendered_pages(docs, render):
+    """A hand-written render stage: (doc_id, text) -> (url, html bytes)."""
+    import pandas as pd
+
+    from fonduer_spark.corpus import url_of
+
+    def gen(batches):
+        for pdf in batches:
+            yield pd.DataFrame({
+                "url": [url_of(int(i)) for i in pdf["doc_id"]],
+                "html": [render(i, t).encode("utf-8")
+                         for i, t in zip(pdf["doc_id"], pdf["text"])]})
+
+    return docs.mapInPandas(gen, "url string, html binary")
+
+
+@pytest.mark.parametrize("hocr", [False, True])
+def test_docs_source_parse_equals_web_pages_parse(spark, hocr):
+    """Parsing the (doc_id, text) frame through corpus_docs(render) yields
+    the same context rows, every column and every ctx_type, as parsing the
+    rendered web_pages table — the default render against make_web_pages,
+    and the hOCR render + visual/regex-tagger config the visual featurize
+    query parses with."""
+    from fonduer_spark.corpus import load_docs, make_web_pages
+    from fonduer_spark.parse import (CONTEXT_COLUMNS, corpus_docs,
+                                     parse_webpages)
+
+    sf = "/root/testdata/sf0.001"
+    docs = load_docs(spark, sf, max_docs=6)
+    if hocr:
+        cfg = ParseConfig(visual="hocr", lingual="regex_tagger")
+        render = _make_hocr_render()
+        pages = _rendered_pages(docs, render)
+        got = parse_webpages(docs, corpus_docs(render), cfg)
+    else:
+        cfg = ParseConfig()
+        pages = make_web_pages(spark, sf, max_docs=6)
+        got = parse_webpages(docs, corpus_docs(), cfg)
+    want = parse_webpages(pages, cfg)
+    assert got.columns == want.columns == CONTEXT_COLUMNS
+    types = {r[0] for r in got.select("ctx_type").distinct().collect()}
+    if not hocr:
+        assert types == {"document", "section", "table", "cell", "figure",
+                         "caption", "paragraph", "sentence"}
+    assert "sentence" in types
+    for t in sorted(types):
+        g, w = got.where(got.ctx_type == t), want.where(want.ctx_type == t)
+        assert g.count() == w.count() > 0, t
+        assert g.exceptAll(w).count() == 0, t
+    if hocr:  # the visual columns are populated, not silently null
+        assert got.where(got.page.isNotNull()).count() > 0

@@ -70,14 +70,14 @@ def test_candidate_prob_separates_min_max(spark, stages):
 
 
 def test_parse_error_isolation(spark):
-    from fonduer_spark.parse import parse_webpages
+    from fonduer_spark.parse import PARSE_ERROR_TYPE, parse_webpages
 
     bad = spark.createDataFrame(
         [("ok", bytearray(b"<html><body><p>fine.</p></body></html>")),
          ("bad", bytearray(b"<td>orphan cell"))],
         "url string, html binary")
     parsed = parse_webpages(bad)
-    errs = parsed.where(parsed.ctx_type == "parse_error").collect()
+    errs = parsed.where(parsed.ctx_type == PARSE_ERROR_TYPE).collect()
     assert [e.url for e in errs] == ["bad"]
     ok_sents = parsed.where(
         (parsed.ctx_type == "sentence") & (parsed.url == "ok")).count()

@@ -174,6 +174,20 @@ def test_multi_relation_single_parse(spark):
     assert n_both == n_one
 
 
+def test_kg_features_renders_each_page_once(spark):
+    """kg_features plans exactly 4 Python stages: the all-contexts parse
+    reads the same (doc_id, text) source as the fused candidate stage and
+    renders inside its own parse, with no render-only MapInPandas before
+    it."""
+    import re
+
+    from fonduer_spark.cache import released
+
+    with released():
+        plan = plan_of(E.q_kg_features(spark, SF))
+    assert len(set(re.findall(r"MapInPandas \((\d+)\)", plan))) == 4, plan
+
+
 def test_embcos_lsh_no_cartesian(spark):
     """The embedding near-dup scale path must never plan an all-pairs
     product over the corpus: banded sign-LSH buckets + in-bucket verify

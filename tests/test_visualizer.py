@@ -27,27 +27,15 @@ def hocr_mentions(spark):
 
 @pytest.fixture(scope="module")
 def hocr_sentences(spark):
-    import pandas as pd
-
-    from fonduer_spark.corpus import WEB_PAGES_SCHEMA, load_docs
-    from fonduer_spark.parse import contexts_of, parse_webpages
+    from fonduer_spark.parse import contexts_of, corpus_docs, parse_webpages
 
     docs = load_docs(spark, "/root/testdata/sf0.001", max_docs=2)
 
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": [url_of(int(i)) for i in pdf["doc_id"]],
-                "warc_ts": pd.NaT,
-                "html": [rewrite_hocr(render_hocr(int(i))).encode()
-                         for i in pdf["doc_id"]],
-                "text": "",
-                "lang": "en",
-            })
+    def render(i, _text):
+        return rewrite_hocr(render_hocr(int(i)))
 
-    pages = docs.mapInPandas(gen, WEB_PAGES_SCHEMA)
-    return contexts_of(
-        parse_webpages(pages, ParseConfig(visual="hocr")), "sentence")
+    return contexts_of(parse_webpages(
+        docs, corpus_docs(render), ParseConfig(visual="hocr")), "sentence")
 
 
 def test_svg_page_golden():

@@ -387,7 +387,7 @@ def q_kg_features_lingual(spark: SparkSession, sf_dir: str) -> DataFrame:
         mentions, "part_temp", "part", "temp",
         throttler=same_row, throttler_kind="column")
     sentences = contexts_of(
-        parse_webpages(docs, corpus_docs(), cfg), "sentence")
+        parse_webpages(docs, cfg, source=corpus_docs()), "sentence")
     feats = featurize(cands, sentences)
     census = _family_census(feats)
     return census.where(
@@ -427,7 +427,7 @@ def q_kg_visual_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
         throttler_kind="column",
     )
     sentences = contexts_of(
-        parse_webpages(docs, corpus_docs(render), cfg), "sentence")
+        parse_webpages(docs, cfg, source=corpus_docs(render)), "sentence")
     feats = featurize(cands, sentences,
                       libs=("textual", "tabular", "structural", "visual"))
     census = _family_census(feats)

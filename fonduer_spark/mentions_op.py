@@ -323,7 +323,8 @@ def doc_mentions(url: str, html: str, cfg, lp, specs, fast) -> Dict[str, List[di
 
 def mentions_kernel(specs, cfg: ParseConfig):
     """``doc_mentions`` bound to ``specs`` and ``cfg``: the
-    ``kernel(url, html, lp)`` the fused stages pass to map_documents."""
+    ``kernel(url, html, lp)`` the fused stages pass to map_documents and
+    serving calls once per page."""
     specs = list(specs)
     fast = [_fast_unigram_regex(s) for s in specs]
     return lambda url, html, lp: doc_mentions(url, html, cfg, lp, specs, fast)

@@ -694,15 +694,12 @@ def map_documents(frame: DataFrame, source: tuple, kernel, cfg: ParseConfig,
     return frame.select(*cols).mapInPandas(fn, schema)
 
 
-def parse_webpages(frame: DataFrame, source: tuple = WEB_PAGES,
-                   cfg: Optional[ParseConfig] = None) -> DataFrame:
+def parse_webpages(frame: DataFrame, cfg: Optional[ParseConfig] = None,
+                   source: tuple = WEB_PAGES) -> DataFrame:
     """Documents -> unified context rows: map_documents with the
     ``parse_document`` kernel. ``source`` is WEB_PAGES (url, html) or
-    ``corpus_docs(render)`` over (doc_id, text); a ParseConfig there is
-    taken as ``cfg``. A failed document becomes one context row with
-    ``ctx_type = PARSE_ERROR_TYPE``, only url set."""
-    if isinstance(source, ParseConfig):
-        source, cfg = WEB_PAGES, source
+    ``corpus_docs(render)`` over (doc_id, text). A failed document becomes
+    one context row with ``ctx_type = PARSE_ERROR_TYPE``, only url set."""
     cfg = cfg or ParseConfig()
 
     def kernel(url: str, html: str, lp: LingualParser) -> List[Dict[str, Any]]:

@@ -121,7 +121,7 @@ def kg_stages(
     docs = load_docs(spark, sf_dir, max_docs, replicate)
     # one document source: every parse below renders each page in its own
     # Python stage, so no stage reads a pre-rendered pages frame
-    parsed = parse_webpages(docs, corpus_docs())
+    parsed = parse_webpages(docs, source=corpus_docs())
     sentences = contexts_of(parsed, "sentence")
 
     # mentions as a standalone frame (fused render+parse+extract — one

@@ -16,7 +16,7 @@ import re
 from typing import Callable, Dict, List, Mapping, Optional, Sequence, Tuple
 
 from .candidates_fused import PyThrottler, _doc_candidates, same_row_py
-from .mentions_op import MentionSpec, _fast_unigram_regex, doc_mentions
+from .mentions_op import MentionSpec, mentions_kernel
 from .parse import ParseConfig
 
 
@@ -48,13 +48,12 @@ class FonduerPipelineModel:
         self.cfg = parse_cfg or ParseConfig()
         self.prob_threshold = prob_threshold
         self._lp = self.cfg.make_lingual_parser()
-        self._fast = [_fast_unigram_regex(s) for s in self.specs]
+        self._kernel = mentions_kernel(self.specs, self.cfg)
 
     def classify(self, url: str, html: str) -> List[Tuple[str, str, str, float]]:
         """Score one page; raises when it fails to parse (the batch stages
         emit a marker row instead — here the caller gets the error)."""
-        by_type = doc_mentions(url, html, self.cfg, self._lp, self.specs,
-                               self._fast)
+        by_type = self._kernel(url, html, self._lp)
         cands: List[dict] = []
         _doc_candidates(
             by_type, self.candidate_type, self.type_a, self.type_b,

@@ -17,7 +17,6 @@ from fonduer_spark.candidates_op import same_row
 from fonduer_spark.corpus import load_docs, make_web_pages, render_page, url_of
 from fonduer_spark.mentions_op import (
     PARSE_ERROR_TYPE,
-    doc_mentions,
     extract_mentions_fused,
 )
 from fonduer_spark.parse import corpus_docs, parse_webpages
@@ -82,10 +81,10 @@ def test_parse_marks_failed_doc(docs, good_docs):
     """The all-contexts parse runs on the same batch loop: one
     PARSE_ERROR_TYPE context row for the bad page, the rest unchanged."""
     errs, good = _split(
-        parse_webpages(docs, corpus_docs(_bad_render)), "ctx_type")
+        parse_webpages(docs, source=corpus_docs(_bad_render)), "ctx_type")
     assert [(e.url, e.stable_id, e.text) for e in errs] == [
         (url_of(BAD), None, None)]
-    want = parse_webpages(good_docs, corpus_docs())
+    want = parse_webpages(good_docs, source=corpus_docs())
     assert good.count() == want.count() > 0
     assert good.exceptAll(want).count() == 0
 
@@ -207,8 +206,7 @@ def test_serve_honours_lingual_config(spark):
     assert isinstance(model._lp, RegexTaggerParser)
     assert model.classify(url_of(0), page) == [("PN002B", "p", "55", 1.0)]
 
-    served = doc_mentions(url_of(0), page, cfg, model._lp, model.specs,
-                          model._fast)
+    served = model._kernel(url_of(0), page, model._lp)
     got = sorted(tuple(m[k] for k in MENTION_KEY)
                  for ms in served.values() for m in ms)
     batch = extract_mentions_fused(

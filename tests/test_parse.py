@@ -303,11 +303,11 @@ def test_docs_source_parse_equals_web_pages_parse(spark, hocr):
         cfg = ParseConfig(visual="hocr", lingual="regex_tagger")
         render = _make_hocr_render()
         pages = _rendered_pages(docs, render)
-        got = parse_webpages(docs, corpus_docs(render), cfg)
+        got = parse_webpages(docs, cfg, source=corpus_docs(render))
     else:
         cfg = ParseConfig()
         pages = make_web_pages(spark, sf, max_docs=6)
-        got = parse_webpages(docs, corpus_docs(), cfg)
+        got = parse_webpages(docs, cfg, source=corpus_docs())
     want = parse_webpages(pages, cfg)
     assert got.columns == want.columns == CONTEXT_COLUMNS
     types = {r[0] for r in got.select("ctx_type").distinct().collect()}

@@ -35,7 +35,8 @@ def hocr_sentences(spark):
         return rewrite_hocr(render_hocr(int(i)))
 
     return contexts_of(parse_webpages(
-        docs, corpus_docs(render), ParseConfig(visual="hocr")), "sentence")
+        docs, ParseConfig(visual="hocr"), source=corpus_docs(render)),
+        "sentence")
 
 
 def test_svg_page_golden():

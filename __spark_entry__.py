@@ -175,6 +175,27 @@ def _family_census(feats: DataFrame) -> DataFrame:
     )
 
 
+def _nary_row_throttler(df: DataFrame):
+    """The (part, tmin, tmax) throttler of the n-ary queries: all three
+    slots in one table, both temps on the part's row, tmin left of tmax."""
+    same_tab = (
+        F.col("m0_table_sid").isNotNull()
+        & (F.col("m0_table_sid") == F.col("m1_table_sid"))
+        & (F.col("m0_table_sid") == F.col("m2_table_sid"))
+    )
+
+    def row_olap(a, b):
+        return ~(
+            (F.col(f"{a}_row_start") > F.col(f"{b}_row_end"))
+            | (F.col(f"{b}_row_start") > F.col(f"{a}_row_end"))
+        )
+
+    return (
+        same_tab & row_olap("m0", "m1") & row_olap("m0", "m2")
+        & (F.col("m1_col_start") < F.col("m2_col_start"))
+    )
+
+
 def q_kg_nary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N-ary featurization census, oracle-checked: the ternary
     (part, tmin, tmax) candidates of kg_nary featurized end-to-end — slot
@@ -186,28 +207,9 @@ def q_kg_nary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fonduer_spark.featurize import featurize
 
     st = kg_stages(spark, sf_dir)
-
-    def thr(df):
-        same_tab = (
-            F.col("m0_table_sid").isNotNull()
-            & (F.col("m0_table_sid") == F.col("m1_table_sid"))
-            & (F.col("m0_table_sid") == F.col("m2_table_sid"))
-        )
-
-        def row_olap(a, b):
-            return ~(
-                (F.col(f"{a}_row_start") > F.col(f"{b}_row_end"))
-                | (F.col(f"{b}_row_start") > F.col(f"{a}_row_end"))
-            )
-
-        return (
-            same_tab & row_olap("m0", "m1") & row_olap("m0", "m2")
-            & (F.col("m1_col_start") < F.col("m2_col_start"))
-        )
-
     cands = extract_candidates_nary(
         st["mentions"], "part_tmin_tmax", ["part", "temp", "temp"],
-        throttler=thr)
+        throttler=_nary_row_throttler)
     return _family_census(featurize(cands, st["sentences"]))
 
 
@@ -328,6 +330,34 @@ def q_kg_triples_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _visual_candidates(spark: SparkSession, sf_dir: str, cfg):
+    """The hOCR lineage of the visual queries: each document rendered as
+    hOCR (render_hocr, preprocessed by sources.rewrite_hocr), mentions
+    parsed under ``cfg`` (a ParseConfig with visual="hocr", so words carry
+    bboxes), and (part, temp) candidates throttled by same_page AND
+    is_horz_aligned. Returns (docs, render, candidates), so a caller can
+    parse the same pages again for their sentences."""
+    from fonduer_spark.candidates_op import extract_candidates
+    from fonduer_spark.corpus import load_docs, render_hocr
+    from fonduer_spark.data_model_utils import is_horz_aligned, same_page
+    from fonduer_spark.mentions_op import extract_mentions_fused
+    from fonduer_spark.pipeline import default_mention_specs
+    from fonduer_spark.sources import rewrite_hocr
+
+    def render(i, _text):
+        return rewrite_hocr(render_hocr(int(i)))
+
+    docs = load_docs(spark, sf_dir)
+    mentions = extract_mentions_fused(
+        docs, default_mention_specs(), render=render, parse_cfg=cfg)
+    cands = extract_candidates(
+        mentions, "part_temp_visual", "part", "temp",
+        throttler=lambda df: same_page() & is_horz_aligned(),
+        throttler_kind="column",
+    )
+    return docs, render, cands
+
+
 def q_kg_visual_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Visual-modality pipeline, oracle-checked: the corpus rendered as hOCR
     (one ocr_page per table, one ocr_line per body row), preprocessed by
@@ -335,25 +365,10 @@ def q_kg_visual_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     carry bboxes, and candidates throttled by same_page AND is_horz_aligned
     — the same (part, temp) pairs recovered through BBOX GEOMETRY instead of
     table structure: 2 per body row per doc."""
-    from fonduer_spark.candidates_op import extract_candidates
-    from fonduer_spark.corpus import load_docs, render_hocr
-    from fonduer_spark.data_model_utils import is_horz_aligned, same_page
-    from fonduer_spark.mentions_op import extract_mentions_fused
     from fonduer_spark.parse import ParseConfig
-    from fonduer_spark.pipeline import default_mention_specs
-    from fonduer_spark.sources import rewrite_hocr
 
-    docs = load_docs(spark, sf_dir)
-    mentions = extract_mentions_fused(
-        docs, default_mention_specs(),
-        render=lambda i, text: rewrite_hocr(render_hocr(int(i))),
-        parse_cfg=ParseConfig(visual="hocr"),
-    )
-    cands = extract_candidates(
-        mentions, "part_temp_visual", "part", "temp",
-        throttler=lambda df: same_page() & is_horz_aligned(),
-        throttler_kind="column",
-    )
+    _, _, cands = _visual_candidates(spark, sf_dir,
+                                     ParseConfig(visual="hocr"))
     return (
         cands.groupBy("url")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
@@ -403,29 +418,12 @@ def q_kg_visual_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT_/RIGHT_/CENTER_-prefixed, via the cumulative alignment-group
     protocol of visual_aligned_lemmas) + 1 PAGE_ key; each candidate adds
     SAME_PAGE + HORZ_ALIGNED (never VERT_*: the columns are 10+pt apart)."""
-    from fonduer_spark.candidates_op import extract_candidates
-    from fonduer_spark.corpus import load_docs, render_hocr
-    from fonduer_spark.data_model_utils import is_horz_aligned, same_page
     from fonduer_spark.featurize import featurize
-    from fonduer_spark.mentions_op import extract_mentions_fused
     from fonduer_spark.parse import (
         ParseConfig, contexts_of, corpus_docs, parse_webpages)
-    from fonduer_spark.pipeline import default_mention_specs
-    from fonduer_spark.sources import rewrite_hocr
 
-    docs = load_docs(spark, sf_dir)
     cfg = ParseConfig(visual="hocr", lingual="regex_tagger")
-
-    def render(i, _text):
-        return rewrite_hocr(render_hocr(int(i)))
-
-    mentions = extract_mentions_fused(
-        docs, default_mention_specs(), render=render, parse_cfg=cfg)
-    cands = extract_candidates(
-        mentions, "part_temp_visual", "part", "temp",
-        throttler=lambda df: same_page() & is_horz_aligned(),
-        throttler_kind="column",
-    )
+    docs, render, cands = _visual_candidates(spark, sf_dir, cfg)
     sentences = contexts_of(
         parse_webpages(docs, cfg, source=corpus_docs(render)), "sentence")
     feats = featurize(cands, sentences,
@@ -446,27 +444,12 @@ def q_kg_visual_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's Letter 612x792 defaults), and no 6-dp rounding boundary is
     reachable for denominators 612/792 (no solution to K*1e6 === d/2 mod d),
     so Spark and DuckDB round identically."""
-    from fonduer_spark.candidates_op import extract_candidates
-    from fonduer_spark.corpus import load_docs, render_hocr
     from fonduer_spark.data_model_utils import (
-        get_page_horz_percentile, get_page_vert_percentile, is_horz_aligned,
-        same_page)
-    from fonduer_spark.mentions_op import extract_mentions_fused
+        get_page_horz_percentile, get_page_vert_percentile)
     from fonduer_spark.parse import ParseConfig
-    from fonduer_spark.pipeline import default_mention_specs
-    from fonduer_spark.sources import rewrite_hocr
 
-    docs = load_docs(spark, sf_dir)
-    mentions = extract_mentions_fused(
-        docs, default_mention_specs(),
-        render=lambda i, text: rewrite_hocr(render_hocr(int(i))),
-        parse_cfg=ParseConfig(visual="hocr"),
-    )
-    cands = extract_candidates(
-        mentions, "part_temp_visual", "part", "temp",
-        throttler=lambda df: same_page() & is_horz_aligned(),
-        throttler_kind="column",
-    )
+    _, _, cands = _visual_candidates(spark, sf_dir,
+                                     ParseConfig(visual="hocr"))
     return (
         cands.select(
             "url",
@@ -913,25 +896,9 @@ def q_kg_nary(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fonduer_spark.candidates_op import extract_candidates_nary
 
     mentions = kg_stages(spark, sf_dir)["mentions"]
-
-    def thr(df):
-        same_tab = (
-            F.col("m0_table_sid").isNotNull()
-            & (F.col("m0_table_sid") == F.col("m1_table_sid"))
-            & (F.col("m0_table_sid") == F.col("m2_table_sid"))
-        )
-        def row_olap(a, b):
-            return ~(
-                (F.col(f"{a}_row_start") > F.col(f"{b}_row_end"))
-                | (F.col(f"{b}_row_start") > F.col(f"{a}_row_end"))
-            )
-        return (
-            same_tab & row_olap("m0", "m1") & row_olap("m0", "m2")
-            & (F.col("m1_col_start") < F.col("m2_col_start"))
-        )
-
     c = extract_candidates_nary(
-        mentions, "part_tmin_tmax", ["part", "temp", "temp"], throttler=thr)
+        mentions, "part_tmin_tmax", ["part", "temp", "temp"],
+        throttler=_nary_row_throttler)
     return (
         c.select(
             F.col("m0_span_text").alias("part"),

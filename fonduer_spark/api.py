@@ -310,6 +310,24 @@ class Labeler:
         return majority_vote_marginals(labels)
 
 
+def _label_space(cardinality, values) -> Tuple[int, Optional[tuple], bool]:
+    """The label space of a label or discriminative model: a CandidateSpec
+    passed as ``cardinality`` lends its values; values must match the
+    cardinality, which must be >= 2. Returns (cardinality, values tuple or
+    None, binary) — binary is the default two-class space with no values,
+    the one that keeps the sigmoid heads."""
+    if isinstance(cardinality, CandidateSpec):
+        values = cardinality.values
+        cardinality = cardinality.cardinality
+    if values is not None:
+        if len(values) != cardinality:
+            raise ValueError("Number of values must match cardinality.")
+        values = tuple(values)
+    if cardinality < 2:
+        raise ValueError("cardinality must be >= 2")
+    return cardinality, values, cardinality == 2 and values is None
+
+
 class LabelModel:
     """snorkel LabelModel call shape (the reference drives
     snorkel.labeling.model.LabelModel directly after Labeler.apply,
@@ -327,24 +345,15 @@ class LabelModel:
 
     def __init__(self, spark: SparkSession, cardinality: int = 2,
                  values: Optional[Sequence] = None) -> None:
-        if isinstance(cardinality, CandidateSpec):
-            values = cardinality.values
-            cardinality = cardinality.cardinality
-        if values is not None:
-            if len(values) != cardinality:
-                raise ValueError("Number of values must match cardinality.")
-            values = tuple(values)
-        if cardinality < 2:
-            raise ValueError("cardinality must be >= 2")
+        self.cardinality, self.values, self.binary = _label_space(
+            cardinality, values)
         self.spark = spark
-        self.cardinality = cardinality
-        self.values = values
         self.model_: Optional[Dict] = None
 
     def fit(self, candidates: DataFrame, lfs: Dict) -> "LabelModel":
         from .labeling import ovr_triplet_label_model, triplet_label_model
 
-        if self.cardinality == 2 and self.values is None:
+        if self.binary:
             self.model_ = triplet_label_model(candidates, lfs)
         else:
             self.model_ = ovr_triplet_label_model(
@@ -358,7 +367,7 @@ class LabelModel:
 
         if self.model_ is None:
             raise ValueError("fit() before predict_proba()")
-        if self.cardinality == 2 and self.values is None:
+        if self.binary:
             return score_with_label_model(
                 candidates, self.lfs_, self.model_,
                 prior=0.5 if prior is None else prior)
@@ -371,7 +380,7 @@ class LabelModel:
         {lf: acc} when binary, {class_idx: {lf: acc}} when k-ary."""
         if self.model_ is None:
             raise ValueError("fit() before get_weights()")
-        if self.cardinality == 2 and self.values is None:
+        if self.binary:
             return {n: m["accuracy"] for n, m in self.model_.items()}
         return {c: {n: m["accuracy"] for n, m in per.items()}
                 for c, per in self.model_.items()}
@@ -395,20 +404,12 @@ class DiscriminativeModel:
     def __init__(self, spark: SparkSession, cardinality: int = 2,
                  values: Optional[Sequence] = None,
                  arch: str = "logreg") -> None:
-        if isinstance(cardinality, CandidateSpec):
-            values = cardinality.values
-            cardinality = cardinality.cardinality
-        if values is not None:
-            if len(values) != cardinality:
-                raise ValueError("Number of values must match cardinality.")
-            values = tuple(str(v) for v in values)
-        if cardinality < 2:
-            raise ValueError("cardinality must be >= 2")
+        self.cardinality, values, self.binary = _label_space(
+            cardinality, values)
         if arch not in ("logreg", "sequence"):
             raise ValueError(f"unknown arch {arch!r}: logreg | sequence")
         self.spark = spark
-        self.cardinality = cardinality
-        self.values = values
+        self.values = None if values is None else tuple(str(v) for v in values)
         self.arch = arch
         self.weights_ = None
         self.bias_ = None
@@ -417,16 +418,15 @@ class DiscriminativeModel:
             **kw) -> "DiscriminativeModel":
         from . import learning as L
 
-        if self.cardinality == 2 and self.values is None:
+        if self.binary:
             fn = L.train_logreg if self.arch == "logreg" \
                 else L.train_sequence_model
             self.weights_, self.bias_ = fn(inputs, marginals, **kw)
-        elif self.arch == "logreg":
-            self.weights_, self.bias_ = L.train_logreg_k(
-                inputs, marginals, self.cardinality, **kw)
         else:
-            self.weights_, self.bias_ = L.train_sequence_model_k(
-                inputs, marginals, self.cardinality, **kw)
+            fn = L.train_logreg_k if self.arch == "logreg" \
+                else L.train_sequence_model_k
+            self.weights_, self.bias_ = fn(inputs, marginals,
+                                           self.cardinality, **kw)
         return self
 
     def predict(self, inputs: DataFrame) -> DataFrame:
@@ -434,7 +434,7 @@ class DiscriminativeModel:
 
         if self.weights_ is None:
             raise ValueError("fit() before predict()")
-        if self.cardinality == 2 and self.values is None:
+        if self.binary:
             fn = L.score_with_model if self.arch == "logreg" \
                 else L.score_sequences
             return fn(inputs, self.weights_, self.bias_)

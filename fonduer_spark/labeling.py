@@ -18,6 +18,7 @@ LabelModel — SURVEY.md §2.8).
 
 from __future__ import annotations
 
+import math
 import warnings
 from typing import Callable, Dict, Iterator, List, Mapping, Optional, Sequence, Union
 
@@ -40,28 +41,32 @@ LABEL_SCHEMA = T.StructType([
 ])
 
 
+def _int_votes(name: str, expr: Column, k: int) -> Column:
+    """One column LF's int votes in 0-shifted storage (stored = label + 1,
+    NULL = ABSTAIN = stored 0), bound-checked to labels [-1, k-1]: an
+    out-of-range vote would be stored as a class no model reads (counted
+    as a vote, in no class), so it fails fast like an unknown value."""
+    stored = F.coalesce(expr.cast("int"), F.lit(ABSTAIN)) + F.lit(1)
+    return (
+        F.when((stored >= 0) & (stored <= k), stored)
+        .otherwise(F.raise_error(F.concat(
+            F.lit(f"Can't parse label value for LF {name}: int "),
+            expr.cast("string"),
+            F.lit(f" outside [-1, {k - 1}]"))).cast("int"))
+    )
+
+
 def _map_value_space(df: DataFrame, name: str, expr: Column,
                      values: Sequence) -> Column:
     """Reference labeler value-space mapping (supervision/labeler.py:436-465)
     for one column LF: int outputs are assumed already mapped (stored =
-    label + 1); NULL is the protected ABSTAIN (stored 0); any other output
-    must be a member of ``values`` and stores its 1-based index; an unknown
-    value raises, exactly like the reference's ValueError."""
+    label + 1, bound-checked by _int_votes); NULL is the protected ABSTAIN
+    (stored 0); any other output must be a member of ``values`` and stores
+    its 1-based index; an unknown value raises, exactly like the
+    reference's ValueError."""
     dtype = df.select(expr.alias("_probe")).schema[0].dataType
     if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        # reference: "if the LF output is an int, it is already mapped" —
-        # but an out-of-range int would store an unmappable vote that
-        # silently leaks probability mass from majority_vote_marginals_k
-        # (counted in n_votes, in no class), so bound-check to [-1, k-1]
-        # and fail fast like the unknown-value branch below
-        stored = F.coalesce(expr.cast("int"), F.lit(ABSTAIN)) + F.lit(1)
-        return (
-            F.when((stored >= 0) & (stored <= len(values)), stored)
-            .otherwise(F.raise_error(F.concat(
-                F.lit(f"Can't parse label value for LF {name}: int "),
-                expr.cast("string"),
-                F.lit(f" outside [-1, {len(values) - 1}]"))).cast("int"))
-        )
+        return _int_votes(name, expr, len(values))
     pos = F.array_position(
         F.array(*[F.lit(v) for v in values]), expr)
     return (
@@ -81,10 +86,10 @@ def _eval_lfs(
     """Append one 0-shifted ``_lf_<name>`` int column per LF.
 
     ``values=None`` keeps the binary int convention (user {-1,0,1} ->
-    stored {0,1,2}); a ``values`` list switches to the reference's k-ary
-    value space (labeler.py:436-465): LF outputs are members of ``values``
-    (stored = 1-based index), NULL = ABSTAIN (stored 0), int outputs pass
-    through as already-mapped (stored = label + 1)."""
+    stored {0,1,2}; any other int raises); a ``values`` list switches to
+    the reference's k-ary value space (labeler.py:436-465): LF outputs are
+    members of ``values`` (stored = 1-based index), NULL = ABSTAIN (stored
+    0), int outputs pass through as already-mapped (stored = label + 1)."""
     col_lfs: Dict[str, Column] = {}
     pd_lfs: Dict[str, PandasLF] = {}
     for name, lf in lfs.items():
@@ -99,13 +104,9 @@ def _eval_lfs(
             df = df.withColumn(f"_lf_{name}",
                                _map_value_space(df, name, expr, values))
         else:
-            # coalesce: a column LF evaluating to NULL (e.g. F.when with no
-            # .otherwise) stores ABSTAIN, keeping the 0-shifted int
-            # convention consistent with the pandas-LF fillna branch below
-            df = df.withColumn(
-                f"_lf_{name}",
-                F.coalesce(expr.cast("int"), F.lit(ABSTAIN)) + F.lit(1),
-            )
+            # a column LF evaluating to NULL (e.g. F.when with no
+            # .otherwise) stores ABSTAIN, like the pandas-LF fillna below
+            df = df.withColumn(f"_lf_{name}", _int_votes(name, expr, 2))
 
     if pd_lfs:
         schema = T.StructType(
@@ -113,12 +114,12 @@ def _eval_lfs(
             + [T.StructField(f"_lf_{n}", T.IntegerType(), True) for n in pd_lfs]
         )
         val_idx = {v: i + 1 for i, v in enumerate(values)} if values else None
+        k = len(val_idx) if val_idx else 2
 
         def _stored(s: pd.Series, lf_name: str) -> pd.Series:
-            if val_idx is None:
-                return s.fillna(ABSTAIN).astype("int32") + 1
-            k = len(val_idx)
-            if pd.api.types.is_integer_dtype(s):
+            # binary votes, and already-mapped k-ary ints: the bound check
+            # of _int_votes
+            if val_idx is None or pd.api.types.is_integer_dtype(s):
                 out = s.fillna(ABSTAIN).astype("int32") + 1
                 bad = out[(out < 0) | (out > k)]
                 if len(bad):
@@ -158,6 +159,37 @@ def _label_arrays(lfs: Mapping[str, object]):
     keys = F.array(*[F.lit(n) for n in names])
     values = F.array(*[F.col(f"_lf_{n}") for n in names])
     return keys, values
+
+
+def _append(df: DataFrame, cols: Mapping[str, Column]) -> DataFrame:
+    """Append ``cols`` in order, one withColumn each, so a later column may
+    read an earlier one."""
+    for name, col in cols.items():
+        df = df.withColumn(name, col)
+    return df
+
+
+def _scored(df: DataFrame, lfs: Mapping[str, object],
+            scores: Mapping[str, Column]) -> DataFrame:
+    """The label scorers' epilogue: append the keys/values label arrays,
+    then the score columns (which may read ``values``), and drop the
+    ``_lf_*`` vote columns."""
+    keys, values = _label_arrays(lfs)
+    df = _append(df, {"keys": keys, "values": values, **scores})
+    return df.select(*[c for c in df.columns if not c.startswith("_lf_")])
+
+
+def _argmax(arr: Column, values: Optional[Sequence] = None
+            ) -> Dict[str, Column]:
+    """The k-class decision columns, in append order: ``pred_idx``, the
+    0-based argmax of ``arr`` (lowest index on exact ties), and — when
+    ``values`` is given — ``pred_value``, its member of ``values``."""
+    out = {"pred_idx": (F.array_position(arr, F.array_max(arr)) - 1
+                        ).cast("int")}
+    if values is not None:
+        out["pred_value"] = F.element_at(
+            F.array(*[F.lit(str(v)) for v in values]), F.col("pred_idx") + 1)
+    return out
 
 
 def apply_lfs(
@@ -200,11 +232,8 @@ def with_marginals(
     """Append keys/values label arrays AND the majority-vote ``prob`` column
     to the candidates frame itself — zero extra shuffle on the hot path
     (labels + marginals derive from the same projection)."""
-    df = _eval_lfs(candidates, lfs)
-    keys, values = _label_arrays(lfs)
-    df = df.withColumn("keys", keys).withColumn("values", values)
-    df = df.withColumn("prob", _majority_prob())
-    return df.select(*[c for c in df.columns if not c.startswith("_lf_")])
+    return _scored(_eval_lfs(candidates, lfs), lfs,
+                   {"prob": _majority_prob()})
 
 
 def label_keys(labels: DataFrame) -> DataFrame:
@@ -258,17 +287,6 @@ def snorkel_label_model_marginals(labels: DataFrame) -> DataFrame:
         .join(marg, "candidate_sid")
 
 
-def _pm_cols(names: List[str]) -> Dict[str, Column]:
-    """±1-space vote columns from the 0-shifted ``_lf_*`` storage:
-    stored 2 (user TRUE) -> +1, stored 1 (user FALSE) -> -1, ABSTAIN -> 0."""
-    return {
-        n: F.when(F.col(f"_lf_{n}") == 2, F.lit(1))
-            .when(F.col(f"_lf_{n}") == 1, F.lit(-1))
-            .otherwise(F.lit(0))
-        for n in names
-    }
-
-
 def triplet_label_model(
     candidates: DataFrame,
     lfs: Mapping[str, Union[Column, PandasLF]],
@@ -302,7 +320,7 @@ def triplet_label_model(
         raise ValueError("triplet_label_model needs >= 3 LFs; "
                          "use majority_vote_marginals for fewer")
     df = _eval_lfs(candidates, lfs)
-    pm = _pm_cols(names)
+    pm = _pm_cols_k(names, 1)  # binary ±1 space: class 1 = stored 2 = TRUE
     row = df.agg(*_moment_aggs(pm, names, "")).collect()[0]
     return _triplet_from_moments(_moment_reader(row, ""), names, clamp)
 
@@ -335,8 +353,6 @@ def _triplet_from_moments(E, names: List[str],
     """Driver-side closed-form triplet estimates from a pairwise-moment
     reader ``E(a, b)`` — O(k^3) float math, shared by the binary and the
     one-vs-rest k-ary fits."""
-    import math
-
     out: Dict[str, Dict[str, float]] = {}
     for i_name in names:
         others = [n for n in names if n != i_name]
@@ -378,20 +394,9 @@ def score_with_label_model(
     the k weights inlined as literals (a broadcast of floats). Abstains
     contribute 0, so an all-abstain candidate scores the prior, like
     majority_vote_marginals' 0.5. Appends keys/values label arrays too."""
-    import math
-
-    names = sorted(lfs.keys())
-    df = _eval_lfs(candidates, lfs)
-    pm = _pm_cols(names)
-    z = F.lit(math.log(prior / (1.0 - prior)))
-    for n in names:
-        z = z + pm[n].cast("double") * F.lit(model[n]["weight"])
-    keys, values = _label_arrays(lfs)
-    df = (
-        df.withColumn("keys", keys).withColumn("values", values)
-        .withColumn("prob", F.lit(1.0) / (F.lit(1.0) + F.exp(-z)))
-    )
-    return df.select(*[c for c in df.columns if not c.startswith("_lf_")])
+    z = _log_odds(_pm_cols_k(sorted(lfs.keys()), 1), model, prior)
+    return _scored(_eval_lfs(candidates, lfs), lfs,
+                   {"prob": F.lit(1.0) / (F.lit(1.0) + F.exp(-z))})
 
 
 def triplet_marginals(
@@ -444,30 +449,39 @@ def majority_vote_marginals_k(
         lambda n: F.when(n_votes > 0, n.cast("double") / n_votes)
                    .otherwise(F.lit(1.0 / cardinality)),
     )
-    pred_idx = (F.array_position(counts, F.array_max(counts)) - 1).cast("int")
+    decision = _argmax(counts, values)
     out = labels.select(
         "candidate_sid", "candidate_type", "url",
         probs.alias("probs"),
-        pred_idx.alias("pred_idx"),
+        decision.pop("pred_idx").alias("pred_idx"),
         n_votes.alias("n_votes"),
     )
-    if values is not None:
-        val_arr = F.array(*[F.lit(str(v)) for v in values])
-        out = out.withColumn(
-            "pred_value", F.element_at(val_arr, F.col("pred_idx") + 1))
-    return out
+    return _append(out, decision)
 
 
 def _pm_cols_k(names: List[str], c: int) -> Dict[str, Column]:
     """One-vs-rest ±1 vote columns for class index ``c`` from the 0-shifted
     ``_lf_*`` storage: stored c+1 -> +1, any other non-abstain class -> -1,
-    ABSTAIN (0) -> 0."""
+    ABSTAIN (0) -> 0. Binary votes are stored in {0, 1, 2}, so c = 1 is the
+    binary ±1 space (TRUE -> +1, FALSE -> -1)."""
     return {
         n: F.when(F.col(f"_lf_{n}") == c + 1, F.lit(1))
             .when(F.col(f"_lf_{n}") != 0, F.lit(-1))
             .otherwise(F.lit(0))
         for n in names
     }
+
+
+def _log_odds(pm: Dict[str, Column], model: Dict[str, Dict[str, float]],
+              prior: float) -> Column:
+    """z = logit(prior) + sum_i vote_i * w_i over the ±1 vote columns
+    ``pm`` (in their sorted-LF order) with the fitted weights inlined as
+    literals — the naive-Bayes log-odds of one (binary or one-vs-rest)
+    class."""
+    z = F.lit(math.log(prior / (1.0 - prior)))
+    for n, vote in pm.items():
+        z = z + vote.cast("double") * F.lit(model[n]["weight"])
+    return z
 
 
 def ovr_triplet_label_model(
@@ -515,36 +529,17 @@ def score_with_label_model_k(
     (sigma(z_c) / sum_c sigma(z_c) — the standard OvR normalization) and
     ``pred_idx`` the argmax of z (lowest index on exact ties). Appends the
     keys/values label arrays like score_with_label_model."""
-    import math
-
     names = sorted(lfs.keys())
     cardinality = len(model)
     if prior is None:
         prior = 1.0 / cardinality
-    df = _eval_lfs(candidates, lfs, values=values)
-    z_cols = []
-    for c in range(cardinality):
-        pm = _pm_cols_k(names, c)
-        z = F.lit(math.log(prior / (1.0 - prior)))
-        for n in names:
-            z = z + pm[n].cast("double") * F.lit(model[c][n]["weight"])
-        z_cols.append(z)
-    zs = F.array(*z_cols)
+    zs = F.array(*[_log_odds(_pm_cols_k(names, c), model[c], prior)
+                   for c in range(cardinality)])
     sig = F.transform(zs, lambda z: F.lit(1.0) / (F.lit(1.0) + F.exp(-z)))
     tot = F.aggregate(sig, F.lit(0.0), lambda a, x: a + x)
     probs = F.transform(sig, lambda s: s / tot)
-    pred_idx = (F.array_position(zs, F.array_max(zs)) - 1).cast("int")
-    keys, vals = _label_arrays(lfs)
-    df = (
-        df.withColumn("keys", keys).withColumn("values", vals)
-        .withColumn("probs", probs)
-        .withColumn("pred_idx", pred_idx)
-    )
-    if values is not None:
-        val_arr = F.array(*[F.lit(str(v)) for v in values])
-        df = df.withColumn(
-            "pred_value", F.element_at(val_arr, F.col("pred_idx") + 1))
-    return df.select(*[c for c in df.columns if not c.startswith("_lf_")])
+    return _scored(_eval_lfs(candidates, lfs, values=values), lfs,
+                   {"probs": probs, **_argmax(zs, values)})
 
 
 def entity_level_prf1(

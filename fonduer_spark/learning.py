@@ -21,8 +21,28 @@ import warnings
 from typing import Dict, List, Tuple
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .labeling import _append, _argmax
+
+
+def _lit_vec(xs) -> Column:
+    """A literal array<double> column."""
+    return F.array(*[F.lit(float(x)) for x in xs])
+
+
+def _lit_map(m, lit=lambda v: F.lit(float(v))) -> Column:
+    """A literal key -> value map column, broadcast by the plan as part of
+    the expression; ``lit`` builds each value's literal."""
+    return F.map_from_arrays(F.array(*[F.lit(k) for k in m]),
+                             F.array(*[lit(v) for v in m.values()]))
+
+
+def _marked_cols(frame: DataFrame) -> List[str]:
+    """The ``*_marked`` token-sequence columns of a marked_slot_tokens frame,
+    in column order."""
+    return [c for c in frame.columns if c.endswith("_marked")]
 
 
 def _csr_from_rows(rows, key_order: List[str] = None):
@@ -69,6 +89,83 @@ def collect_csr(features: DataFrame, key_order: List[str] = None,
     return _csr_from_rows(rows, key_order)
 
 
+def _logreg_params(l2, lr, epochs):
+    """lr/l2/epochs, each defaulting to the ``learning.logreg`` section of
+    the engine config (.fonduer-spark.json, see config.get_config) — the
+    reference applies its config to the same knobs (learning/task.py model
+    params)."""
+    from .config import get_config
+
+    cfg = get_config()["learning"]["logreg"]
+    return (cfg["l2"] if l2 is None else l2, cfg["lr"] if lr is None else lr,
+            cfg["epochs"] if epochs is None else epochs)
+
+
+def _soft_labels(rows, k: int) -> np.ndarray:
+    """The collected ``_fit_prob`` labels as an (n, k) matrix: k = 1 is the
+    binary head's P(true) column, where a NULL label becomes 0.5; k > 1 a
+    probability vector per row, where a NULL label becomes uniform."""
+    fill = 0.5 if k == 1 else [1.0 / k] * k
+    return np.array([fill if r["_fit_prob"] is None else r["_fit_prob"]
+                     for r in rows], dtype=np.float64).reshape(len(rows), k)
+
+
+def _fit(row_ids, cols, vals, scale, d: int, Y: np.ndarray, lr: float,
+         l2: float, epochs: int, fit_intercept: bool = True, logger=None):
+    """The one driver-side gradient-descent loop of every model head. The
+    inputs are a sparse matrix in coordinate form (entry e sits at row
+    ``row_ids[e]``, column ``cols[e]``, value ``vals[e]``) and soft labels
+    ``Y`` of shape (n, k); row i's margin for class c is
+    ``B[c] + scale[i] * sum_e vals[e] * W[cols[e], c]``. A one-column ``Y``
+    is the sigmoid head, k columns the softmax head (soft cross-entropy
+    either way). The forward and backward passes are bincount scatter-adds
+    over the entries, no per-row Python loop, and the float program is
+    fixed: the fits are bit-deterministic. Returns (W (d, k), B (k,))."""
+    n, k = Y.shape
+    W = np.zeros((d, k))
+    B = np.zeros(k)
+    for epoch in range(epochs):
+        Z = np.zeros((n, k)) + B
+        for c in range(k):
+            Z[:, c] += np.bincount(row_ids, weights=vals * W[cols, c],
+                                   minlength=n) * scale
+        if k == 1:
+            P = 1.0 / (1.0 + np.exp(-Z))
+        else:
+            Z -= Z.max(axis=1, keepdims=True)  # stable; exact no-op at epoch 0
+            P = np.exp(Z)
+            P /= P.sum(axis=1, keepdims=True)
+        G = P - Y  # soft cross-entropy gradient, (n, k)
+        if logger is not None:  # reference TensorBoardLogger hook
+            if k == 1:
+                y, pc = Y[:, 0], np.clip(P[:, 0], 1e-12, 1 - 1e-12)
+                loss = -(y * np.log(pc) + (1 - y) * np.log(1 - pc)).mean()
+            else:
+                loss = -(Y * np.log(np.clip(P, 1e-12, None))).sum(1).mean()
+            logger.add_scalar("train/loss", float(loss), epoch)
+        for c in range(k):
+            gw = np.bincount(cols, weights=(G[:, c] * scale)[row_ids] * vals,
+                             minlength=d)
+            W[:, c] -= lr * (gw / max(n, 1) + l2 * W[:, c])
+        if fit_intercept:
+            B -= lr * G.mean(axis=0)
+    return W, B
+
+
+def _csr_fit(features, marginals, k, max_fit_candidates, **fit):
+    """Sparse-feature logistic regression: collect the bounded fit rows as
+    CSR and run the shared loop at scale 1. Returns (key order, W, B)."""
+    rows = bounded_fit_rows(features, marginals, ["keys", "values"],
+                            max_fit_candidates,
+                            prob_col="prob" if k == 1 else "probs")
+    indptr, indices, data, _, keys = _csr_from_rows(rows)
+    # CSR entry -> row id (handles empty rows, unlike reduceat)
+    row_ids = np.repeat(np.arange(len(rows)), np.diff(indptr))
+    W, B = _fit(row_ids, indices, data, 1.0, len(keys), _soft_labels(rows, k),
+                **fit)
+    return keys, W, B
+
+
 def train_logreg(
     features: DataFrame,
     marginals: DataFrame,
@@ -80,14 +177,11 @@ def train_logreg(
     logger=None,
 ) -> Tuple[Dict[str, float], float]:
     """Fit logistic regression on (features, soft labels); returns
-    (key -> weight, bias). Driver-side gradient descent on the collected
-    matrix (small); deterministic given the seed.
+    (key -> weight, bias). Driver-side gradient descent (_fit) on the
+    collected matrix (small); deterministic given the seed.
 
     lr/l2/epochs default to the ``learning.logreg`` section of the engine
-    config (.fonduer-spark.json, see config.get_config) — the reference
-    applies its config to the same knobs (learning/task.py model params).
-    The per-epoch forward/backward passes are fully vectorized (bincount
-    scatter-adds over the CSR arrays — no per-row Python loop).
+    config. NULL labels train as 0.5.
 
     Driver-memory bound: the fit collects at most ``max_fit_candidates``
     rows via the shared bounded_fit_rows contract (deterministic xxhash64
@@ -95,39 +189,10 @@ def train_logreg(
     matrix nor the label lookup is an unbounded O(N-candidates) driver
     materialization). Scoring stays fully distributed
     (score_with_model broadcasts the weight map)."""
-    from .config import get_config
-
-    logreg_cfg = get_config()["learning"]["logreg"]
-    l2 = logreg_cfg["l2"] if l2 is None else l2
-    lr = logreg_cfg["lr"] if lr is None else lr
-    epochs = logreg_cfg["epochs"] if epochs is None else epochs
-
-    rows = bounded_fit_rows(features, marginals, ["keys", "values"],
-                            max_fit_candidates)
-    indptr, indices, data, sids, keys = _csr_from_rows(rows)
-    y = np.array([float(r["_fit_prob"]) if r["_fit_prob"] is not None
-                  else 0.5 for r in rows])
-    n, d = len(sids), len(keys)
-    w = np.zeros(d)
-    b = 0.0
-    # CSR entry -> row id (handles empty rows, unlike reduceat)
-    row_ids = np.repeat(np.arange(n), np.diff(indptr))
-    for epoch in range(epochs):
-        # forward: per-entry products scattered into row sums
-        z = b + np.bincount(row_ids, weights=data * w[indices], minlength=n)
-        p = 1.0 / (1.0 + np.exp(-z))
-        g = p - y  # soft-label cross-entropy gradient
-        if logger is not None:  # reference TensorBoardLogger hook
-            pc = np.clip(p, 1e-12, 1 - 1e-12)
-            logger.add_scalar(
-                "train/loss",
-                float(-(y * np.log(pc)
-                        + (1 - y) * np.log(1 - pc)).mean()), epoch)
-        gw = np.bincount(indices, weights=g[row_ids] * data, minlength=d)
-        gw = gw / n + l2 * w
-        w -= lr * gw
-        b -= lr * float(g.mean())
-    return dict(zip(keys, w)), float(b)
+    l2, lr, epochs = _logreg_params(l2, lr, epochs)
+    keys, W, B = _csr_fit(features, marginals, 1, max_fit_candidates,
+                          lr=lr, l2=l2, epochs=epochs, logger=logger)
+    return dict(zip(keys, W[:, 0])), float(B[0])
 
 
 def train_logreg_k(
@@ -149,11 +214,11 @@ def train_logreg_k(
     majority_vote_marginals_k / score_with_label_model_k output — or a
     one-hot encoding of hard labels).
 
-    Returns (key -> [w_0..w_{k-1}], [b_0..b_{k-1}]). Gradient descent is
-    fully vectorized over the CSR arrays (bincount scatter-adds per
-    class); candidates with NULL probs fall back to the uniform vector
-    (the k-ary analogue of binary's 0.5). The fit collect is bounded by
-    the shared bounded_fit_rows contract; scoring stays distributed
+    Returns (key -> [w_0..w_{k-1}], [b_0..b_{k-1}]), fit by the same loop
+    as train_logreg (_fit with a k-column label matrix); candidates with
+    NULL probs fall back to the uniform vector (the k-ary analogue of
+    binary's 0.5). The fit collect is bounded by the shared
+    bounded_fit_rows contract; scoring stays distributed
     (score_with_model_k).
 
     Determinism note (the oracle contract): with epochs=1, zero init,
@@ -162,48 +227,12 @@ def train_logreg_k(
     are w[k][j] = lr * (sum_i x_ij*y_ik - sum_i x_ij / K) / n — pure
     aggregation arithmetic a SQL engine replays bit-identically
     (the kg_multiclass_discrim oracle)."""
-    from .config import get_config
-
-    logreg_cfg = get_config()["learning"]["logreg"]
-    l2 = logreg_cfg["l2"] if l2 is None else l2
-    lr = logreg_cfg["lr"] if lr is None else lr
-    epochs = logreg_cfg["epochs"] if epochs is None else epochs
+    l2, lr, epochs = _logreg_params(l2, lr, epochs)
     if cardinality < 2:
         raise ValueError("cardinality must be >= 2")
-
-    rows = bounded_fit_rows(features, marginals_k, ["keys", "values"],
-                            max_fit_candidates, prob_col="probs")
-    indptr, indices, data, sids, keys = _csr_from_rows(rows)
-    K = cardinality
-    uniform = [1.0 / K] * K
-    Y = np.array([list(r["_fit_prob"]) if r["_fit_prob"] is not None
-                  else uniform for r in rows], dtype=np.float64
-                 ).reshape(len(rows), K)
-    n, d = len(sids), len(keys)
-    W = np.zeros((d, K))
-    B = np.zeros(K)
-    row_ids = np.repeat(np.arange(n), np.diff(indptr))
-    for epoch in range(epochs):
-        # forward: Z[i,k] = B[k] + sum_j x_ij W[j,k], scattered per entry
-        Z = np.zeros((n, K)) + B
-        for k in range(K):
-            Z[:, k] += np.bincount(row_ids, weights=data * W[indices, k],
-                                   minlength=n)
-        Z -= Z.max(axis=1, keepdims=True)  # stable; exact no-op at epoch 0
-        P = np.exp(Z)
-        P /= P.sum(axis=1, keepdims=True)
-        G = P - Y  # soft cross-entropy gradient, (n, K)
-        if logger is not None:  # reference TensorBoardLogger hook
-            logger.add_scalar(
-                "train/loss",
-                float(-(Y * np.log(np.clip(P, 1e-12, None))).sum(1).mean()),
-                epoch)
-        for k in range(K):
-            gw = np.bincount(indices, weights=G[row_ids, k] * data,
-                             minlength=d)
-            W[:, k] -= lr * (gw / max(n, 1) + l2 * W[:, k])
-        if fit_intercept:
-            B -= lr * G.mean(axis=0)
+    keys, W, B = _csr_fit(features, marginals_k, cardinality,
+                          max_fit_candidates, lr=lr, l2=l2, epochs=epochs,
+                          fit_intercept=fit_intercept, logger=logger)
     return ({k: [float(w) for w in W[i]] for i, k in enumerate(keys)},
             [float(b) for b in B])
 
@@ -221,32 +250,19 @@ def score_with_model_k(
     the doubles bit-identically). Appends ``logits`` (array<double>),
     ``pred_idx`` (0-based argmax, first-max tie-break) and — when
     ``values`` is given — ``pred_value``. No Python in the scoring path."""
-    K = len(biases)
-    wmap = F.map_from_arrays(
-        F.array(*[F.lit(k) for k in weights]),
-        F.array(*[F.array(*[F.lit(float(w)) for w in ws])
-                  for ws in weights.values()]),
-    )
-    zeros = F.array(*[F.lit(0.0) for _ in range(K)])
+    wmap = _lit_map(weights, _lit_vec)
+    zeros = _lit_vec([0.0] * len(biases))
     logits = F.aggregate(
         F.zip_with(
             "keys", "values",
             lambda k, v: F.transform(
                 F.coalesce(F.element_at(wmap, k), zeros),
                 lambda w: w * v)),
-        F.array(*[F.lit(float(b)) for b in biases]),
+        _lit_vec(biases),
         lambda acc, x: F.zip_with(acc, x, lambda a, b: a + b),
     )
-    out = features.withColumn("logits", logits)
-    pred_idx = (F.array_position(F.col("logits"),
-                                 F.array_max(F.col("logits"))) - 1
-                ).cast("int")
-    out = out.withColumn("pred_idx", pred_idx)
-    if values is not None:
-        val_arr = F.array(*[F.lit(str(v)) for v in values])
-        out = out.withColumn(
-            "pred_value", F.element_at(val_arr, F.col("pred_idx") + 1))
-    return out
+    return _append(features,
+                   {"logits": logits, **_argmax(F.col("logits"), values)})
 
 
 def mark(l: int, h: int, idx: int) -> List[Tuple[int, str]]:
@@ -315,9 +331,8 @@ def build_word2id(marked: DataFrame, specials: Tuple[str, ...] = ("<pad>", "<unk
     ids ordered by frequency desc then token asc, after the reserved
     specials (0 = <pad>, 1 = <unk>). The census is a Spark aggregation;
     only the vocabulary itself is collected."""
-    m_cols = [c for c in marked.columns if c.endswith("_marked")]
     ex = None
-    for c in m_cols:
+    for c in _marked_cols(marked):
         part = marked.select(F.explode(c).alias("w"))
         ex = part if ex is None else ex.unionByName(part)
     counts = (
@@ -335,13 +350,10 @@ def encode_marked(marked: DataFrame, word2id: Dict[str, int]) -> DataFrame:
     """Token arrays -> id arrays under the broadcast vocabulary (<unk>
     fallback), as column expressions — the distributed equivalent of
     dataset.py:98-107's per-candidate torch.tensor building."""
-    vocab = F.map_from_arrays(
-        F.array(*[F.lit(k) for k in word2id]),
-        F.array(*[F.lit(int(v)) for v in word2id.values()]),
-    )
+    vocab = _lit_map(word2id, lambda v: F.lit(int(v)))
     unk = F.lit(int(word2id.get("<unk>", 1)))
     out = marked
-    for c in [c for c in marked.columns if c.endswith("_marked")]:
+    for c in _marked_cols(marked):
         out = out.withColumn(
             c.replace("_marked", "_ids"),
             F.transform(F.col(c),
@@ -393,6 +405,31 @@ def bounded_fit_rows(marked: DataFrame, marginals: DataFrame,
         key=lambda r: r["candidate_sid"])
 
 
+def _token_bag(rows, m_cols: List[str]):
+    """Collected marked rows -> the mean-pooled token bag in coordinate form:
+    (vocabulary in first-seen order, token ids, row ids, 1/len per row) —
+    every token of every marked slot is one entry of its row."""
+    vocab: Dict[str, int] = {}
+    seqs = [[vocab.setdefault(t, len(vocab))
+             for c in m_cols for t in (r[c] or [])] for r in rows]
+    flat = np.array([t for s in seqs for t in s], dtype=np.int64)
+    row_ids = np.repeat(np.arange(len(seqs)), [len(s) for s in seqs])
+    inv_len = 1.0 / np.array([max(1, len(s)) for s in seqs], dtype=np.int64)
+    return list(vocab), flat, row_ids, inv_len
+
+
+def _sequence_fit(marked, marginals, k, max_fit_candidates, **fit):
+    """Token-bag model: collect the bounded fit rows and run the shared loop
+    with every token weighted 1/len. Returns (vocabulary, W, B)."""
+    m_cols = _marked_cols(marked)
+    rows = bounded_fit_rows(marked, marginals, m_cols, max_fit_candidates,
+                            prob_col="prob" if k == 1 else "probs")
+    vocab, flat, row_ids, inv_len = _token_bag(rows, m_cols)
+    W, B = _fit(row_ids, flat, np.ones(len(flat)), inv_len, len(vocab),
+                _soft_labels(rows, k), **fit)
+    return vocab, W, B
+
+
 def train_sequence_model(
     marked: DataFrame,
     marginals: DataFrame,
@@ -406,8 +443,8 @@ def train_sequence_model(
     59-219). Env-honest architecture: torch/Emmental are absent, so this
     is a mean-pooled token-bag classifier — equivalently an embedding-bag
     model whose factorization E·w collapses to one scalar per vocabulary
-    token — trained driver-side on soft labels (the same collection point
-    as train_logreg). The ``~~[[i``/``i]]~~`` markers are ordinary
+    token — trained driver-side on soft labels by the same loop as
+    train_logreg (_fit). The ``~~[[i``/``i]]~~`` markers are ordinary
     vocabulary tokens, so the model is relation-slot-aware exactly the way
     the marking convention intends. Returns (token -> weight, bias).
 
@@ -417,36 +454,9 @@ def train_sequence_model(
     the subset is stable across partitionings and reruns) is drawn at the
     fit point. Scoring stays fully distributed (score_sequences broadcasts
     the weight map), so only the fit is subsampled."""
-    m_cols = [c for c in marked.columns if c.endswith("_marked")]
-    rows = bounded_fit_rows(marked, marginals, m_cols, max_fit_candidates)
-    vocab: Dict[str, int] = {}
-    seqs: List[List[int]] = []
-    y: List[float] = []
-    for r in rows:
-        toks: List[str] = []
-        for c in m_cols:
-            toks.extend(r[c] or [])
-        seqs.append([vocab.setdefault(t, len(vocab)) for t in toks])
-        p = r["_fit_prob"]
-        y.append(float(p) if p is not None else 0.5)
-    n, d = len(seqs), len(vocab)
-    yv = np.array(y)
-    w = np.zeros(d)
-    b = 0.0
-    flat = np.concatenate([np.array(s, dtype=np.int64) for s in seqs]) \
-        if seqs else np.array([], dtype=np.int64)
-    lens = np.array([max(1, len(s)) for s in seqs], dtype=np.int64)
-    row_ids = np.repeat(np.arange(n), [len(s) for s in seqs])
-    inv_len = 1.0 / lens
-    for _ in range(epochs):
-        z = b + np.bincount(row_ids, weights=w[flat], minlength=n) * inv_len
-        p = 1.0 / (1.0 + np.exp(-z))
-        g = p - yv
-        gw = np.bincount(flat, weights=(g * inv_len)[row_ids], minlength=d)
-        w -= lr * (gw / max(n, 1) + l2 * w)
-        b -= lr * float(g.mean())
-    inv = {i: t for t, i in vocab.items()}
-    return {inv[i]: float(w[i]) for i in range(d)}, float(b)
+    vocab, W, B = _sequence_fit(marked, marginals, 1, max_fit_candidates,
+                                lr=lr, l2=l2, epochs=epochs)
+    return dict(zip(vocab, (float(w) for w in W[:, 0]))), float(B[0])
 
 
 def score_sequences(marked: DataFrame, weights: Dict[str, float],
@@ -455,11 +465,8 @@ def score_sequences(marked: DataFrame, weights: Dict[str, float],
     weight map; score = sigmoid(mean of per-token weights over all marked
     slots + bias) — pure column expressions, no Python in the scoring
     path (the same broadcast-map pattern as score_with_model)."""
-    m_cols = [c for c in marked.columns if c.endswith("_marked")]
-    wmap = F.map_from_arrays(
-        F.array(*[F.lit(k) for k in weights]),
-        F.array(*[F.lit(float(v)) for v in weights.values()]),
-    )
+    m_cols = _marked_cols(marked)
+    wmap = _lit_map(weights)
     toks = F.concat(*[F.col(c) for c in m_cols]) if len(m_cols) > 1 \
         else F.col(m_cols[0])
     total = F.aggregate(
@@ -488,46 +495,10 @@ def train_sequence_model_k(
     labels); NULL probs fall back to uniform. Returns
     (token -> [w_0..w_{k-1}], [b_0..b_{k-1}]); scoring is distributed
     (score_sequences_k). Fit collect bounded by bounded_fit_rows."""
-    K = cardinality
-    m_cols = [c for c in marked.columns if c.endswith("_marked")]
-    rows = bounded_fit_rows(marked, marginals_k, m_cols,
-                            max_fit_candidates, prob_col="probs")
-    vocab: Dict[str, int] = {}
-    seqs: List[List[int]] = []
-    uniform = [1.0 / K] * K
-    ys: List[List[float]] = []
-    for r in rows:
-        toks: List[str] = []
-        for c in m_cols:
-            toks.extend(r[c] or [])
-        seqs.append([vocab.setdefault(t, len(vocab)) for t in toks])
-        p = r["_fit_prob"]
-        ys.append(list(p) if p is not None else uniform)
-    n, d = len(seqs), len(vocab)
-    Y = np.array(ys, dtype=np.float64).reshape(n, K)
-    W = np.zeros((d, K))
-    B = np.zeros(K)
-    flat = np.concatenate([np.array(s, dtype=np.int64) for s in seqs]) \
-        if seqs else np.array([], dtype=np.int64)
-    lens = np.array([max(1, len(s)) for s in seqs], dtype=np.int64)
-    row_ids = np.repeat(np.arange(n), [len(s) for s in seqs])
-    inv_len = 1.0 / lens
-    for _ in range(epochs):
-        Z = np.zeros((n, K)) + B
-        for k in range(K):
-            Z[:, k] += np.bincount(row_ids, weights=W[flat, k],
-                                   minlength=n) * inv_len
-        Z -= Z.max(axis=1, keepdims=True)
-        P = np.exp(Z)
-        P /= P.sum(axis=1, keepdims=True)
-        G = P - Y
-        for k in range(K):
-            gw = np.bincount(flat, weights=(G[:, k] * inv_len)[row_ids],
-                             minlength=d)
-            W[:, k] -= lr * (gw / max(n, 1) + l2 * W[:, k])
-        B -= lr * G.mean(axis=0)
-    inv = {i: t for t, i in vocab.items()}
-    return ({inv[i]: [float(w) for w in W[i]] for i in range(d)},
+    vocab, W, B = _sequence_fit(marked, marginals_k, cardinality,
+                                max_fit_candidates, lr=lr, l2=l2,
+                                epochs=epochs)
+    return ({t: [float(w) for w in W[i]] for i, t in enumerate(vocab)},
             [float(b) for b in B])
 
 
@@ -539,14 +510,9 @@ def score_sequences_k(marked: DataFrame, weights: Dict[str, List[float]],
     per-token weight vectors (array-accumulator aggregate, no Python in
     the scoring path). Appends ``logits``, ``pred_idx``, and
     ``pred_value`` when ``values`` is given."""
-    K = len(biases)
-    m_cols = [c for c in marked.columns if c.endswith("_marked")]
-    wmap = F.map_from_arrays(
-        F.array(*[F.lit(k) for k in weights]),
-        F.array(*[F.array(*[F.lit(float(w)) for w in ws])
-                  for ws in weights.values()]),
-    )
-    zeros = F.array(*[F.lit(0.0) for _ in range(K)])
+    m_cols = _marked_cols(marked)
+    wmap = _lit_map(weights, _lit_vec)
+    zeros = _lit_vec([0.0] * len(biases))
     toks = F.concat(*[F.col(c) for c in m_cols]) if len(m_cols) > 1 \
         else F.col(m_cols[0])
     totals = F.aggregate(
@@ -556,19 +522,10 @@ def score_sequences_k(marked: DataFrame, weights: Dict[str, List[float]],
             lambda a, b: a + b),
     )
     inv_n = F.lit(1.0) / F.greatest(F.size(toks), F.lit(1))
-    logits = F.zip_with(
-        totals, F.array(*[F.lit(float(b)) for b in biases]),
-        lambda t, b: t * inv_n + b)
-    out = marked.withColumn("logits", logits)
-    pred_idx = (F.array_position(F.col("logits"),
-                                 F.array_max(F.col("logits"))) - 1
-                ).cast("int")
-    out = out.withColumn("pred_idx", pred_idx)
-    if values is not None:
-        val_arr = F.array(*[F.lit(str(v)) for v in values])
-        out = out.withColumn(
-            "pred_value", F.element_at(val_arr, F.col("pred_idx") + 1))
-    return out
+    logits = F.zip_with(totals, _lit_vec(biases),
+                        lambda t, b: t * inv_n + b)
+    return _append(marked,
+                   {"logits": logits, **_argmax(F.col("logits"), values)})
 
 
 def _margin_expr(weights: Dict[str, float], bias: float):
@@ -577,10 +534,7 @@ def _margin_expr(weights: Dict[str, float], bias: float):
     (acc starts 0.0), so the float accumulation order is fixed by the
     array order — the property the DuckDB oracle's list_reduce replay
     depends on (see q_text_quality_model)."""
-    # map_from_arrays of two literal arrays (broadcast by the plan)
-    keys_lit = F.array(*[F.lit(k) for k in weights])
-    vals_lit = F.array(*[F.lit(float(v)) for v in weights.values()])
-    wmap = F.map_from_arrays(keys_lit, vals_lit)
+    wmap = _lit_map(weights)
     dot = F.aggregate(
         F.zip_with(
             "keys", "values",

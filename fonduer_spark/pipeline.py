@@ -98,6 +98,28 @@ def default_lfs() -> Dict[str, object]:
     }
 
 
+def scored_candidates(docs: DataFrame) -> DataFrame:
+    """The flagship label stage over a (doc_id, text) frame: fused
+    same-row (part, temp) candidates, hot documents routed through the join
+    path (extract_candidates_auto), with majority-vote marginals over
+    default_lfs appended (with_marginals, a pure projection).
+
+    It reads the SLIM candidate variant (8 columns instead of 46): same
+    rows, ~7x less pandas/Arrow transfer. structural=False skips
+    xpath/sibling/ancestor attach entirely — the label/triple path never
+    reads them, and the DOM walks are ~15% of the fused stage's CPU
+    (measured at 32 cores). kg_stages' wide ``candidates`` keep the full
+    structural parse for featurization queries."""
+    from .candidates_fused import extract_candidates_auto, same_row_py
+
+    return with_marginals(
+        extract_candidates_auto(
+            docs, default_mention_specs(), "part_temp", "part", "temp",
+            py_throttler=same_row_py, column_throttler=same_row, slim=True,
+            parse_cfg=ParseConfig(structural=False)),
+        default_lfs())
+
+
 def kg_stages(
     spark: SparkSession,
     sf_dir: str,
@@ -111,8 +133,9 @@ def kg_stages(
     flatMap-style Python stage — zero shuffles before the triple
     aggregation. Hot docs above the per-doc mention cap route to the
     relational join path (candidates_op.extract_candidates, explicit
-    salting + AQE skew-join), never dropped. ``scored`` is majority vote
-    over default_lfs (a pure projection, and what the gold oracle assumes).
+    salting + AQE skew-join), never dropped. ``scored`` is
+    scored_candidates: majority vote over default_lfs on the slim
+    candidates (a pure projection, and what the gold oracle assumes).
     The join path and the weighted label model are public calls of their
     own (extract_candidates over ``mentions``, labeling.triplet_marginals).
     """
@@ -134,29 +157,17 @@ def kg_stages(
     # construction time and the usual zero-overflow case skips the empty
     # join-path subtree — which is why stage construction is lazy
     # (LazyStages): callers that never touch candidates never pay the probe.
-    def build_candidates(**kw) -> DataFrame:
+    def build_candidates() -> DataFrame:
         return extract_candidates_auto(
             docs, default_mention_specs(), "part_temp", "part", "temp",
-            py_throttler=same_row_py, column_throttler=same_row, **kw)
-
-    # label/triple path reads a SLIM variant (8 columns instead of 46):
-    # same rows, ~7x less pandas/Arrow transfer. structural=False skips
-    # xpath/sibling/ancestor attach entirely — the label/triple path never
-    # reads them, and the DOM walks are ~15% of the fused stage's CPU
-    # (measured at 32 cores). The wide `candidates` frame keeps the full
-    # structural parse for featurization queries.
-    def build_scored() -> DataFrame:
-        return with_marginals(
-            build_candidates(slim=True,
-                             parse_cfg=ParseConfig(structural=False)),
-            default_lfs())
+            py_throttler=same_row_py, column_throttler=same_row)
 
     st = LazyStages({
         "parsed": lambda: parsed,
         "sentences": lambda: sentences,
         "mentions": build_mentions,
         "candidates": build_candidates,
-        "scored": build_scored,
+        "scored": lambda: scored_candidates(docs),
         "triples": lambda: materialize_triples(
             st["scored"], pred=PRED, prob_threshold=0.5),
     })

@@ -250,11 +250,8 @@ def stream_triples_incremental(
     cannot change the final table.
     """
     from .cache import released
-    from .candidates_fused import extract_candidates_auto, same_row_py
-    from .candidates_op import same_row
     from .checkpoints import SnapshotTable
-    from .labeling import with_marginals
-    from .pipeline import default_lfs, default_mention_specs
+    from .pipeline import scored_candidates
     from .triples import materialize_triples
 
     table = SnapshotTable(work_dir, "triples")
@@ -269,14 +266,9 @@ def stream_triples_incremental(
         # them once the batch is merged, or a long-running stream grows
         # without bound
         with released():
-            cands = extract_candidates_auto(
-                batch_df, default_mention_specs(), "part_temp", "part",
-                "temp", py_throttler=same_row_py, column_throttler=same_row,
-                slim=True, parse_cfg=ParseConfig(structural=False),
-            )
-            scored = with_marginals(cands, default_lfs())
-            partial = materialize_triples(scored, pred=pred,
-                                          prob_threshold=prob_threshold)
+            partial = materialize_triples(
+                scored_candidates(batch_df), pred=pred,
+                prob_threshold=prob_threshold)
             merge_triple_partial(spark, table, partial)
 
     q = (

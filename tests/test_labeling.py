@@ -3,6 +3,7 @@ entity-level P/R/F1 (reference supervision/labeler.py:42-45,
 utils_udf.py:196-203, tests/shared/hardware_utils.py:71-131)."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from fonduer_spark.labeling import (
@@ -61,6 +62,22 @@ def test_pandas_lf(spark):
     labels = apply_lfs(cands(spark), lfs)
     vals = {r.candidate_sid: r.values for r in labels.collect()}
     assert vals == {"c1": [2], "c2": [1], "c3": [2]}
+
+
+def test_binary_vote_outside_range_raises(spark):
+    """A binary vote outside {-1, 0, 1} fails fast, in the column and the
+    pandas branch alike: stored as 3 it would count as a non-TRUE vote in
+    majority vote and as an abstain in the label model."""
+    with pytest.raises(Exception, match=r"outside \[-1, 1\]"):
+        with_marginals(cands(spark), {"ok": F.lit(1), "bad": F.lit(2)}
+                       ).collect()
+    with pytest.raises(Exception, match=r"outside \[-1, 1\]"):
+        with_marginals(cands(spark), {"ok": F.lit(1),
+                                      "bad": lambda pdf: pdf["val"] * 0 + 2}
+                       ).collect()
+    # the boundary votes still store as 0 (abstain) and 2 (TRUE)
+    r = apply_lfs(cands(spark), {"ab": F.lit(-1), "hi": F.lit(1)}).collect()[0]
+    assert r.values == [0, 2]
 
 
 def test_entity_level_prf1(spark):

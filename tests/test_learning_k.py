@@ -4,6 +4,7 @@ with soft_cross_entropy over k classes) + the bounded-fit contract on the
 logreg path (shared bounded_fit_rows sampler: deterministic xxhash64 cap,
 marginals joined BEFORE the collect)."""
 
+import hashlib
 import warnings
 
 import pytest
@@ -17,6 +18,7 @@ from fonduer_spark.learning import (
     score_with_model_k,
     train_logreg,
     train_logreg_k,
+    train_sequence_model,
     train_sequence_model_k,
 )
 
@@ -292,3 +294,61 @@ def test_score_margin_matches_prob(spark):
         assert r.model_margin == want_z
         assert r.model_prob == 1.0 / (1.0 + math.exp(-want_z))
         assert (r.model_prob >= 0.5) == (r.model_margin >= 0)
+
+
+# ------------------------------------------------------- pinned fit outputs
+
+
+def _fit_digest(weights, biases) -> str:
+    """sha256 over the keys and the float.hex of every weight (in key
+    order), then of every bias — one binary or k-class fit's exact output."""
+    h = hashlib.sha256()
+    for key, w in weights.items():
+        h.update(key.encode())
+        for x in (w if isinstance(w, list) else [w]):
+            h.update(float(x).hex().encode())
+    for b in (biases if isinstance(biases, list) else [biases]):
+        h.update(float(b).hex().encode())
+    return h.hexdigest()
+
+
+# Captured from the four trainers before they shared one gradient-descent
+# loop (numpy 1.26, x86-64): any change to the float program of a fit --
+# summation order, the softmax shift, the update arithmetic -- moves them.
+FIT_DIGESTS = {
+    "logreg":
+        "7d6dfbb1c001c768e5327277385ad8ab8c504239fa23df0bb18dc140b3ccfac8",
+    "logreg_k":
+        "15bfd83f8242f2caf16fdada76e0c711bcf5636d49286db86e9cf8ea95b1b9d7",
+    "logreg_k_no_intercept":
+        "334ad716d77ea96c695969f3e7d4f42149e9c25dd55d2e9b6ae9d3fd38ad7194",
+    "sequence":
+        "3e7a0b92a9a56ce923169ad713821ed871996303b806b8b4b82b1ce3b78e8926",
+    "sequence_k":
+        "24fd0388926fe4dccb4c0c2131b32147fb9c7552a8ad8fb1350edd20b5b67863",
+}
+
+
+def test_fit_outputs_are_pinned(spark):
+    """Every trainer, multi-epoch with l2 > 0 and some NULL labels (the
+    candidates whose sid ends in 7 have no marginal row), reproduces its
+    weights and biases bit for bit."""
+    feats, marked = _feat_fixture(spark), _marked_fixture(spark)
+
+    def labels(df, binary):
+        df = df.where(~F.col("candidate_sid").endswith("7"))
+        return df.select("candidate_sid", F.col("probs")[0].alias("prob")) \
+            if binary else df.select("candidate_sid", "probs")
+
+    kw = dict(lr=0.5, epochs=40, l2=1e-3)
+    fits = {
+        "logreg": train_logreg(feats, labels(feats, True), **kw),
+        "logreg_k": train_logreg_k(feats, labels(feats, False), 3, **kw),
+        "logreg_k_no_intercept": train_logreg_k(
+            feats, labels(feats, False), 3, fit_intercept=False, **kw),
+        "sequence": train_sequence_model(marked, labels(marked, True), **kw),
+        "sequence_k": train_sequence_model_k(
+            marked, labels(marked, False), 3, **kw),
+    }
+    assert {name: _fit_digest(*fit) for name, fit in fits.items()} \
+        == FIT_DIGESTS

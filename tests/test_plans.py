@@ -251,14 +251,14 @@ def test_triplet_fit_is_single_aggregation(spark):
     and no join."""
     from pyspark.sql import functions as F
 
-    from fonduer_spark.labeling import _eval_lfs, _pm_cols
+    from fonduer_spark.labeling import _eval_lfs, _pm_cols_k
 
     df = spark.createDataFrame(
         [("c%d" % i, i % 2, (i // 2) % 2, (i // 4) % 2) for i in range(64)],
         "candidate_sid string, va int, vb int, vc int")
     lfs = {"a": F.col("va"), "b": F.col("vb"), "c": F.col("vc")}
     ev = _eval_lfs(df, lfs)
-    pm = _pm_cols(sorted(lfs))
+    pm = _pm_cols_k(sorted(lfs), 1)
     agg = ev.agg(*[F.sum(pm[x] * pm[y]).alias(f"m_{x}{y}")
                    for x, y in (("a", "b"), ("a", "c"), ("b", "c"))])
     plan = plan_of(agg)

@@ -59,8 +59,8 @@ def _csr_from_rows(rows, key_order: List[str] = None):
                 data.append(float(v))
         indptr.append(len(indices))
         sids.append(r.candidate_sid)
-    return (np.array(indptr), np.array(indices), np.array(data),
-            sids, key_order)
+    return (np.array(indptr, dtype=np.int64),
+            np.array(indices, dtype=np.int64), np.array(data), sids, key_order)
 
 
 def collect_csr(features: DataFrame, key_order: List[str] = None,
@@ -120,8 +120,12 @@ def _fit(row_ids, cols, vals, scale, d: int, Y: np.ndarray, lr: float,
     is the sigmoid head, k columns the softmax head (soft cross-entropy
     either way). The forward and backward passes are bincount scatter-adds
     over the entries, no per-row Python loop, and the float program is
-    fixed: the fits are bit-deterministic. Returns (W (d, k), B (k,))."""
+    fixed: the fits are bit-deterministic. Returns (W (d, k), B (k,)).
+    Raises ValueError on an empty fit set."""
     n, k = Y.shape
+    if n == 0:
+        raise ValueError("the fit set is empty: there are no candidate rows "
+                         "to train on")
     W = np.zeros((d, k))
     B = np.zeros(k)
     for epoch in range(epochs):
@@ -146,7 +150,7 @@ def _fit(row_ids, cols, vals, scale, d: int, Y: np.ndarray, lr: float,
         for c in range(k):
             gw = np.bincount(cols, weights=(G[:, c] * scale)[row_ids] * vals,
                              minlength=d)
-            W[:, c] -= lr * (gw / max(n, 1) + l2 * W[:, c])
+            W[:, c] -= lr * (gw / n + l2 * W[:, c])
         if fit_intercept:
             B -= lr * G.mean(axis=0)
     return W, B
@@ -172,13 +176,12 @@ def train_logreg(
     l2: float = None,
     lr: float = None,
     epochs: int = None,
-    seed: int = 42,
     max_fit_candidates: int = 200_000,
     logger=None,
 ) -> Tuple[Dict[str, float], float]:
     """Fit logistic regression on (features, soft labels); returns
     (key -> weight, bias). Driver-side gradient descent (_fit) on the
-    collected matrix (small); deterministic given the seed.
+    collected matrix (small).
 
     lr/l2/epochs default to the ``learning.logreg`` section of the engine
     config. NULL labels train as 0.5.

@@ -5,8 +5,9 @@ Re-implements the semantics of the reference's ``ParserUDF``
 ``mapInPandas`` stage over a document source (web_pages or (doc_id, text)):
 
 - iterative DFS in recursive-DFS order (children pushed reversed; ``.text``
-  visited before children, ``.tail`` after — the visited-flag protocol of
-  parser.py:601-609, 816-852);
+  read before the children, ``.tail`` after, parser.py:601-609, 816-852):
+  each stack entry carries its parent context, the DOM is never written to,
+  and one dispatch by tag opens a node's context;
 - flatten tags (default span/br) + comment removal, then re-serialize the
   cleaned DOM into ``document.text`` (parser.py:785-795) — the byte-identical
   text-per-url invariant surface (defined against htmldom.tostring since lxml
@@ -139,10 +140,26 @@ def _row(url: str, **kw: Any) -> Dict[str, Any]:
     return row
 
 
-class _Ctx(dict):
-    """A context record under construction; attribute-style access."""
+class _Ctx:
+    """A context record: what the operators and the paragraph binding read.
+    A table also carries its cell-grid cursor, a cell its span, and every
+    record its paragraph binding once a paragraph under it has text."""
 
-    __getattr__ = dict.get
+    __slots__ = ("ctx_type", "stable_id", "position", "section", "table",
+                 "figure", "bind", "grid", "row_idx", "col_idx", "cell_pos",
+                 "span")
+
+    def __init__(self, ctx_type: str, stable_id: str, position: int,
+                 section: "_Ctx" = None, table: "_Ctx" = None,
+                 figure: "_Ctx" = None) -> None:
+        self.ctx_type, self.stable_id, self.position = ctx_type, stable_id, position
+        self.section, self.table, self.figure = section, table, figure
+        self.bind = None
+
+
+_NO_ATTRS = (None,) * 9  # structural attrs (8) + hOCR state
+# the fields one DFS visit reads, as is-tail flags
+_TEXT, _TAIL, _TEXT_TAIL = (False,), (True,), (False, True)
 
 
 def parse_document(
@@ -163,21 +180,28 @@ def parse_document(
     replacements = [(re.compile(p, flags=re.UNICODE), r) for p, r in cfg.replacements]
     rows: List[Dict[str, Any]] = []
     want = emit_types.__contains__ if emit_types is not None else (lambda t: True)
+    (w_sec, w_fig, w_tab, w_cell, w_cap, w_par, w_sent) = map(want, (
+        "section", "figure", "table", "cell", "caption", "paragraph", "sentence"))
+    strip, structural, hocr = cfg.strip, cfg.structural, cfg.visual == "hocr"
+    split = lingual_parser.split_sentences
 
     root = parse_html(html_text)
     if cfg.flatten:
         strip_tags(root, cfg.flatten)
 
-    doc = _Ctx(ctx_type="document", stable_id=f"{url}::document:0:0", position=0)
+    doc = _Ctx("document", f"{url}::document:0:0", 0)
     if want("document"):
         rows.append(_row(url, stable_id=doc.stable_id, ctx_type="document",
                          position=0, text=tostring(root), name=url))
 
-    counters = {"section": 0, "paragraph": 0, "figure": 0, "caption": 0, "table": 0}
-    sent_state = {"idx": 0, "abs_offset": 0}
-    tables: Dict[int, Dict[str, Any]] = {}  # per-table grid state by position
-    parent: Dict[int, _Ctx] = {}
-    context: Dict[int, _Ctx] = {}
+    counters = {"section": 0, "figure": 0, "caption": 0, "table": 0}
+    # nodes the DFS skips ("true") or visits for their tail only ("text"):
+    # the figure operator's marks, seeded with the source's own visited attrs
+    marks: Dict[int, str] = {}
+    if "visited" in html_text.lower():
+        for el in (root, *root.iterdescendants()):
+            if "visited" in el.attrib:
+                marks[id(el)] = el.attrib["visited"]
 
     head = root.find("head")
     styles_text: Optional[str] = None
@@ -186,178 +210,158 @@ def parse_document(
         if style_el is not None:
             styles_text = style_el.text
 
-    # -- sub-operators ------------------------------------------------------
-    def parse_section(node: Element) -> None:
+    # -- context operators, one per tag: (node, parent ctx) -> new ctx or None
+    def _open(ctx_type: str, node: Element, parent_sid: str, emit: bool,
+              section: _Ctx = None, table: _Ctx = None, figure: _Ctx = None,
+              **row: Any) -> _Ctx:
+        pos = counters[ctx_type]
+        counters[ctx_type] += 1
+        ctx = _Ctx(ctx_type, f"{url}::{ctx_type}:{pos}", pos, section, table,
+                   figure)
+        if emit:
+            rows.append(_row(url, stable_id=ctx.stable_id, ctx_type=ctx_type,
+                             position=pos, parent_sid=parent_sid,
+                             name=node.get("name"), **row))
+        return ctx
+
+    def parse_section(node: Element, par: _Ctx) -> _Ctx:
         # reference parser.py:666-701; extended: the root element always
         # opens section 0 so fragment-rooted documents still parse.
-        if node.tag not in ("html", "section") and node._parent is not None:
-            return
-        ctx = _Ctx(
-            ctx_type="section",
-            stable_id=f"{url}::section:{counters['section']}",
-            position=counters["section"],
-            document=doc,
-        )
-        counters["section"] += 1
-        context[id(node)] = ctx
-        if want("section"):
-            rows.append(_row(url, stable_id=ctx.stable_id, ctx_type="section",
-                             position=ctx.position, parent_sid=doc.stable_id,
-                             name=node.get("name")))
+        return _open("section", node, doc.stable_id, w_sec)
 
-    def parse_figure(node: Element) -> None:
+    def parse_figure(node: Element, par: _Ctx) -> Optional[_Ctx]:
         # reference parser.py:394-470
-        if node.tag not in ("img", "figure"):
-            return
-        par = parent[id(node)]
         if node.tag == "img" and par.ctx_type == "figure":
-            return  # img inside a Figure is handled by the parent figure
+            return None  # img inside a Figure is handled by the parent figure
         if par.ctx_type == "section":
             section, cell = par, None
         elif par.ctx_type == "cell":
             section, cell = par.table.section, par
         else:
-            return  # nested figures unsupported, same as reference
-        fig_url = None
+            return None  # nested figures unsupported, same as reference
         if node.tag == "img":
             fig_url = node.get("src")
         else:
             imgs = [c for c in node if c.tag == "img"]
             if len(imgs) == 0:
-                return
+                return None
             if len(imgs) > 1:
                 # multi-img figure: ignore the wrapper, process children solo
                 for c in node:
                     if c.tag == "figcaption":
-                        c.set("visited", "true")
-                return
-            imgs[0].set("visited", "true")
+                        marks[id(c)] = "true"
+                return None
+            marks[id(imgs[0])] = "true"
             fig_url = imgs[0].get("src")
-        ctx = _Ctx(
-            ctx_type="figure",
-            stable_id=f"{url}::figure:{counters['figure']}",
-            position=counters["figure"],
-            section=section, cell=cell, fig_url=fig_url,
-        )
-        counters["figure"] += 1
-        context[id(node)] = ctx
-        if want("figure"):
-            rows.append(_row(url, stable_id=ctx.stable_id, ctx_type="figure",
-                             position=ctx.position, parent_sid=section.stable_id,
-                             cell_sid=cell.stable_id if cell else None,
-                             fig_url=fig_url, name=node.get("name")))
+        return _open("figure", node, section.stable_id, w_fig, section=section,
+                     cell_sid=cell.stable_id if cell else None, fig_url=fig_url)
 
-    def parse_table(node: Element) -> None:
+    def parse_table(node: Element, par: _Ctx) -> _Ctx:
         # reference parser.py:266-392 (grid: 326-356)
-        if node.tag == "table":
-            par = parent[id(node)]
-            if par.ctx_type == "cell":
-                section = par.table.section
-            elif par.ctx_type == "section":
-                section = par
-            else:
-                raise ValueError("Table is not within a Section or Cell")
-            pos = counters["table"]
-            ctx = _Ctx(
-                ctx_type="table", stable_id=f"{url}::table:{pos}",
-                position=pos, section=section,
-            )
-            counters["table"] += 1
-            context[id(node)] = ctx
-            tables[pos] = {"grid": {}, "cell_pos": 0, "row_idx": -1, "col_idx": 0}
-            if want("table"):
-                rows.append(_row(url, stable_id=ctx.stable_id, ctx_type="table",
-                                 position=pos, parent_sid=section.stable_id,
-                                 name=node.get("name")))
-        elif node.tag == "tr":
-            par = parent[id(node)]
-            if par.ctx_type != "table":
-                raise ValueError("Table row parent must be a Table")
-            st = tables[par.position]
-            st["col_idx"] = 0
-            st["row_idx"] += 1
-        elif node.tag in ("td", "th"):
-            par = parent[id(node)]
-            if par.ctx_type != "table":
-                raise ValueError("Cell parent must be a Table")
-            st = tables[par.position]
-            if st["row_idx"] < 0:
-                raise ValueError("Table cell encountered before a table row")
-            while st["grid"].get((st["row_idx"], st["col_idx"])):
-                st["col_idx"] += 1
-            row_start, col_start = st["row_idx"], st["col_idx"]
-            row_end, col_end = row_start, col_start
-            try:
-                row_end += int(node.get("rowspan", "1")) - 1
-            except ValueError:
-                pass
-            try:
-                col_end += int(node.get("colspan", "1")) - 1
-            except ValueError:
-                pass
-            for r in range(row_start, row_end + 1):
-                for c in range(col_start, col_end + 1):
-                    st["grid"][(r, c)] = 1
-            ctx = _Ctx(
-                ctx_type="cell",
-                stable_id=f"{url}::cell:{par.position}:{row_start}:{col_start}",
-                position=st["cell_pos"], table=par,
-                row_start=row_start, row_end=row_end,
-                col_start=col_start, col_end=col_end,
-            )
-            context[id(node)] = ctx
-            if want("cell"):
-                rows.append(_row(url, stable_id=ctx.stable_id, ctx_type="cell",
-                                 position=st["cell_pos"], parent_sid=par.stable_id,
-                                 table_sid=par.stable_id,
-                                 table_position=par.position,
-                                 row_start=row_start, row_end=row_end,
-                                 col_start=col_start, col_end=col_end,
-                                 name=node.get("name")))
-            st["col_idx"] += 1
-            st["cell_pos"] += 1
+        if par.ctx_type == "cell":
+            section = par.table.section
+        elif par.ctx_type == "section":
+            section = par
+        else:
+            raise ValueError("Table is not within a Section or Cell")
+        ctx = _open("table", node, section.stable_id, w_tab, section=section)
+        ctx.grid, ctx.cell_pos, ctx.row_idx, ctx.col_idx = set(), 0, -1, 0
+        return ctx
 
-    def parse_caption(node: Element) -> None:
+    def parse_row(node: Element, par: _Ctx) -> None:
+        if par.ctx_type != "table":
+            raise ValueError("Table row parent must be a Table")
+        par.col_idx = 0
+        par.row_idx += 1
+
+    def parse_cell(node: Element, par: _Ctx) -> _Ctx:
+        if par.ctx_type != "table":
+            raise ValueError("Cell parent must be a Table")
+        if par.row_idx < 0:
+            raise ValueError("Table cell encountered before a table row")
+        grid, row_start, col_start = par.grid, par.row_idx, par.col_idx
+        while (row_start, col_start) in grid:
+            col_start += 1
+        row_end, col_end = row_start, col_start
+        try:
+            row_end += int(node.get("rowspan", "1")) - 1
+        except ValueError:
+            pass
+        try:
+            col_end += int(node.get("colspan", "1")) - 1
+        except ValueError:
+            pass
+        for r in range(row_start, row_end + 1):
+            for c in range(col_start, col_end + 1):
+                grid.add((r, c))
+        ctx = _Ctx("cell", f"{url}::cell:{par.position}:{row_start}:{col_start}",
+                   par.cell_pos, table=par)
+        ctx.span = (row_start, row_end, col_start, col_end)
+        if w_cell:
+            rows.append(_row(url, stable_id=ctx.stable_id, ctx_type="cell",
+                             position=par.cell_pos, parent_sid=par.stable_id,
+                             table_sid=par.stable_id,
+                             table_position=par.position,
+                             row_start=row_start, row_end=row_end,
+                             col_start=col_start, col_end=col_end,
+                             name=node.get("name")))
+        par.col_idx = col_start + 1
+        par.cell_pos += 1
+        return ctx
+
+    def parse_caption(node: Element, par: _Ctx) -> _Ctx:
         # reference parser.py:703-750
-        if node.tag not in ("caption", "figcaption"):
-            return
-        par = parent[id(node)]
         if par.ctx_type == "table":
             table, figure = par, None
         elif par.ctx_type == "figure":
             table, figure = None, par
         else:
             raise ValueError("Caption must be a child of Table or Figure")
-        ctx = _Ctx(
-            ctx_type="caption",
-            stable_id=f"{url}::caption:{counters['caption']}",
-            position=counters["caption"], table=table, figure=figure,
-        )
-        counters["caption"] += 1
-        context[id(node)] = ctx
-        if want("caption"):
-            rows.append(_row(url, stable_id=ctx.stable_id, ctx_type="caption",
-                             position=ctx.position,
-                             parent_sid=(table or figure).stable_id,
-                             name=node.get("name")))
+        return _open("caption", node, par.stable_id, w_cap, table=table,
+                     figure=figure)
 
-    xpath_cache: Dict[int, str] = {}
-    sib_cache: Dict[int, Tuple] = {}
-    visual_state: Dict[int, Dict[str, Any]] = {}
+    operators = {"html": parse_section, "section": parse_section,
+                 "img": parse_figure, "figure": parse_figure,
+                 "caption": parse_caption, "figcaption": parse_caption}
+    if cfg.tabular:
+        operators.update(table=parse_table, tr=parse_row, td=parse_cell,
+                         th=parse_cell)
+
+    def bind(par: _Ctx) -> tuple:
+        """The (section, caption, cell) a paragraph under ``par`` binds to
+        (reference parser.py:583-664), as the sids and cell coordinates its
+        paragraph and sentence rows carry; cached on ``par``."""
+        section = caption = cell = table = None
+        if par.ctx_type == "caption":
+            section, caption = (par.table or par.figure).section, par
+        elif par.ctx_type == "cell":
+            section, cell, table = par.table.section, par, par.table
+        elif par.ctx_type == "section":
+            section = par
+        elif par.ctx_type in ("figure", "table"):
+            section = par.section
+        else:
+            raise ValueError(
+                f"Paragraph parent must be Section/Caption/Cell/Figure/"
+                f"Table, not {par.ctx_type}"
+            )
+        par.bind = ((cell or caption or section).stable_id, section.stable_id,
+                    cell.stable_id if cell else None,
+                    table.stable_id if table else None,
+                    table.position if table else None,
+                    cell.position if cell else None,
+                    *(cell.span if cell else (None,) * 4))
+        return par.bind
 
     def _visual_node_state(node: Element) -> Optional[Dict[str, Any]]:
-        """Lazily parse a node's hOCR-accumulated visual attributes into a
+        """Parse a node's hOCR-accumulated visual attributes into a
         token-aligned consumption state (the engine's HocrVisualParser:
         reference hocr_visual_parser.py:38-160, with the spaCy alignment
         replaced by deterministic substring consumption — every sentence
         word is a substring of exactly one whitespace-delimited hOCR token,
         modulo the delimiter the sentence splitter removed)."""
-        st = visual_state.get(id(node))
-        if st is not None:
-            return st if st else None
         toks_attr = node.get("tokens")
         if not toks_attr:
-            visual_state[id(node)] = {}
             return None
         for rgx, repl in replacements:  # same normalization as the text
             toks_attr = rgx.sub(repl, toks_attr)
@@ -370,14 +374,10 @@ def parse_document(
                              ("bottom", "bottom"))
             }
         except ValueError:
-            visual_state[id(node)] = {}
             return None
         if any(len(v) != len(toks) for v in arrays.values()):
-            visual_state[id(node)] = {}
             return None
-        st = {"toks": toks, "arrays": arrays, "ti": 0, "ci": 0}
-        visual_state[id(node)] = st
-        return st
+        return {"toks": toks, "arrays": arrays, "ti": 0, "ci": 0}
 
     def _consume_visual(st: Dict[str, Any], words) -> Optional[Dict[str, list]]:
         """Map each sentence word to its hOCR token's bbox, advancing the
@@ -409,9 +409,6 @@ def parse_document(
         PREV_SIB_TAG/NEXT_SIB_TAG/NODE_POS/ANCESTOR_CLASS/ANCESTOR_ID
         structural features (structural_features.py:91-106), captured at
         parse time so featurization never re-walks the DOM."""
-        got = sib_cache.get(id(context_node))
-        if got is not None:
-            return got
         prev_tag = next_tag = None
         pos = None
         par = context_node.getparent()
@@ -437,22 +434,17 @@ def parse_document(
             a = a.getparent()
         anc_classes.reverse()  # root-first, matching xpath order
         anc_ids.reverse()
-        got = (prev_tag, next_tag, pos, anc_classes, anc_ids)
-        sib_cache[id(context_node)] = got
-        return got
+        return (prev_tag, next_tag, pos, anc_classes, anc_ids)
 
     def structural_attrs(context_node: Element) -> Tuple[str, str, List[str]]:
-        xpath = xpath_cache.get(id(context_node))
-        if xpath is None:
-            xpath = getpath(context_node)
-            xpath_cache[id(context_node)] = xpath
+        xpath = getpath(context_node)
         html_tag = context_node.tag
         # bookkeeping + hOCR-accumulated visual attrs are not structural
         # signal (the reference clears them too, hocr_visual_parser.py:75-90)
         # — but ONLY for hOCR-rewritten documents; ordinary HTML may
         # legitimately carry attrs named left/top/tokens/... and keeps them
         skip = {"visited"}
-        if cfg.visual == "hocr" or "fonduer" in context_node.attrib:
+        if hocr or "fonduer" in context_node.attrib:
             skip |= {"left", "top", "right", "bottom", "ppageno",
                      "tokens", "x_wconf", "fonduer"}
         html_attrs = [
@@ -481,150 +473,119 @@ def parse_document(
                         html_attrs.append("style=" + re.sub(r"\s{1,}", " ", body.strip()))
         return xpath, html_tag, html_attrs
 
-    def emit_sentences(paragraph: _Ctx, node: Element, text: str, fld: str) -> None:
-        # reference parser.py:472-509 (_parse_sentence)
-        name = node.get("name")
-        for parts in lingual_parser.split_sentences(text):
-            abs_offset = sent_state["abs_offset"]
-            abs_char_offsets = [o + abs_offset for o in parts["char_offsets"]]
-            abs_end = abs_offset + parts["char_offsets"][-1] + len(parts["words"][-1])
-            stable_id = f"{url}::sentence:{abs_offset}:{abs_end}"
-            sent_state["abs_offset"] = abs_end
-            if not want("sentence"):
-                sent_state["idx"] += 1
-                continue
-            xpath = html_tag = None
-            html_attrs = None
-            prev_sib = next_sib = node_pos = None
-            anc_classes = anc_ids = None
-            visual = None
-            context_node = node.getparent() if fld == "tail" else node
-            if cfg.structural and context_node is not None:
-                xpath, html_tag, html_attrs = structural_attrs(context_node)
-                (prev_sib, next_sib, node_pos,
-                 anc_classes, anc_ids) = sibling_ancestor_attrs(context_node)
-            if cfg.visual == "hocr" and context_node is not None:
-                vstate = _visual_node_state(context_node)
-                if vstate is not None:
-                    visual = _consume_visual(vstate, parts["words"])
-            cell = paragraph.cell
-            table = cell.table if cell else None
-            section = paragraph.section
-            # direct dict literal (hot path: one per sentence; dict.fromkeys
-            # + update measured ~40% of this function's time)
-            rows.append({
-                "url": url, "stable_id": stable_id, "ctx_type": "sentence",
-                "position": sent_state["idx"],
-                "parent_sid": paragraph.stable_id, "name": name,
-                "text": parts["text"],
-                "row_start": cell.row_start if cell else None,
-                "row_end": cell.row_end if cell else None,
-                "col_start": cell.col_start if cell else None,
-                "col_end": cell.col_end if cell else None,
-                "fig_url": None,
-                "words": parts["words"],
-                "char_offsets": parts["char_offsets"],
-                "abs_char_offsets": abs_char_offsets,
-                "lemmas": parts["lemmas"], "pos_tags": parts["pos_tags"],
-                "ner_tags": parts["ner_tags"],
-                "dep_parents": parts["dep_parents"],
-                "dep_labels": parts["dep_labels"],
-                "xpath": xpath, "html_tag": html_tag,
-                "html_attrs": html_attrs,
-                "prev_sib_tag": prev_sib, "next_sib_tag": next_sib,
-                "node_pos": node_pos,
-                "ancestor_classes": anc_classes, "ancestor_ids": anc_ids,
-                "page": visual["page"] if visual else None,
-                "left": visual["left"] if visual else None,
-                "top": visual["top"] if visual else None,
-                "right": visual["right"] if visual else None,
-                "bottom": visual["bottom"] if visual else None,
-                "section_sid": section.stable_id if section else None,
-                "paragraph_sid": paragraph.stable_id,
-                "table_sid": table.stable_id if table else None,
-                "cell_sid": cell.stable_id if cell else None,
-                "table_position": table.position if table else None,
-                "cell_position": cell.position if cell else None,
-            })
-            sent_state["idx"] += 1
+    node_attrs: Dict[int, Tuple] = {}
 
-    def parse_paragraph(node: Element) -> None:
-        # reference parser.py:583-664
-        par = context.get(id(node), parent[id(node)])
-        if len(node) == 0:
-            fields = ["text", "tail"]
-        elif node.get("visited") == "text":
-            fields = ["tail"]
-            node.set("visited", "true")
+    def sentence_attrs(node: Optional[Element]) -> Tuple:
+        """The structural attrs and the hOCR cursor every sentence of
+        ``node``'s text (or of a child's tail) carries, computed once per
+        node: the cursor advances across all of them."""
+        got = node_attrs.get(id(node))
+        if got is None:
+            got = _NO_ATTRS
+            if node is not None:
+                got = ((structural_attrs(node) + sibling_ancestor_attrs(node)
+                        if structural else _NO_ATTRS[:8])
+                       + (_visual_node_state(node) if hocr else None,))
+            node_attrs[id(node)] = got
+        return got
+
+    # -- iterative DFS in recursive order (reference parser.py:816-852) -----
+    # A stack entry is (node, parent ctx, back from the children): a node
+    # with children is pushed again under its own ctx, above them, so its
+    # tail is read after its subtree. Nothing is written into the tree.
+    n_par = n_sent = abs_offset = 0
+    blacklist = set(cfg.blacklist)
+    stack: List[Tuple[Element, _Ctx, bool]] = [(root, doc, False)]
+    push = stack.append
+    while stack:
+        node, ctx, again = stack.pop()
+        if again:
+            fields = _TAIL
         else:
-            fields = ["text"]
-            node.set("visited", "text")
-            stack.append(node)  # will visit again later for the tail
-        for fld in fields:
-            text = node.text if fld == "text" else node.tail
-            if text and cfg.strip:
+            mark = marks.get(id(node))
+            if mark == "true":
+                continue
+            kids = node._children
+            if mark != "text":
+                op = operators.get(node.tag)
+                par = ctx
+                if node is root and op is not parse_section:
+                    ctx = parse_section(node, par)
+                if op is not None:
+                    ctx = op(node, par) or ctx
+                if kids:
+                    push((node, ctx, True))
+                    for c in reversed(kids):
+                        if c.tag not in blacklist:
+                            push((c, ctx, False))
+                    fields = _TEXT
+                else:
+                    fields = _TEXT_TAIL
+            else:
+                fields = _TAIL if kids else _TEXT_TAIL
+        for tail in fields:
+            text = node.tail if tail else node.text
+            if text and strip:
                 text = text.strip()
             if not text:
                 continue
             for rgx, repl in replacements:
                 text = rgx.sub(repl, text)
-            if par.ctx_type == "caption":
-                section = (par.table or par.figure).section
-                caption, cell = par, None
-            elif par.ctx_type == "cell":
-                section, caption, cell = par.table.section, None, par
-            elif par.ctx_type == "section":
-                section, caption, cell = par, None, None
-            elif par.ctx_type == "figure":
-                section, caption, cell = par.section, None, None
-            elif par.ctx_type == "table":
-                section, caption, cell = par.section, None, None
-            else:
-                raise ValueError(
-                    f"Paragraph parent must be Section/Caption/Cell/Figure/"
-                    f"Table, not {par.ctx_type}"
-                )
-            pg = _Ctx(
-                ctx_type="paragraph",
-                stable_id=f"{url}::paragraph:{counters['paragraph']}",
-                position=counters["paragraph"],
-                section=section, caption=caption, cell=cell,
-            )
-            counters["paragraph"] += 1
-            if want("paragraph"):
-                rows.append(_row(
-                    url, stable_id=pg.stable_id, ctx_type="paragraph",
-                    position=pg.position,
-                    parent_sid=(cell or caption or section).stable_id,
-                    section_sid=section.stable_id if section else None,
-                    cell_sid=cell.stable_id if cell else None,
-                    name=node.get("name"),
-                ))
-            emit_sentences(pg, node, text, fld)
-
-    # -- iterative DFS in recursive order (reference parser.py:816-852) -----
-    stack: List[Element] = [root]
-    parent[id(root)] = doc
-    context[id(root)] = doc
-    blacklist = set(cfg.blacklist)
-    while stack:
-        node = stack.pop()
-        if node.get("visited") == "true":
-            node.set("visited", "true")
-            continue
-        if node.get("visited") != "text":
-            parse_section(node)
-            parse_figure(node)
-            if cfg.tabular:
-                parse_table(node)
-            parse_caption(node)
-        parse_paragraph(node)
-        if node.get("visited") != "true":
-            for child in reversed(node):
-                if child.tag in blacklist:
-                    continue
-                stack.append(child)
-                parent[id(child)] = context.get(id(node), parent[id(node)])
+            (parent_sid, section_sid, cell_sid, table_sid, table_pos, cell_pos,
+             row_start, row_end, col_start, col_end) = ctx.bind or bind(ctx)
+            paragraph_sid = f"{url}::paragraph:{n_par}"
+            name = node.attrib.get("name")
+            if w_par:
+                rows.append(_row(url, stable_id=paragraph_sid,
+                                 ctx_type="paragraph", position=n_par,
+                                 parent_sid=parent_sid, section_sid=section_sid,
+                                 cell_sid=cell_sid, name=name))
+            n_par += 1
+            attrs = None
+            # reference parser.py:472-509 (_parse_sentence)
+            for parts in split(text):
+                words, offsets = parts["words"], parts["char_offsets"]
+                abs_end = abs_offset + offsets[-1] + len(words[-1])
+                if w_sent:
+                    if attrs is None:
+                        # a tail's structural context is its parent node
+                        attrs = (sentence_attrs(node._parent if tail else node)
+                                 if structural or hocr else _NO_ATTRS)
+                    vstate = attrs[8]
+                    visual = _consume_visual(vstate, words) if vstate else None
+                    # direct dict literal (hot path: one per sentence)
+                    rows.append({
+                        "url": url,
+                        "stable_id": f"{url}::sentence:{abs_offset}:{abs_end}",
+                        "ctx_type": "sentence", "position": n_sent,
+                        "parent_sid": paragraph_sid, "name": name,
+                        "text": parts["text"],
+                        "row_start": row_start, "row_end": row_end,
+                        "col_start": col_start, "col_end": col_end,
+                        "fig_url": None, "words": words,
+                        "char_offsets": offsets,
+                        "abs_char_offsets": [o + abs_offset for o in offsets],
+                        "lemmas": parts["lemmas"], "pos_tags": parts["pos_tags"],
+                        "ner_tags": parts["ner_tags"],
+                        "dep_parents": parts["dep_parents"],
+                        "dep_labels": parts["dep_labels"],
+                        "xpath": attrs[0], "html_tag": attrs[1],
+                        "html_attrs": attrs[2],
+                        "prev_sib_tag": attrs[3], "next_sib_tag": attrs[4],
+                        "node_pos": attrs[5],
+                        "ancestor_classes": attrs[6], "ancestor_ids": attrs[7],
+                        "page": visual["page"] if visual else None,
+                        "left": visual["left"] if visual else None,
+                        "top": visual["top"] if visual else None,
+                        "right": visual["right"] if visual else None,
+                        "bottom": visual["bottom"] if visual else None,
+                        "section_sid": section_sid,
+                        "paragraph_sid": paragraph_sid,
+                        "table_sid": table_sid, "cell_sid": cell_sid,
+                        "table_position": table_pos, "cell_position": cell_pos,
+                    })
+                abs_offset = abs_end
+                n_sent += 1
     return rows
 
 

@@ -352,3 +352,25 @@ def test_fit_outputs_are_pinned(spark):
     }
     assert {name: _fit_digest(*fit) for name, fit in fits.items()} \
         == FIT_DIGESTS
+
+
+@pytest.mark.parametrize("trainer", ["logreg", "logreg_k", "sequence",
+                                     "sequence_k"])
+def test_empty_fit_set_raises(spark, trainer):
+    """A fit set with no rows raises one ValueError naming it, instead of a
+    numpy indexing error (the logreg heads) or a NaN bias that scores every
+    candidate NaN (the sequence heads)."""
+    feats = _feat_fixture(spark).limit(0)
+    marked = _marked_fixture(spark).limit(0)
+    binary = lambda df: df.select("candidate_sid",  # noqa: E731
+                                  F.col("probs")[0].alias("prob"))
+    fit = {
+        "logreg": lambda: train_logreg(feats, binary(feats)),
+        "logreg_k": lambda: train_logreg_k(
+            feats, feats.select("candidate_sid", "probs"), 3),
+        "sequence": lambda: train_sequence_model(marked, binary(marked)),
+        "sequence_k": lambda: train_sequence_model_k(
+            marked, marked.select("candidate_sid", "probs"), 3),
+    }[trainer]
+    with pytest.raises(ValueError, match="fit set is empty"):
+        fit()

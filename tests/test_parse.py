@@ -321,3 +321,111 @@ def test_docs_source_parse_equals_web_pages_parse(spark, hocr):
         assert g.exceptAll(w).count() == 0, t
     if hocr:  # the visual columns are populated, not silently null
         assert got.where(got.page.isNotNull()).count() > 0
+
+
+def _tag_soup(rng) -> str:
+    """One seeded random tag-soup page: well-formed and broken tables
+    (valid and invalid rowspan/colspan, nested tables), figures with zero,
+    one or several imgs, blacklisted elements with tails, source
+    ``visited`` attributes, unclosed tags and stray cells."""
+    words = ["alpha", "Beta", "42", "x–y", "end.", "PN10A", " ", "mid. next",
+             "", "a &amp; b", "-40", "café"]
+
+    def text():
+        return " ".join(rng.choice(words) for _ in range(rng.randint(0, 4)))
+
+    def attrs(tag):
+        out = []
+        if tag in ("td", "th") and rng.random() < 0.5:
+            out.append(f'{rng.choice(["rowspan", "colspan"])}='
+                       f'"{rng.choice(["1", "2", "3", "x", "", "-1"])}"')
+        if rng.random() < 0.1:
+            out.append(f'visited="{rng.choice(["true", "text", "no"])}"')
+        if rng.random() < 0.3:
+            out.append(f'class="{rng.choice(["hl", "c1", "c2"])}"')
+        if rng.random() < 0.2:
+            out.append(f'id="i{rng.randint(0, 9)}"')
+        if rng.random() < 0.2:
+            out.append(f'name="n{rng.randint(0, 9)}"')
+        if tag == "img":
+            out.append(f'src="s{rng.randint(0, 9)}.png"')
+        return "".join(" " + a for a in out)
+
+    def close(tag):
+        return f"</{tag}>" if rng.random() < 0.9 else ""
+
+    def element(depth):
+        kind = rng.random()
+        if kind < 0.2 and depth < 4:
+            return table(depth)
+        if kind < 0.35:
+            return figure(depth)
+        tag = rng.choice(["p", "div", "section", "img", "script", "style",
+                          "span", "br", "b", "h1", "p", "div", "span", "b"]
+                         if rng.random() < 0.95 else
+                         ["td", "tr", "th", "caption", "figcaption", "html"])
+        if tag in ("img", "br"):
+            return f"<{tag}{attrs(tag)}/>{text()}"
+        kids = rng.randint(0, 3) if depth < 4 else 0
+        inner = text() + "".join(element(depth + 1) for _ in range(kids))
+        return f"<{tag}{attrs(tag)}>{inner}{close(tag)}{text()}"
+
+    def table(depth):
+        body = f"<caption>{text()}</caption>" if rng.random() < 0.5 else ""
+        for _ in range(rng.randint(0, 3)):
+            cells = "".join(
+                f"<{c}{attrs(c)}>{text()}"
+                + (element(depth + 1) if rng.random() < 0.3 else "")
+                + f"{close(c)}{text()}"
+                for c in (rng.choice(["td", "th"])
+                          for _ in range(rng.randint(0, 3))))
+            body += f"<tr{attrs('tr')}>{text()}{cells}{close('tr')}"
+        return f"<table{attrs('table')}>{text()}{body}{close('table')}{text()}"
+
+    def figure(depth):
+        kids = [rng.choice(["<img{}/>", "<img{}/>", "<figcaption{}>" + text()
+                            + "</figcaption>", "<p{}>" + text() + "</p>"])
+                .format(attrs("img")) for _ in range(rng.randint(0, 3))]
+        return (f"<figure{attrs('figure')}>{text()}{''.join(kids)}"
+                f"{close('figure')}{text()}")
+
+    head = ("<head><style>.hl { color: red; }\n.c1 {\n font-weight: bold }"
+            "</style></head>" if rng.random() < 0.5 else "")
+    body = "".join(element(0) for _ in range(rng.randint(1, 3)))
+    return f"<html{attrs('html')}>{head}<body>{body}</body></html>"
+
+
+def test_parse_output_is_pinned():
+    """One sha256 over every context row (repr, CONTEXT_COLUMNS order) or
+    raised exception (type and message) of parse_document across corpus
+    pages (hot docs 0, 50, 100 included), hOCR pages and seeded tag soup,
+    under four configs and two emit_types. Any change to the rows the
+    parse emits, their order or its errors moves the digest."""
+    import hashlib
+    import random
+
+    from fonduer_spark.corpus import render_hocr
+    from fonduer_spark.parse import CONTEXT_COLUMNS
+    from fonduer_spark.sources import rewrite_hocr
+
+    rng = random.Random(11)
+    pages = [render_page(i, "alpha beta gamma delta epsilon zeta")
+             for i in range(120)]
+    pages += [_tag_soup(rng) for _ in range(400)]
+    configs = [ParseConfig(), ParseConfig(structural=False),
+               ParseConfig(tabular=False), ParseConfig(lingual="regex_tagger")]
+    hocr_cfg = ParseConfig(visual="hocr", lingual="regex_tagger")
+    cases = [(p, cfg) for p in pages for cfg in configs]
+    cases += [(rewrite_hocr(render_hocr(i)), hocr_cfg) for i in range(6)]
+    h = hashlib.sha256()
+    for n, (html, cfg) in enumerate(cases):
+        lp = cfg.make_lingual_parser()
+        for emit in (None, {"sentence"}):
+            try:
+                got = [tuple(r[c] for c in CONTEXT_COLUMNS)
+                       for r in parse_document(f"u{n}", html, cfg, lp, emit)]
+            except Exception as e:  # the error is part of the output
+                got = (type(e).__name__, str(e))
+            h.update(repr(got).encode("utf-8"))
+    assert h.hexdigest() == (
+        "9216ec0c9216eefa45abc83e5f410e06dd8bbfa960d3cae0ac4a793534636fac")

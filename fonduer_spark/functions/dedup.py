@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..cache import cached, released
+from ..cache import cached
 
 
 def normalized_tokens(text: Column) -> Column:
@@ -97,7 +97,8 @@ def minhash_lsh_pairs(
     signature -> ``bands`` band keys -> groupBy band key -> within-bucket
     pairs (a < b), distinct. The quadratic blowup is bounded per bucket; a
     bucket whose size explodes indicates boilerplate text — cap via
-    ``spark.sql.adaptive`` skew splitting at scale.
+    ``spark.sql.adaptive`` skew splitting at scale. ``bands`` must divide
+    ``k`` (ValueError otherwise).
 
     ``family``:
     - "md5": k independent salted md5s per shingle (string-min family);
@@ -113,7 +114,7 @@ def minhash_lsh_pairs(
     if family not in ("md5", "km"):
         raise ValueError(
             f"unknown MinHash family {family!r}: expected 'md5' or 'km'")
-    rows = k // bands
+    band_keys = _band_keys(k, bands)
     # Relational MinHash: explode shingles ONCE, then one groupBy computing
     # all k mins in a single pass. (A per-row array expression duplicates
     # the whole signature subtree into every band key because Catalyst does
@@ -125,12 +126,30 @@ def minhash_lsh_pairs(
         F.explode(shingles(F.col(text_col), shingle_n)).alias("s"),
     )
     sig = _minhash_sig_frame(ex, k, family)
-    band_keys = F.array(*[
+    return _bucket_pairs(sig.select("doc", F.explode(band_keys).alias("bk")))
+
+
+def _band_keys(k: int, bands: int) -> Column:
+    """The ``bands`` LSH band keys of a (doc, h0..h{k-1}) signature row:
+    band number and its k/bands hashes joined by "|". A band with no hash
+    would key every document alike (an all-pairs join) and leftover hashes
+    would be dropped silently, so ``bands`` must divide ``k``."""
+    if bands < 1 or k % bands:
+        raise ValueError(
+            f"bands must divide k: got k={k}, bands={bands}")
+    rows = k // bands
+    return F.array(*[
         F.concat_ws("|", F.lit(str(b)),
                     *[F.col(f"h{b * rows + j}") for j in range(rows)])
         for b in range(bands)
     ])
-    keyed = sig.select(F.col("doc"), F.explode(band_keys).alias("bk"))
+
+
+def _bucket_pairs(keyed: DataFrame) -> DataFrame:
+    """(doc, bk) rows -> the distinct (a, b) pairs, a < b, that share a
+    bucket key: the one bucket self-join of every LSH operator (MinHash
+    bands, sign-LSH tables). ``keyed`` should be narrow and cached — both
+    join sides read it."""
     a = keyed.select(F.col("doc").alias("a"), "bk")
     b = keyed.select(F.col("doc").alias("b"), "bk")
     return (
@@ -203,9 +222,17 @@ def lsh_verified_pairs(
         F.col(id_col).alias("doc"),
         F.array_distinct(shingles(F.col(text_col), shingle_n)).alias("sh"),
     ))
+    return _jaccard_verified(pairs, sh, threshold)
+
+
+def _jaccard_verified(pairs: DataFrame, sets: DataFrame,
+                      threshold: float) -> DataFrame:
+    """(a, b) candidate pairs + (doc, sh) distinct-element sets -> (a, b,
+    jaccard) with the 6-digit rounded Jaccard >= threshold. ``sets`` should
+    be cached: both verify joins read it."""
     out = (
-        pairs.join(sh.withColumnsRenamed({"doc": "a", "sh": "sha"}), "a")
-        .join(sh.withColumnsRenamed({"doc": "b", "sh": "shb"}), "b")
+        pairs.join(sets.withColumnsRenamed({"doc": "a", "sh": "sha"}), "a")
+        .join(sets.withColumnsRenamed({"doc": "b", "sh": "shb"}), "b")
     )
     inter = F.size(F.array_intersect("sha", "shb"))
     union = F.size("sha") + F.size("shb") - inter
@@ -233,39 +260,20 @@ def near_dup_keep(
     are implicitly kept (joining this frame back with a left-anti on
     kept = 0 is the drop step).
 
-    Ids travel through the CC operator as 19-digit zero-padded strings
-    (every non-negative int64 fits — Spark's lpad TRUNCATES overlong
-    input, so a narrower pad would silently collide ids above its width)
-    so the lexicographic smallest-label propagation equals numeric min;
-    negative ids would break that invariant and fail fast via raise_error.
-    The whole composition (md5 signatures, band joins, in-bucket verify,
-    recursive closure) stays SQL-reproducible. The verified pairs frame is
-    cached (it feeds the CC size guard and both CC strategies) in a block
-    of its own: connected_components runs eagerly, so the result no longer
-    reads any cache and nothing is left cached on return."""
-    from ..linking import connected_components
+    Ids travel through the CC operator as zero-padded strings
+    (linking.id_components), so negative ids fail fast. The whole
+    composition (md5 signatures, band joins, in-bucket verify, recursive
+    closure) stays SQL-reproducible. The verified pairs frame is cached (it
+    feeds the CC size guard and both CC strategies) in a block of its own:
+    connected_components runs eagerly, so the result no longer reads any
+    cache and nothing is left cached on return."""
+    from ..linking import id_components
 
-    def key(c):
-        col = F.col(c)
-        return F.when(
-            col < 0,
-            F.raise_error(F.concat(
-                F.lit("near_dup_keep requires non-negative ids, got "),
-                col.cast("string"))).cast("string"),
-        ).otherwise(F.lpad(col.cast("string"), 19, "0"))
-    with released():
-        pairs = cached(lsh_verified_pairs(docs, id_col, text_col, k, bands,
-                                          shingle_n, threshold))
-        edges = pairs.select(key("a").alias("a"), key("b").alias("b"))
-        verts = (
-            edges.select(F.col("a").alias("v"))
-            .unionByName(edges.select(F.col("b").alias("v")))
-            .distinct()
-        )
-        comp = connected_components(verts, edges)
+    comp = id_components("near_dup_keep", lambda: lsh_verified_pairs(
+        docs, id_col, text_col, k, bands, shingle_n, threshold))
     return comp.select(
-        F.col("v").cast("long").alias(id_col),
-        F.col("component").cast("long").alias("canonical"),
+        F.col("v").alias(id_col),
+        F.col("component").alias("canonical"),
         (F.col("v") == F.col("component")).cast("int").alias("kept"),
     )
 
@@ -418,51 +426,11 @@ def embedding_near_dup_pairs_lsh(
     Recall < 1 by construction; ``embedding_near_dup_pairs`` (cartesian)
     stays as the bounded ground-truth kernel.
     """
-    from .similarity import dot, md5_bucket, norm
+    from .similarity import _sign_lsh_cos_pairs
 
-    # (doc, bucket-key) proxy rows only — the vector column must NOT ride
-    # into the self-join (project early, guide §2.3); persisted so the two
-    # join sides share ONE bucket-hash pass (16 plane dots per vector)
-    # instead of Catalyst re-planning the subtree per side
-    keyed = cached(emb.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.array(*[
-            F.concat_ws(
-                "|", F.lit(str(t)),
-                md5_bucket(F.col(vec_col), dim, n_planes, prefix=f"t{t}p"),
-            )
-            for t in range(n_tables)
-        ])).alias("bk"),
-    ))
-    a = keyed.select(F.col("doc").alias("a"), "bk")
-    b = keyed.select(F.col("doc").alias("b"), "bk")
-    pairs = (
-        a.join(b, "bk")
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-    # norms precomputed ONCE PER VECTOR in the join-side projections —
-    # cos = dot/(na*nb) evaluates the identical IEEE expression tree as
-    # cosine(va, vb) (same fold order, same multiply order), so the rounded
-    # scores are bit-identical while the per-PAIR work drops from three
-    # 64-dim folds to one (guide §1.2 'don't compute things you throw away')
-    va = emb.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"),
-                    norm(F.col(vec_col)).alias("_na"))
-    vb = emb.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"),
-                    norm(F.col(vec_col)).alias("_nb"))
-    return (
-        pairs.join(va, "a")
-        .join(vb, "b")
-        .withColumn(
-            "cos",
-            F.round(
-                dot(F.col("va"), F.col("vb")) / (F.col("_na") * F.col("_nb")),
-                6,
-            ))
-        .where(F.col("cos") >= threshold)
-        .select("a", "b", "cos")
-    )
+    return _sign_lsh_cos_pairs(
+        emb, dim, n_planes, n_tables, id_col, vec_col,
+    ).where(F.col("cos") >= threshold)
 
 
 def dedup_substrings(
@@ -579,23 +547,11 @@ def semantic_dedup(
 
     Returns (vec_id, cell, kept int 0/1) for every input row.
     """
-    from .similarity import (dot, ivf_assignment_structs, kmeans_centroids,
+    from .similarity import (_coarse_centroids, dot, ivf_assignment_structs,
                              norm)
 
-    if quantizer == "kmeans":
-        cents = kmeans_centroids(emb, n_centroids, vec_col=vec_col)
-    elif quantizer == "fixed":
-        cents = [
-            (r[0], list(r[1])) for r in
-            emb.where(F.col(id_col) < n_centroids)
-            .select(id_col, vec_col).orderBy(id_col).collect()
-        ]
-    else:
-        raise ValueError(f"unknown quantizer {quantizer!r}: "
-                         "expected 'fixed' or 'kmeans'")
-    bad = [len(c) for _, c in cents if len(c) != dim]
-    if bad:
-        raise ValueError(f"centroid dimension {bad[0]} != declared dim {dim}")
+    cents = _coarse_centroids(emb, dim, n_centroids, id_col, vec_col,
+                              quantizer)
     structs = ivf_assignment_structs(F.col(vec_col), cents)
     # persisted: the in-cell self-join and the final kept-join otherwise
     # re-plan the centroid-assignment arithmetic (n_centroids 64-dim dots

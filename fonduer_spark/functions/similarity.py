@@ -21,7 +21,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..cache import cached, released
+from ..cache import cached
+from .dedup import _bucket_pairs
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -200,6 +201,31 @@ def kmeans_centroids(
     return [(j, [float(x) for x in c]) for j, c in enumerate(km.clusterCenters())]
 
 
+def _coarse_centroids(emb: DataFrame, dim: int, n_centroids: int,
+                      id_col: str, vec_col: str,
+                      quantizer: str) -> List[tuple]:
+    """The coarse quantizer of ivf_bucketed_ann and semantic_dedup, as an
+    (id, vector) list: ``"fixed"`` = the embeddings of the first
+    ``n_centroids`` ids, ``"kmeans"`` = kmeans_centroids. Every centroid
+    must have the declared ``dim``."""
+    if quantizer == "kmeans":
+        cents = kmeans_centroids(emb, n_centroids, vec_col=vec_col)
+    elif quantizer == "fixed":
+        cents = [
+            (r[0], list(r[1])) for r in
+            emb.where(F.col(id_col) < n_centroids)
+            .select(id_col, vec_col).orderBy(id_col).collect()
+        ]
+    else:
+        raise ValueError(f"unknown quantizer {quantizer!r}: "
+                         "expected 'fixed' or 'kmeans'")
+    bad = [len(c) for _, c in cents if len(c) != dim]
+    if bad:
+        raise ValueError(
+            f"centroid dimension {bad[0]} != declared dim {dim}")
+    return cents
+
+
 def ivf_bucketed_ann(
     emb: DataFrame,
     query_ids: Sequence[int],
@@ -228,21 +254,8 @@ def ivf_bucketed_ann(
     Output shape matches cosine_topk; scores are exact cosines of the
     probed candidates.
     """
-    if quantizer == "kmeans":
-        cents = kmeans_centroids(emb, n_centroids, vec_col=vec_col)
-    elif quantizer == "fixed":
-        cents = [
-            (r[0], list(r[1])) for r in
-            emb.where(F.col(id_col) < n_centroids)
-            .select(id_col, vec_col).orderBy(id_col).collect()
-        ]
-    else:
-        raise ValueError(f"unknown quantizer {quantizer!r}: "
-                         "expected 'fixed' or 'kmeans'")
-    bad = [len(c) for _, c in cents if len(c) != dim]
-    if bad:
-        raise ValueError(
-            f"centroid dimension {bad[0]} != declared dim {dim}")
+    cents = _coarse_centroids(emb, dim, n_centroids, id_col, vec_col,
+                              quantizer)
     v = F.col(vec_col)
     structs = ivf_assignment_structs(v, cents)
     arr = F.array(*structs)
@@ -436,6 +449,46 @@ def ann_topk(
     raise ValueError(f"unknown ANN method {method!r}: expected 'ivf' or 'lsh'")
 
 
+def _sign_lsh_cos_pairs(emb: DataFrame, dim: int, n_planes: int,
+                        n_tables: int, id_col: str,
+                        vec_col: str) -> DataFrame:
+    """(a, b, cos), a < b, for every pair of vectors that shares a bucket in
+    any of ``n_tables`` tables of ``n_planes`` md5-Rademacher planes each
+    (md5_bucket, prefix "t{table}p"); cos is the exact cosine rounded to 6.
+    The candidate stage of embedding_near_dup_pairs_lsh and knn_graph."""
+    if n_planes < 1:
+        raise ValueError("n_planes must be >= 1")
+    if n_tables < 1:
+        raise ValueError("n_tables must be >= 1")
+    # (doc, bucket-key) proxy rows only — the vector column must NOT ride
+    # into the self-join (project early, guide §2.3); persisted so the two
+    # join sides share ONE bucket-hash pass instead of Catalyst re-planning
+    # the plane dots per side
+    keyed = cached(emb.select(
+        F.col(id_col).alias("doc"),
+        F.explode(F.array(*[
+            F.concat_ws(
+                "|", F.lit(str(t)),
+                md5_bucket(F.col(vec_col), dim, n_planes, prefix=f"t{t}p"),
+            )
+            for t in range(n_tables)
+        ])).alias("bk"),
+    ))
+    # norms precomputed ONCE PER VECTOR in the join-side projections (see
+    # cosine_topk): bit-identical cosines, one fold per pair instead of three
+    va = emb.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"),
+                    norm(F.col(vec_col)).alias("_na"))
+    vb = emb.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"),
+                    norm(F.col(vec_col)).alias("_nb"))
+    return (
+        _bucket_pairs(keyed).join(va, "a").join(vb, "b")
+        .select("a", "b",
+                F.round(
+                    dot(F.col("va"), F.col("vb"))
+                    / (F.col("_na") * F.col("_nb")), 6).alias("cos"))
+    )
+
+
 def knn_graph(
     emb: DataFrame,
     dim: int,
@@ -464,39 +517,8 @@ def knn_graph(
     bucket); the final window shuffles once on the source id with at most
     sum-of-bucket-sizes rows per source. Returns (src, dst, cos, rank).
     """
-    # persisted (doc, bucket-key) proxy rows: the self-join otherwise plans
-    # the 16-plane bucket hashing once per side (no cross-branch subtree
-    # sharing in Catalyst) — see embedding_near_dup_pairs_lsh
-    keyed = cached(emb.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.array(*[
-            F.concat_ws(
-                "|", F.lit(str(t)),
-                md5_bucket(F.col(vec_col), dim, n_planes, prefix=f"t{t}p"),
-            )
-            for t in range(n_tables)
-        ])).alias("bk"),
-    ))
-    a = keyed.select(F.col("doc").alias("a"), "bk")
-    b = keyed.select(F.col("doc").alias("b"), "bk")
-    pairs = (
-        a.join(b, "bk")
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-    # per-vector norm precompute (see cosine_topk): bit-identical cosines
-    va = emb.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"),
-                    norm(F.col(vec_col)).alias("_na"))
-    vb = emb.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"),
-                    norm(F.col(vec_col)).alias("_nb"))
-    scored = (
-        pairs.join(va, "a").join(vb, "b")
-        .select("a", "b",
-                F.round(
-                    dot(F.col("va"), F.col("vb"))
-                    / (F.col("_na") * F.col("_nb")), 6).alias("cos"))
-    )
+    scored = _sign_lsh_cos_pairs(emb, dim, n_planes, n_tables, id_col,
+                                 vec_col)
     edges = scored.select(
         F.col("a").alias("src"), F.col("b").alias("dst"), "cos"
     ).unionByName(scored.select(
@@ -527,9 +549,8 @@ def semantic_clusters(
     Edges = knn_graph edges with cosine >= threshold, undirected + deduped;
     EVERY input vector is a vertex, so isolated vectors come back as
     singleton clusters. Cluster label = smallest member id (ids travel
-    through CC as 19-digit zero-padded strings — the near_dup_keep
-    convention, where lexicographic min equals numeric min for
-    non-negative int64). Returns (id, cluster, n_members).
+    through CC as zero-padded strings, linking.id_components — the
+    near_dup_keep convention). Returns (id, cluster, n_members).
 
     Scale: inherits knn_graph's bucketed candidate bound and CC's hybrid
     strategy (driver union-find under the rows+bytes guard, O(log diameter)
@@ -537,33 +558,18 @@ def semantic_clusters(
     cached — it feeds CC's size guard and both strategies — in a block of
     its own: CC runs eagerly, so nothing is left cached on return.
     """
-    from ..linking import connected_components
+    from ..linking import id_components
 
-    def key(c):
-        col = F.col(c)
-        return F.when(
-            col < 0,
-            F.raise_error(F.concat(
-                F.lit("semantic_clusters requires non-negative ids, got "),
-                col.cast("string"))).cast("string"),
-        ).otherwise(F.lpad(col.cast("string"), 19, "0"))
-
-    with released():
-        g = knn_graph(emb, dim, k=k, n_planes=n_planes, n_tables=n_tables,
-                      id_col=id_col, vec_col=vec_col)
-        edges = cached(
-            g.where(F.col("cos") >= threshold)
-            .select(F.least("src", "dst").alias("a"),
-                    F.greatest("src", "dst").alias("b"))
-            .distinct()
-            .select(key("a").alias("a"), key("b").alias("b"))
-        )
-        verts = emb.select(key(id_col).alias("v"))
-        comp = connected_components(verts, edges)
-    comp = comp.select(
-        F.col("v").cast("long").alias(id_col),
-        F.col("component").cast("long").alias("cluster"),
-    )
+    comp = id_components(
+        "semantic_clusters",
+        lambda: knn_graph(emb, dim, k=k, n_planes=n_planes,
+                          n_tables=n_tables, id_col=id_col, vec_col=vec_col)
+        .where(F.col("cos") >= threshold)
+        .select(F.least("src", "dst").alias("a"),
+                F.greatest("src", "dst").alias("b"))
+        .distinct(),
+        emb.select(F.col(id_col).alias("v")),
+    ).select(F.col("v").alias(id_col), F.col("component").alias("cluster"))
     sizes = comp.groupBy("cluster").agg(
         F.count(F.lit(1)).alias("n_members"))
     return comp.join(sizes, "cluster").select(id_col, "cluster", "n_members")

@@ -6,9 +6,11 @@ canonicalization to materialize (subj, pred, obj) triples".
 
 Pipeline:
   surface forms (distinct normalized mention text)
-    -> char-shingle MinHash signatures (column expressions, md5-based)
+    -> char-shingle sets -> MinHash signatures (md5-based, both cached)
     -> banded LSH bucket join -> candidate pairs
-    -> Jaccard verify (token-shingle overlap) -> similarity edges
+    -> exact Jaccard verify -> similarity edges
+       (signature frame, band keys, bucket join and verify are the
+        functions.dedup stages behind lsh_verified_pairs, written once)
     -> connected components (iterative smallest-id label propagation —
        a pure DataFrame loop, no GraphFrames dependency)
     -> entities table (entity_id = lexicographically smallest member).
@@ -16,21 +18,25 @@ Pipeline:
 Scale notes: every stage is join/agg-shaped; the CC loop converges in
 O(log(diameter)) iterations, each one self-join + groupBy-min; components of
 surface-form similarity graphs have tiny diameters in practice. Each
-iteration localCheckpoints to truncate lineage growth.
+iteration localCheckpoints to truncate lineage growth. ``id_components``
+runs CC over integer ids for near_dup_keep and semantic_clusters.
 
 Caches follow cache.py: an operator whose result reads its caches leaves
-them to the caller's ``released()`` block; ``pagerank``, whose rounds are
-checkpointed, releases its own.
+them to the caller's ``released()`` block; ``canonical_entities`` and
+``id_components``, which run CC eagerly, and ``pagerank``, whose rounds are
+checkpointed, release their own.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .cache import cached, released
+from .functions.dedup import (_band_keys, _bucket_pairs,
+                              _jaccard_verified, _minhash_sig_frame)
 from .session import rows_frame
 from .triples import normalize_surface
 
@@ -63,50 +69,24 @@ def similarity_edges(
     shingle_n: int = 3,
     jaccard_threshold: float = 0.6,
 ) -> DataFrame:
-    """(a, b) surface pairs with shingle-Jaccard >= threshold via MinHash-LSH.
+    """(a, b, jaccard) surface pairs with shingle-Jaccard >= threshold via
+    MinHash-LSH: the char-shingle twin of dedup.lsh_verified_pairs, through
+    the same signature frame, band keys, bucket join and verify.
 
     The LSH bucket join bounds the candidate set; the exact Jaccard verify
-    runs only on bucket-cohabiting pairs.
+    (rounded to 6 digits) runs only on bucket-cohabiting pairs. The shingle
+    sets and the signatures are cached — each feeds both sides of a join —
+    and left to the caller's ``released()`` block.
     """
-    rows = k // bands
-    # Relational MinHash (see dedup.minhash_lsh_pairs): explode shingles
-    # once, one groupBy computing all k mins — avoids Catalyst's lack of
-    # cross-expression CSE duplicating the signature into every band key.
-    ex = forms.select(
-        "surface", F.explode(char_shingles(F.col("surface"), shingle_n)).alias("s")
-    )
-    sig = ex.groupBy("surface").agg(*[
-        F.min(F.md5(F.concat(F.col("s"), F.lit(f"#{i}")))).alias(f"h{i}")
-        for i in range(k)
-    ])
-    band_keys = F.array(*[
-        F.concat_ws("|", F.lit(str(b)),
-                    *[F.col(f"h{b * rows + j}") for j in range(rows)])
-        for b in range(bands)
-    ])
-    keyed = sig.select("surface", F.explode(band_keys).alias("bk"))
-    pairs = (
-        keyed.select(F.col("surface").alias("a"), "bk")
-        .join(keyed.select(F.col("surface").alias("b"), "bk"), "bk")
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-    # exact Jaccard verify only on bucket-cohabiting pairs
-    shing = forms.select(
-        "surface", char_shingles(F.col("surface"), shingle_n).alias("sh")
-    )
-    pairs = (
-        pairs.join(shing.withColumnsRenamed({"surface": "a", "sh": "sha"}), "a")
-        .join(shing.withColumnsRenamed({"surface": "b", "sh": "shb"}), "b")
-    )
-    inter = F.size(F.array_intersect("sha", "shb"))
-    union = F.size(F.array_union("sha", "shb"))
-    return (
-        pairs.withColumn("jaccard", inter / union)
-        .where(F.col("jaccard") >= jaccard_threshold)
-        .select("a", "b", "jaccard")
-    )
+    band_keys = _band_keys(k, bands)
+    sets = cached(forms.select(
+        F.col("surface").alias("doc"),
+        char_shingles(F.col("surface"), shingle_n).alias("sh"),
+    ))
+    sig = _minhash_sig_frame(
+        sets.select("doc", F.explode("sh").alias("s")), k, "md5")
+    pairs = _bucket_pairs(sig.select("doc", F.explode(band_keys).alias("bk")))
+    return _jaccard_verified(pairs, sets, jaccard_threshold)
 
 
 def _fits_on_driver(vertices: DataFrame, edges: DataFrame,
@@ -171,9 +151,15 @@ def connected_components(
                     parent[hi] = lo
         return rows_frame(vertices.sparkSession, [(v, find(v)) for v in vs],
                           "v string, component string")
-    sym = edges.select("a", "b").unionByName(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
+    # an edge with an endpoint outside ``vertices`` is dropped, as the
+    # driver path drops it: joined in, it would add a stray vertex.
+    # Checkpointed once, since every round joins it.
+    sym = (
+        edges.select("a", "b")
+        .unionByName(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .join(vertices.select(F.col("v").alias("a")), "a", "left_semi")
+        .join(vertices.select(F.col("v").alias("b")), "b", "left_semi")
+    ).localCheckpoint()
     labels = vertices.select(F.col("v"), F.col("v").alias("component"))
     labels = labels.localCheckpoint()
     converged = False
@@ -221,17 +207,55 @@ def connected_components(
     return labels
 
 
+def id_components(op: str, edges: Callable[[], DataFrame],
+                  vertices: DataFrame | None = None) -> DataFrame:
+    """connected_components over non-negative int64 ids: (v, component) as
+    longs, component = the smallest member id.
+
+    ``edges()`` builds the (a, b) id frame; it is built and cached inside a
+    block of this helper's own (its cache feeds CC's size guard and both
+    strategies), and CC runs eagerly, so nothing is left cached on return.
+    ``vertices`` (column v) defaults to the edge endpoints. Ids travel
+    through CC as 19-digit zero-padded strings (every non-negative int64
+    fits — Spark's lpad TRUNCATES overlong input, so a narrower pad would
+    silently collide ids above its width), so the lexicographic smallest
+    label equals the numeric min; a negative id breaks that and fails fast
+    via raise_error naming ``op``."""
+    def key(c):
+        col = F.col(c)
+        return F.when(
+            col < 0,
+            F.raise_error(F.concat(
+                F.lit(f"{op} requires non-negative ids, got "),
+                col.cast("string"))).cast("string"),
+        ).otherwise(F.lpad(col.cast("string"), 19, "0"))
+
+    with released():
+        e = cached(edges()).select(key("a").alias("a"), key("b").alias("b"))
+        if vertices is None:
+            v = (e.select(F.col("a").alias("v"))
+                 .unionByName(e.select(F.col("b").alias("v"))).distinct())
+        else:
+            v = vertices.select(key("v").alias("v"))
+        comp = connected_components(v, e)
+    return comp.select(F.col("v").cast("long").alias("v"),
+                       F.col("component").cast("long").alias("component"))
+
+
 def canonical_entities(
     mentions: DataFrame,
     jaccard_threshold: float = 0.6,
 ) -> DataFrame:
     """entities table: (entity_id, surface, n_refs) — every mention surface
-    mapped to its component's canonical id."""
+    mapped to its component's canonical id. similarity_edges' caches are
+    released by a block of its own: CC runs eagerly, so the result reads
+    none of them."""
     forms = surface_forms(mentions)
-    edges = similarity_edges(forms, jaccard_threshold=jaccard_threshold)
-    comps = connected_components(
-        forms.select(F.col("surface").alias("v")), edges
-    )
+    with released():
+        edges = similarity_edges(forms, jaccard_threshold=jaccard_threshold)
+        comps = connected_components(
+            forms.select(F.col("surface").alias("v")), edges
+        )
     return (
         forms.join(comps, forms.surface == comps.v, "left")
         .select(

@@ -56,6 +56,12 @@ def _edges(spark):
     return spark.createDataFrame(GRAPH, "a string, b string")
 
 
+def _mentions(spark):
+    return spark.createDataFrame(
+        [("PN100A",), ("PN100B",), ("pn100a",), ("ZZ999X",)],
+        "span_text string")
+
+
 def _auto(spark, docs, emb):
     return extract_candidates_auto(
         load_docs(spark, SF, max_docs=6), default_mention_specs(),
@@ -83,6 +89,8 @@ OPERATORS = {
     "set_similarity_join": lambda spark, docs, emb: dd.set_similarity_join(
         docs),
     "knn_graph": lambda spark, docs, emb: sim.knn_graph(emb, dim=16, k=3),
+    "similarity_edges": lambda spark, docs, emb: lk.similarity_edges(
+        lk.surface_forms(_mentions(spark))),
     "featurize": _featurize,
     "cooccurrence_edges": lambda spark, docs, emb: lk.cooccurrence_edges(
         _edges(spark).select(F.col("a").alias("url"), F.col("b").alias("ent"))),
@@ -108,10 +116,12 @@ def test_block_releases_every_operator_cache(spark, docs, emb, name):
 
 
 def test_self_releasing_operators_leave_nothing_cached(spark, docs, emb):
-    """near_dup_keep and semantic_clusters run connected components eagerly
-    and pagerank checkpoints its rounds, so their results read no cache:
-    they release their own with no block open."""
+    """near_dup_keep, semantic_clusters and canonical_entities run connected
+    components eagerly and pagerank checkpoints its rounds, so their
+    results read no cache: they release their own with no block open."""
     assert dd.near_dup_keep(docs).collect()
+    assert _cache_empty(spark)
+    assert lk.canonical_entities(_mentions(spark), 0.5).collect()
     assert _cache_empty(spark)
     assert sim.semantic_clusters(emb, dim=16, threshold=0.9, k=3).collect()
     assert _cache_empty(spark)

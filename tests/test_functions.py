@@ -46,6 +46,20 @@ def test_minhash_lsh_pairs_finds_dups(spark, docs):
     assert (0, 3) not in pairs and (1, 3) not in pairs
 
 
+def test_lsh_hash_bits_must_divide_evenly(spark, docs, emb):
+    """A band with no MinHash row, leftover MinHash rows or a sign-LSH
+    table with no plane would key every document alike (an all-pairs
+    join) or drop hashes silently: each raises instead."""
+    with pytest.raises(ValueError, match="bands must divide k"):
+        dd.minhash_lsh_pairs(docs, k=4, bands=8)
+    with pytest.raises(ValueError, match="bands must divide k"):
+        dd.minhash_lsh_pairs(docs, k=16, bands=5)
+    with pytest.raises(ValueError, match="n_planes must be >= 1"):
+        sim.knn_graph(emb, dim=16, n_planes=0)
+    with pytest.raises(ValueError, match="n_tables must be >= 1"):
+        dd.embedding_near_dup_pairs_lsh(emb, dim=16, n_tables=0)
+
+
 def test_ngram_jaccard(spark, docs):
     pairs = {(r.a, r.b): r.jaccard for r in dd.ngram_jaccard_pairs(
         docs, shingle_n=3, threshold=0.5).collect()}

@@ -41,7 +41,7 @@ def test_similarity_edges_group_typo_variants(spark):
     edges = similarity_edges(forms, jaccard_threshold=0.5).collect()
     pairs = {(e.a, e.b) for e in edges}
     assert ("PN100A", "PN100B") in pairs
-    assert not any("ZZ999X" in p for e in edges for p in (e.a, e.b) if False)
+    assert not any("ZZ999X" in (e.a, e.b) for e in edges)
 
 
 def test_canonical_entities_and_triple_rewrite(spark):
@@ -62,7 +62,8 @@ def test_canonical_entities_and_triple_rewrite(spark):
 
 def test_connected_components_distributed_path(spark):
     """Force the DataFrame-loop strategy (driver_threshold=0) and check it
-    matches the driver-side union-find result."""
+    matches the driver-side union-find result, also on an edge whose
+    endpoint is not a vertex."""
     vertices = spark.createDataFrame([(v,) for v in "abcdefg"], "v string")
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("d", "e")], "a string, b string")
@@ -71,6 +72,15 @@ def test_connected_components_distributed_path(spark):
     drv = {r.v: r.component for r in connected_components(
         vertices, edges).collect()}
     assert dist == drv
+    # an edge endpoint that is not a vertex ("b") is dropped by both
+    # strategies: no stray vertex, and a and c stay apart
+    vertices = spark.createDataFrame([("a",), ("c",)], "v string")
+    edges = spark.createDataFrame([("a", "b"), ("b", "c")],
+                                  "a string, b string")
+    for threshold in (0, 200_000):
+        got = sorted(map(tuple, connected_components(
+            vertices, edges, driver_threshold=threshold).collect()))
+        assert got == [("a", "a"), ("c", "c")], threshold
 
 
 def test_connected_components_byte_guard(spark):

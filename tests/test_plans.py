@@ -143,22 +143,31 @@ def test_minhash_pairs_single_signature_pass(spark):
     relation) and two band-key explodes (one per join side), instead of the
     pre-r07 shape that planned the whole explode+md5+min tower once per
     side (2x the dominant md5 cost, visible as two SortAggregate towers in
-    plans/r07/dedup_minhash_pairs_before.txt)."""
+    plans/r07/dedup_minhash_pairs_before.txt). Both MinHash-LSH operators
+    — token shingles over documents and char shingles over entity
+    surfaces — share that shape."""
+    from pyspark.sql import functions as F
+
     from fonduer_spark.functions.dedup import minhash_lsh_pairs
+    from fonduer_spark.linking import similarity_edges
 
     import re
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = plan_of(minhash_lsh_pairs(docs, k=8, bands=4))
-    # both join sides scan the persisted signature frame
-    assert plan.count("InMemoryTableScan") >= 2
-    # DISTINCT Generate nodes: 2 band-key explodes (one per join side) + 1
-    # shingle explode inside the single cached signature tower (the cached
-    # tower prints under each side but its node ids are shared — one
-    # execution). Pre-r07 the tower was planned per side: 4 distinct.
-    gen_ids = set(re.findall(r"Generate \((\d+)\)", plan))
-    assert len(gen_ids) == 3, plan
-    assert "BroadcastHashJoin" in plan or "SortMergeJoin" in plan
+    forms = docs.select(F.substring("text", 1, 12).alias("surface"))
+    for df in (minhash_lsh_pairs(docs, k=8, bands=4),
+               similarity_edges(forms, k=8, bands=4)):
+        plan = plan_of(df)
+        # both join sides scan the persisted signature frame
+        assert plan.count("InMemoryTableScan") >= 2
+        # DISTINCT Generate nodes: 2 band-key explodes (one per join side)
+        # + 1 shingle explode inside the single cached signature tower (the
+        # cached tower prints under each side but its node ids are shared —
+        # one execution). Pre-r07 the tower was planned per side: 4.
+        gen_ids = set(re.findall(r"Generate \((\d+)\)", plan))
+        assert len(gen_ids) == 3, plan
+        assert "BroadcastHashJoin" in plan or "SortMergeJoin" in plan
+    spark.catalog.clearCache()
 
 
 def test_multi_relation_single_parse(spark):

@@ -547,22 +547,17 @@ def semantic_dedup(
 
     Returns (vec_id, cell, kept int 0/1) for every input row.
     """
-    from .similarity import (_coarse_centroids, dot, ivf_assignment_structs,
-                             norm)
+    from .similarity import (_coarse_centroids, _cosine, _vectors,
+                             ivf_assignment_structs)
 
     cents = _coarse_centroids(emb, dim, n_centroids, id_col, vec_col,
                               quantizer)
     structs = ivf_assignment_structs(F.col(vec_col), cents)
     # persisted: the in-cell self-join and the final kept-join otherwise
     # re-plan the centroid-assignment arithmetic (n_centroids 64-dim dots
-    # per vector) once per branch; norms ride along so the per-PAIR verify
-    # is one fold, not three (bit-identical — see cosine_topk)
-    asg = cached(emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("v"),
-        norm(F.col(vec_col)).alias("_n"),
-        F.least(*structs)["j"].alias("cell"),
-    ))
+    # per vector) once per branch; the norms ride along for _cosine
+    asg = cached(_vectors(emb, id_col, vec_col, "vec_id", "v", "_n",
+                          F.least(*structs)["j"].alias("cell")))
     lo = asg.select(F.col("vec_id").alias("a"), F.col("v").alias("va"),
                     F.col("_n").alias("_na"), "cell")
     hi = asg.select(F.col("vec_id").alias("b"), F.col("v").alias("vb"),
@@ -570,10 +565,7 @@ def semantic_dedup(
     dominated = (
         lo.join(hi, "cell")
         .where(F.col("a") < F.col("b"))
-        .where(
-            F.round(
-                dot(F.col("va"), F.col("vb"))
-                / (F.col("_na") * F.col("_nb")), 6) >= threshold)
+        .where(_cosine("va", "_na", "vb", "_nb") >= threshold)
         .select("b")
         .distinct()
         .withColumn("_dom", F.lit(1))

@@ -52,6 +52,57 @@ def cosine(a: Column, b: Column) -> Column:
 MAX_EXACT_QUERIES = 1024
 
 
+def _query_list(op: str, query_ids: Sequence[int],
+                max_queries: int) -> List[int]:
+    """The query ids of an exact (per-query full scan) operator, as a list;
+    more than ``max_queries`` of them raise."""
+    query_ids = list(query_ids)
+    if len(query_ids) > max_queries:
+        raise ValueError(
+            f"{op} got {len(query_ids)} query ids (> {max_queries}): the "
+            "exact path scans the whole corpus once per query, so a large "
+            "query set is a disguised all-pairs scan. Use lsh_bucketed_ann "
+            "(multiprobe for recall) for large query sets, or raise "
+            "max_queries explicitly if the corpus is small."
+        )
+    return query_ids
+
+
+def _vectors(emb: DataFrame, id_col: str, vec_col: str, ids: str,
+             vecs: str, norms: str, *extra) -> DataFrame:
+    """One side of a scored pair: (ids, vecs, norms, *extra), the norm
+    folded ONCE PER VECTOR in this projection rather than once per pair."""
+    return emb.select(F.col(id_col).alias(ids), F.col(vec_col).alias(vecs),
+                      norm(F.col(vec_col)).alias(norms), *extra)
+
+
+def _cosine(va: str, na: str, vb: str, nb: str) -> Column:
+    """The 6-digit cosine of two ``_vectors`` sides. dot/(na*nb) is the
+    same IEEE expression tree as cosine(va, vb) — same fold order, same
+    multiply order — so it is bit-identical to ``F.round(cosine(va, vb),
+    6)``, which the DuckDB oracles replay, at one fold per pair instead of
+    three (guide §1.2)."""
+    return F.round(dot(F.col(va), F.col(vb)) / (F.col(na) * F.col(nb)), 6)
+
+
+def _top_k(scored: DataFrame, k: int, by: str, score: str,
+           tie: str) -> DataFrame:
+    """The ``k`` best rows per ``by``: rank = row_number over (score desc,
+    tie asc), rows with rank <= k."""
+    w = Window.partitionBy(by).orderBy(F.col(score).desc(), F.col(tie).asc())
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k))
+
+
+def _cosine_top_k(cand: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, score, rank) of the candidate pairs of a
+    query side ``_vectors(.., "query_id", "qv", "_qn")`` and a corpus side
+    ``_vectors(.., "neighbor_id", "cv", "_cn")``."""
+    scored = cand.withColumn("score", _cosine("qv", "_qn", "cv", "_cn"))
+    return _top_k(scored, k, "query_id", "score", "neighbor_id").select(
+        "query_id", "neighbor_id", "score", "rank")
+
+
 def cosine_topk(
     emb: DataFrame,
     query_ids: Sequence[int],
@@ -70,45 +121,13 @@ def cosine_topk(
     query sets beyond ``max_queries`` raise with a pointer to the bucketed
     scale path (``lsh_bucketed_ann``, O(N / 2^planes) per query).
     """
-    query_ids = list(query_ids)
-    if len(query_ids) > max_queries:
-        raise ValueError(
-            f"cosine_topk got {len(query_ids)} query ids (> {max_queries}): "
-            "the exact path is a per-query full corpus scan. Use "
-            "lsh_bucketed_ann (multiprobe for recall) for large query sets, "
-            "or raise max_queries explicitly if the corpus is small."
-        )
-    # norms are computed ONCE PER ROW in each side's projection (not once
-    # per (query, neighbor) pair inside the nested loop): score =
-    # dot/(qn*cn) is the identical IEEE expression tree as cosine(qv, cv)
-    # — same fold order, same multiply order — so the rounded scores are
-    # bit-identical while per-pair work drops 3x (guide §1.2)
-    q = emb.where(F.col(id_col).isin(list(query_ids))).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        norm(F.col(vec_col)).alias("_qn"),
-    )
-    c = emb.select(F.col(id_col).alias("neighbor_id"),
-                   F.col(vec_col).alias("cv"),
-                   norm(F.col(vec_col)).alias("_cn"))
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "score",
-            F.round(
-                dot(F.col("qv"), F.col("cv")) / (F.col("_qn") * F.col("_cn")),
-                6,
-            ))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    query_ids = _query_list("cosine_topk", query_ids, max_queries)
+    q = _vectors(emb.where(F.col(id_col).isin(query_ids)), id_col, vec_col,
+                 "query_id", "qv", "_qn")
+    c = _vectors(emb, id_col, vec_col, "neighbor_id", "cv", "_cn")
+    return _cosine_top_k(
+        F.broadcast(q).crossJoin(c)
+        .where(F.col("query_id") != F.col("neighbor_id")), k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
@@ -256,44 +275,19 @@ def ivf_bucketed_ann(
     """
     cents = _coarse_centroids(emb, dim, n_centroids, id_col, vec_col,
                               quantizer)
-    v = F.col(vec_col)
-    structs = ivf_assignment_structs(v, cents)
-    arr = F.array(*structs)
+    structs = ivf_assignment_structs(F.col(vec_col), cents)
     bucketed = emb.withColumn("cell", F.least(*structs)["j"])
     probes = F.transform(
-        F.slice(F.array_sort(arr), 1, nprobe), lambda s: s["j"])
-    # per-row norm precompute (see cosine_topk): bit-identical scores,
-    # one 64-dim fold per probed pair instead of three
-    q = (
-        bucketed.where(F.col(id_col).isin(list(query_ids)))
-        .select(F.col(id_col).alias("query_id"), v.alias("qv"),
-                norm(v).alias("_qn"),
-                F.explode(probes).alias("cell"))
-    )
-    c = bucketed.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-        norm(F.col(vec_col)).alias("_cn"),
-        "cell",
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "score",
-            F.round(
-                dot(F.col("qv"), F.col("cv")) / (F.col("_qn") * F.col("_cn")),
-                6,
-            ))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+        F.slice(F.array_sort(F.array(*structs)), 1, nprobe),
+        lambda s: s["j"])
+    q = _vectors(bucketed.where(F.col(id_col).isin(list(query_ids))),
+                 id_col, vec_col, "query_id", "qv", "_qn",
+                 F.explode(probes).alias("cell"))
+    c = _vectors(bucketed, id_col, vec_col, "neighbor_id", "cv", "_cn",
+                 "cell")
+    return _cosine_top_k(
+        F.broadcast(q).join(c, "cell")
+        .where(F.col("query_id") != F.col("neighbor_id")), k)
 
 
 def lsh_bucketed_ann(
@@ -362,16 +356,11 @@ def lsh_bucketed_ann(
     bucketed = emb.withColumn(
         "buckets",
         F.array(*bcols) if bcols is not None else _buckets(F.col(vec_col)))
-    c_all = bucketed.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-        norm(F.col(vec_col)).alias("_cn"),
-        F.posexplode("buckets").alias("ct", "cb"),
-    )
-    q_all = bucketed.where(F.col(id_col).isin(list(query_ids))).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        norm(F.col(vec_col)).alias("_qn"),
-        F.posexplode("buckets").alias("qt", "qb"),
-    )
+    c_all = _vectors(bucketed, id_col, vec_col, "neighbor_id", "cv", "_cn",
+                     F.posexplode("buckets").alias("ct", "cb"))
+    q_all = _vectors(bucketed.where(F.col(id_col).isin(list(query_ids))),
+                     id_col, vec_col, "query_id", "qv", "_qn",
+                     F.posexplode("buckets").alias("qt", "qb"))
     if multiprobe >= 1:
         # probe set = own bucket + single-bit flips (distinct by
         # construction, so the join never duplicates a neighbor)
@@ -392,22 +381,7 @@ def lsh_bucketed_ann(
         # one table the multiprobe buckets are distinct by construction,
         # so single-table plans keep their shuffle-free candidate path)
         cand = cand.dropDuplicates(["query_id", "neighbor_id"])
-    # per-row norm precompute (see cosine_topk): bit-identical scores,
-    # one 64-dim fold per candidate pair instead of three
-    scored = cand.withColumn(
-        "score",
-        F.round(
-            dot(F.col("qv"), F.col("cv")) / (F.col("_qn") * F.col("_cn")),
-            6,
-        ))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return _cosine_top_k(cand, k)
 
 
 def ann_topk(
@@ -474,18 +448,11 @@ def _sign_lsh_cos_pairs(emb: DataFrame, dim: int, n_planes: int,
             for t in range(n_tables)
         ])).alias("bk"),
     ))
-    # norms precomputed ONCE PER VECTOR in the join-side projections (see
-    # cosine_topk): bit-identical cosines, one fold per pair instead of three
-    va = emb.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"),
-                    norm(F.col(vec_col)).alias("_na"))
-    vb = emb.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"),
-                    norm(F.col(vec_col)).alias("_nb"))
+    va = _vectors(emb, id_col, vec_col, "a", "va", "_na")
+    vb = _vectors(emb, id_col, vec_col, "b", "vb", "_nb")
     return (
         _bucket_pairs(keyed).join(va, "a").join(vb, "b")
-        .select("a", "b",
-                F.round(
-                    dot(F.col("va"), F.col("vb"))
-                    / (F.col("_na") * F.col("_nb")), 6).alias("cos"))
+        .select("a", "b", _cosine("va", "_na", "vb", "_nb").alias("cos"))
     )
 
 
@@ -523,11 +490,7 @@ def knn_graph(
         F.col("a").alias("src"), F.col("b").alias("dst"), "cos"
     ).unionByName(scored.select(
         F.col("b").alias("src"), F.col("a").alias("dst"), "cos"))
-    w = Window.partitionBy("src").orderBy(F.desc("cos"), F.asc("dst"))
-    return (
-        edges.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _top_k(edges, k, "src", "cos", "dst")
 
 
 def semantic_clusters(
@@ -634,14 +597,7 @@ def quantized_topk(
 
     Output: (query_id, neighbor_id, qscore, rank).
     """
-    query_ids = list(query_ids)
-    if len(query_ids) > max_queries:
-        raise ValueError(
-            f"quantized_topk got {len(query_ids)} query ids "
-            f"(> {max_queries}): a large query set is a disguised "
-            "all-pairs scan — use lsh_bucketed_ann, or raise max_queries "
-            "explicitly if the corpus is small."
-        )
+    query_ids = _query_list("quantized_topk", query_ids, max_queries)
     qz = int8_quantize(emb, id_col, vec_col)
     q = qz.where(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col("codes").alias("qc"),
@@ -659,11 +615,6 @@ def quantized_topk(
             qdot.cast("double")
             * (F.col("qm") / F.lit(127.0)) * (F.col("cm") / F.lit(127.0)))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("qscore").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id",
-                F.round("qscore", 6).alias("qscore"), "rank")
-    )
+    return _top_k(scored, k, "query_id", "qscore", "neighbor_id").select(
+        "query_id", "neighbor_id", F.round("qscore", 6).alias("qscore"),
+        "rank")

@@ -37,6 +37,34 @@ def _hash32(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
+def _bottom_k(hashes: DataFrame, group_col: str, k: int) -> DataFrame:
+    """(group_col, _h): the ``k`` smallest hashes per group of distinct
+    (group_col, _h) rows — one KMV sketch per group."""
+    w = Window.partitionBy(group_col).orderBy("_h")
+    return (
+        hashes.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= int(k))
+        .select(group_col, "_h")
+    )
+
+
+def _kmv_estimate(sketch: DataFrame, group_col: str, k: int, key: str,
+                  est: str) -> DataFrame:
+    """(key, est) per group of a bottom-k ``sketch``: the exact count below
+    k hashes, (k-1) * 2**32 div h_k at k."""
+    return (
+        sketch.groupBy(group_col)
+        .agg(F.count(F.lit(1)).alias("_n"), F.max("_h").alias("_hk"))
+        .select(
+            F.col(group_col).alias(key),
+            F.when(F.col("_n") < int(k), F.col("_n"))
+            .otherwise(F.expr(
+                f"{int(k - 1)} * {_SPACE}L div greatest(_hk, 1L)"))
+            .cast("long").alias(est),
+        )
+    )
+
+
 def kmv_distinct(
     df: DataFrame,
     col: str,
@@ -50,22 +78,8 @@ def kmv_distinct(
     """
     dh = df.select(
         F.col(group_col), _hash32(F.col(col)).alias("_h")).distinct()
-    w = Window.partitionBy(group_col).orderBy("_h")
-    topk = (
-        dh.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-    )
-    return (
-        topk.groupBy(group_col)
-        .agg(F.count(F.lit(1)).alias("_n"), F.max("_h").alias("_hk"))
-        .select(
-            group_col,
-            F.when(F.col("_n") < k, F.col("_n"))
-            .otherwise(F.expr(
-                f"{int(k - 1)} * {_SPACE}L div greatest(_hk, 1L)"))
-            .cast("long").alias("n_distinct_est"),
-        )
-    )
+    return _kmv_estimate(_bottom_k(dh, group_col, k), group_col, k,
+                         group_col, "n_distinct_est")
 
 
 def cms_sketch(

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from html import escape
 from html.parser import HTMLParser
-from typing import Iterator, List, Optional
+from typing import Dict, Iterator, List, Optional, Tuple
 
 # Elements that never have content per the HTML spec.
 VOID_ELEMENTS = frozenset(
@@ -64,6 +64,9 @@ class Element:
 
     def __len__(self) -> int:
         return len(self._children)
+
+    def __getitem__(self, i: int) -> "Element":
+        return self._children[i]
 
     def __reversed__(self) -> Iterator["Element"]:
         return reversed(self._children)
@@ -406,25 +409,44 @@ def tostring(root: Element) -> str:
     return "".join(out)
 
 
-def getpath(node: Element) -> str:
+ChildIndex = Dict[int, Tuple[Dict[int, Tuple[int, int]], Dict[str, int]]]
+
+
+def child_slot(node: Element, index: ChildIndex) -> Tuple[int, int, int]:
+    """(position, same-tag position, same-tag count) of ``node`` among its
+    parent's children, positions 1-based. ``index`` holds one child table
+    per parent (keyed by ``id(parent)``), built the first time a caller
+    asks about one of its children, so asking about every child of a
+    parent scans its children once, not once per child."""
+    parent = node._parent
+    got = index.get(id(parent))
+    if got is None:
+        slots: Dict[int, Tuple[int, int]] = {}
+        counts: Dict[str, int] = {}
+        for pos, c in enumerate(parent._children, 1):
+            counts[c.tag] = n = counts.get(c.tag, 0) + 1
+            slots[id(c)] = (pos, n)
+        got = index[id(parent)] = (slots, counts)
+    pos, n = got[0][id(node)]
+    return pos, n, got[1][node.tag]
+
+
+def getpath(node: Element, index: Optional[ChildIndex] = None) -> str:
     """lxml-style absolute xpath, e.g. ``/html/body/p[2]``.
 
     A positional predicate ``[n]`` (1-based) is emitted only when the element
     has at least one sibling with the same tag, matching
     ``lxml.etree.ElementTree.getpath`` (used at reference parser.py:510-513).
+    A parse that asks for many paths of one tree passes one ``index`` (see
+    ``child_slot``) to every call.
     """
+    if index is None:
+        index = {}
     parts: List[str] = []
-    cur: Optional[Element] = node
-    while cur is not None:
-        parent = cur._parent
-        if parent is None:
-            parts.append(f"/{cur.tag}")
-        else:
-            same = [c for c in parent._children if c.tag == cur.tag]
-            if len(same) > 1:
-                idx = same.index(cur) + 1
-                parts.append(f"/{cur.tag}[{idx}]")
-            else:
-                parts.append(f"/{cur.tag}")
-        cur = parent
+    cur = node
+    while cur._parent is not None:
+        _, n, same = child_slot(cur, index)
+        parts.append(f"/{cur.tag}[{n}]" if same > 1 else f"/{cur.tag}")
+        cur = cur._parent
+    parts.append(f"/{cur.tag}")
     return "".join(reversed(parts))

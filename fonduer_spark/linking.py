@@ -23,8 +23,8 @@ runs CC over integer ids for near_dup_keep and semantic_clusters.
 
 Caches follow cache.py: an operator whose result reads its caches leaves
 them to the caller's ``released()`` block; ``canonical_entities`` and
-``id_components``, which run CC eagerly, and ``pagerank``, whose rounds are
-checkpointed, release their own.
+``id_components``, which run CC eagerly, and ``pagerank`` and
+``bfs_distances``, whose rounds are checkpointed, release their own.
 """
 
 from __future__ import annotations
@@ -586,43 +586,24 @@ def neighborhood_kmv(
     dependence on hub degree (the reason ANF exists); one more
     round == one more hop. groupBy/window shuffles only; all arithmetic
     integer."""
-    from .functions.sketches import _SPACE, _hash32
-    from pyspark.sql import Window
+    from .functions.sketches import _bottom_k, _hash32, _kmv_estimate
 
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
     sym = cached(_symmetrize(edges))
     nh = sym.select(
         "src", _hash32(F.col("dst")).alias("_h")).distinct()
-    w = Window.partitionBy("src").orderBy("_h")
-    sk1 = cached(
-        nh.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= int(k))
-        .select("src", "_h")
-    )
+    sk1 = cached(_bottom_k(nh, "src", k))
     pulled = (
         sym.alias("e")
         .join(sk1.alias("m"), F.col("e.dst") == F.col("m.src"))
         .select(F.col("e.src").alias("src"), F.col("m._h").alias("_h"))
     )
-    merged = (
+    merged = _bottom_k(
         sk1.unionByName(pulled)
         .where(F.col("_h") != _hash32(F.col("src")))  # self excluded
-        .distinct()
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= int(k))
-    )
-    return (
-        merged.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("_n"), F.max("_h").alias("_hk"))
-        .select(
-            F.col("src").alias("node"),
-            F.when(F.col("_n") < int(k), F.col("_n"))
-            .otherwise(F.expr(
-                f"{int(k - 1)} * {_SPACE}L div greatest(_hk, 1L)"))
-            .cast("long").alias("n_2hop_est"),
-        )
-    )
+        .distinct(), "src", k)
+    return _kmv_estimate(merged, "src", k, "node", "n_2hop_est")
 
 
 def bfs_distances(
@@ -651,38 +632,32 @@ def bfs_distances(
     """
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
-    nodes = (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
-        .distinct()
-    )
-    dist = cached(nodes.where(F.col("node").isin(list(seeds))).select(
-        "node", F.lit(0).cast("int").alias("dist")))
-    frontier = dist.select("node")
-    fwd = edges.select(F.col(src).alias("node"), F.col(dst).alias("_to"))
-    for h in range(1, int(max_hops) + 1):
-        nxt = (
-            frontier.join(fwd, "node")
-            .select(F.col("_to").alias("node"))
+    with released():
+        # every round reads the edge projection; each round's state is
+        # checkpointed, so the result reads no cache and the block
+        # releases the edges on return
+        fwd = cached(edges.select(F.col(src).alias("node"),
+                                  F.col(dst).alias("_to")))
+        nodes = (
+            fwd.select("node")
+            .unionByName(fwd.select(F.col("_to").alias("node")))
             .distinct()
-            .join(dist, "node", "left_anti")
-            .select("node", F.lit(h).cast("int").alias("dist"))
         )
-        nxt = cached(nxt)
-        if nxt.isEmpty():
-            nxt.unpersist()
-            break
-        # Per-round cleanup (ADVICE r6): materialize the new cumulative
-        # frame while its parents are still cached, then release them —
-        # at most two cached frames outlive any round instead of
-        # ~2*max_hops. The next frontier reads the materialized union
-        # (dist == h rows are exactly nxt), never the released parents.
-        new_dist = cached(dist.unionByName(nxt))
-        new_dist.count()
-        dist.unpersist()
-        nxt.unpersist()
-        dist = new_dist
-        frontier = dist.where(F.col("dist") == h).select("node")
+        dist = nodes.where(F.col("node").isin(list(seeds))).select(
+            "node", F.lit(0).cast("int").alias("dist")).localCheckpoint()
+        frontier = dist
+        for h in range(1, int(max_hops) + 1):
+            frontier = (
+                frontier.join(fwd, "node")
+                .select(F.col("_to").alias("node"))
+                .distinct()
+                .join(dist, "node", "left_anti")
+                .select("node", F.lit(h).cast("int").alias("dist"))
+                .localCheckpoint()
+            )
+            if frontier.isEmpty():
+                break
+            dist = dist.unionByName(frontier).localCheckpoint()
     return dist
 
 

@@ -42,7 +42,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from .htmldom import Element, getpath, parse_html, strip_tags, tostring
+from .htmldom import (ChildIndex, Element, child_slot, getpath, parse_html,
+                      strip_tags, tostring)
 from .lingual import LingualParser, SimpleParser
 
 log = logging.getLogger(__name__)
@@ -403,6 +404,9 @@ def parse_document(
                 out[k].append(st["arrays"][k][hit] if hit is not None else -1)
         return out
 
+    # one child table per parent, read by getpath and the sibling attrs
+    children: ChildIndex = {}
+
     def sibling_ancestor_attrs(context_node: Element) -> Tuple:
         """(prev_sib_tag, next_sib_tag, node_pos, ancestor_classes,
         ancestor_ids) — the sibling/ancestor context behind the reference's
@@ -413,14 +417,11 @@ def parse_document(
         pos = None
         par = context_node.getparent()
         if par is not None:
-            sibs = par.getchildren()
-            idx = next(
-                i for i, c in enumerate(sibs) if c is context_node)
-            pos = idx + 1
-            if idx > 0:
-                prev_tag = sibs[idx - 1].tag
-            if idx < len(sibs) - 1:
-                next_tag = sibs[idx + 1].tag
+            pos = child_slot(context_node, children)[0]
+            if pos > 1:
+                prev_tag = par[pos - 2].tag
+            if pos < len(par):
+                next_tag = par[pos].tag
         anc_classes: List[str] = []
         anc_ids: List[str] = []
         a = context_node.getparent()
@@ -437,7 +438,7 @@ def parse_document(
         return (prev_tag, next_tag, pos, anc_classes, anc_ids)
 
     def structural_attrs(context_node: Element) -> Tuple[str, str, List[str]]:
-        xpath = getpath(context_node)
+        xpath = getpath(context_node, children)
         html_tag = context_node.tag
         # bookkeeping + hOCR-accumulated visual attrs are not structural
         # signal (the reference clears them too, hocr_visual_parser.py:75-90)

@@ -100,8 +100,6 @@ OPERATORS = {
         _edges(spark)),
     "neighborhood_kmv": lambda spark, docs, emb: lk.neighborhood_kmv(
         _edges(spark), k=4),
-    "bfs_distances": lambda spark, docs, emb: lk.bfs_distances(
-        _edges(spark).toDF("src", "dst"), ["a"], max_hops=3),
     "link_prediction_scores": lambda spark, docs, emb:
         lk.link_prediction_scores(_edges(spark), min_common=1),
 }
@@ -117,8 +115,9 @@ def test_block_releases_every_operator_cache(spark, docs, emb, name):
 
 def test_self_releasing_operators_leave_nothing_cached(spark, docs, emb):
     """near_dup_keep, semantic_clusters and canonical_entities run connected
-    components eagerly and pagerank checkpoints its rounds, so their
-    results read no cache: they release their own with no block open."""
+    components eagerly and pagerank and bfs_distances checkpoint their
+    rounds, so their results read no cache: they release their own with no
+    block open."""
     assert dd.near_dup_keep(docs).collect()
     assert _cache_empty(spark)
     assert lk.canonical_entities(_mentions(spark), 0.5).collect()
@@ -128,6 +127,27 @@ def test_self_releasing_operators_leave_nothing_cached(spark, docs, emb):
     edges = spark.createDataFrame(GRAPH, "src string, dst string")
     assert lk.pagerank(edges, iters=2).collect()
     assert _cache_empty(spark)
+    assert sorted(map(tuple, lk.bfs_distances(
+        edges, ["a"], max_hops=3).collect())) == [
+        ("a", 0), ("b", 1), ("c", 1), ("d", 2), ("e", 3)]
+    assert _cache_empty(spark)
+
+
+def test_only_cache_py_persists():
+    """``cached`` is the library's only persist and ``released`` its only
+    unpersist: any other call site can drop a plan the caller cached."""
+    root = os.path.join(os.path.dirname(__file__), "..", "fonduer_spark")
+    hits = []
+    for d, _, files in os.walk(root):
+        for f in files:
+            path = os.path.join(d, f)
+            if not f.endswith(".py") or os.path.samefile(
+                    path, os.path.join(root, "cache.py")):
+                continue
+            with open(path) as fh:
+                hits += [f"{f}:{i}" for i, line in enumerate(fh, 1)
+                         if ".persist(" in line or ".unpersist(" in line]
+    assert hits == []
 
 
 def test_block_never_releases_the_callers_cache(spark, docs):

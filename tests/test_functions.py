@@ -360,6 +360,28 @@ def test_cosine_topk_guard_large_query_set(spark, emb):
     assert out.count() == 2
 
 
+def test_cosine_of_vector_sides_is_the_rounded_cosine(spark):
+    """_cosine over two _vectors sides (each norm folded once per vector)
+    equals F.round(cosine(a, b), 6) bit for bit on every ordered pair of
+    the sf0.01 embeddings — the claim that lets the DuckDB oracles replay
+    the scores of every operator that ranks by _cosine."""
+    import os
+
+    from test_fused_kernel import SF  # sf0.001; sf0.01 sits beside it
+
+    emb = spark.read.parquet(
+        os.path.join(os.path.dirname(SF), "sf0.01", "embeddings.parquet"))
+    a = sim._vectors(emb, "vec_id", "embedding", "a", "va", "_na")
+    b = sim._vectors(emb, "vec_id", "embedding", "b", "vb", "_nb")
+    got = a.crossJoin(b).select(
+        sim._cosine("va", "_na", "vb", "_nb").alias("x"),
+        F.round(sim.cosine(F.col("va"), F.col("vb")), 6).alias("y"),
+    ).toPandas()
+    assert len(got) == 500 * 500
+    assert np.array_equal(got["x"].to_numpy().view(np.int64),
+                          got["y"].to_numpy().view(np.int64))
+
+
 def test_ivf_ann_subset_of_brute_with_recall(spark, emb):
     """IVF-bucketed ANN returns exact cosines for the candidates it probes
     (identical rounded scores to brute force on shared pairs), respects the

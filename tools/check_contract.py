@@ -2,7 +2,13 @@
 on Spark and its oracle_sql() on DuckDB over the same sf dir; compare row
 counts, column names, and order-insensitive values.
 
-Usage: python tools/check_contract.py [sf_dir] [query ...]
+Usage: python tools/check_contract.py [--plans DIR] [sf_dir] [query ...]
+
+``--plans DIR`` also writes each checked query's formatted physical plan,
+taken before the query runs, to ``DIR/<query>.txt`` with expression ids
+(``#123``), exchange ids (``plan_id=123``) and lambda-variable counters
+(``x_123``) stripped, so the plans of two checkouts that ran the same
+queries can be compared with ``diff -r``.
 
 The session runs on local[$SPARK_GRAFT_CPUS] (every CPU this process may
 use when unset) with the test suite's 8g driver, so a full run fits a
@@ -13,6 +19,7 @@ from __future__ import annotations
 
 import math
 import os
+import re
 import sys
 
 import duckdb
@@ -37,7 +44,22 @@ def norm_rows(cols, rows):
     return sorted(tuple(norm_cell(r[i]) for i in order) for r in rows)
 
 
+def plan_text(df) -> str:
+    """The formatted physical plan of ``df`` (before execution, so the
+    adaptive plan is the initial one) without expression ids, exchange ids
+    or lambda-variable counters: all three count up across a session."""
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+    plan = re.sub(r"#\d+|plan_id=\d+", "", plan)
+    return re.sub(r"(lambda \w+?)_\d+\b", r"\1", plan)
+
+
 def main() -> int:
+    plans_dir = None
+    if sys.argv[1:2] == ["--plans"]:
+        plans_dir = sys.argv.pop(2)
+        del sys.argv[1]
+        os.makedirs(plans_dir, exist_ok=True)
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
@@ -64,6 +86,10 @@ def main() -> int:
             # once its rows are collected
             with released():
                 df = q(spark, sf_dir)
+                if plans_dir:
+                    with open(os.path.join(plans_dir, f"{name}.txt"),
+                              "w") as f:
+                        f.write(plan_text(df))
                 cols = df.columns
                 rows = [tuple(r) for r in df.collect()]
         except Exception as e:  # noqa: BLE001

@@ -150,6 +150,24 @@ def test_only_cache_py_persists():
     assert hits == []
 
 
+def test_bfs_distances_caches_nothing_in_the_callers_block(spark):
+    """bfs_distances opens its own block and checkpoints its rounds: inside
+    the caller's block it leaves nothing cached, and it keeps the caller's
+    cache of its input edges."""
+    want = [("a", 0), ("b", 1), ("c", 1), ("d", 2), ("e", 3)]
+    with released():
+        edges = _edges(spark).toDF("src", "dst")
+        assert sorted(map(tuple, lk.bfs_distances(
+            edges, ["a"], max_hops=3).collect())) == want
+        assert _cache_empty(spark)
+        mine = cached(edges)
+        mine.count()
+        assert sorted(map(tuple, lk.bfs_distances(
+            mine, ["a"], max_hops=3).collect())) == want
+        assert mine.storageLevel != StorageLevel.NONE
+    assert _cache_empty(spark)
+
+
 def test_block_never_releases_the_callers_cache(spark, docs):
     """Spark matches cached frames by plan: near_dup_keep re-derives the
     verified pairs with the plan the caller cached, and must leave that
